@@ -1,7 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import ocrspark.bench.Measure
+import ocrspark.bench.Measure.{force, median, timed}
 
 /** Driver-run benchmark: one JSON line with per-query seconds plus
   * extraction throughput (docs/sec) — BENCH_r{N}.json vs BASELINE.md.
@@ -12,11 +14,12 @@ import org.apache.spark.sql.functions._
   * cost is reported separately as `synth_pages` and excluded from
   * throughput.
   *
-  * Methodology (hardened round 3): every timed query gets one full
-  * warm-up pass (C2 JIT of the kernels, plan/codegen cache), then a GC,
-  * then THREE timed reps; the reported number is the MEDIAN and the
-  * JSON carries all reps (`"reps"`) so spread is visible. Round 2's
-  * single timed pass let one noisy host window record a phantom 2.3×
+  * Methodology (hardened round 3): every timed query runs under
+  * [[Measure.reps]] — one full warm-up pass (C2 JIT of the kernels,
+  * plan/codegen cache), then THREE timed reps with a GC before each;
+  * the reported number is the MEDIAN and the JSON carries all reps
+  * (`"reps"`) so spread is visible. Round 2's single timed pass let
+  * one noisy host window record a phantom 2.3×
   * regression (BENCH_r02 e2e 4.71 s vs 1.76 s on re-run); the median
   * of 3 cannot be poisoned by one bad window.
   *
@@ -88,10 +91,11 @@ object Bench {
     * the primary. */
   // lazy: references ScanFloorQuietSec, declared below — a strict val
   // here would read 0.0 during object init
-  // Re-pinned (round 5, final) from a clean window under the forceCols
-  // protocol: the earlier refs were measured with bare count() actions,
-  // under which Catalyst pruned much of t1/j2/j3/s2's actual compute —
-  // those queries' true clean-window cost is 1.3-2× the pruned figure.
+  // Re-pinned (round 5, final) from a clean window under the forcing
+  // aggregate (Measure.force): the earlier refs were measured with bare
+  // count() actions, under which Catalyst pruned much of t1/j2/j3/s2's
+  // actual compute — those queries' true clean-window cost is 1.3-2×
+  // the pruned figure.
   lazy val QueryRefs: Map[String, Double] = Map(
     "e2e_extract" -> 1.25, "p5_routing" -> 0.30,
     "scan_floor" -> ScanFloorQuietSec, // same baseline as the tripwire
@@ -211,40 +215,16 @@ object Bench {
     (System.nanoTime() - t0) / 1e9
   }
 
-  def timed(f: => Long): (Double, Long) = {
-    val t0 = System.nanoTime()
-    val n = f
-    ((System.nanoTime() - t0) / 1e9, n)
-  }
-
-  def median(xs: Seq[Double]): Double = {
-    val s = xs.sorted
-    if (s.isEmpty) 0.0
-    else if (s.length % 2 == 1) s(s.length / 2)
-    else (s(s.length / 2 - 1) + s(s.length / 2)) / 2.0
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", TimedReps.toString).toInt
-    val maxNoiseRetries = sys.env.getOrElse("SPARK_GRAFT_NOISE_RETRIES",
-      MaxNoiseRetries.toString).toInt
 
     // canary warm-up (JIT the loops + allocate the memory buffers), then
     // the pre-suite measurements; a noisy window gets bounded
     // sleep-and-retry before any timing
     canarySeconds(iters = CanaryIters / 20)
     memCanarySeconds(passes = 2)
-    if (sys.env.contains("SPARK_GRAFT_CANARY_ONLY")) {
-      val cs = (1 to 7).map(_ => canarySeconds())
-      val ms = (1 to 7).map(_ => memCanarySeconds())
-      println(cs.map(c => f"$c%.3f").mkString("cpu reps=[", ",", "]") +
-        f" median=${median(cs)}%.3f noise=${median(cs) / CanaryQuietSec}%.2f")
-      println(ms.map(c => f"$c%.3f").mkString("mem reps=[", ",", "]") +
-        f" median=${median(ms)}%.3f noise=${median(ms) / MemCanaryQuietSec}%.2f")
-      return
-    }
     // the canary references are calibrated for the canonical 32-core
     // host: on a weaker box the fixed 32-thread workloads are slower on
     // a PERFECTLY quiet host, so retrying and flagging there would
@@ -258,80 +238,44 @@ object Bench {
       math.max(canaryPre / CanaryQuietSec, memPre / MemCanaryQuietSec)
     var noiseRetries = 0
     while (canonicalHost && preNoise > NoiseThreshold &&
-           noiseRetries < maxNoiseRetries) {
+           noiseRetries < MaxNoiseRetries) {
       System.err.println(
         f"[bench] noisy window (cpu ${canaryPre / CanaryQuietSec}%.2fx / " +
           f"mem ${memPre / MemCanaryQuietSec}%.2fx quiet) — sleeping 15s " +
-          f"(retry ${noiseRetries + 1}/$maxNoiseRetries)")
+          f"(retry ${noiseRetries + 1}/$MaxNoiseRetries)")
       Thread.sleep(15000)
       canaryPre = canaryMeasure()
       memPre = memCanaryMeasure()
       noiseRetries += 1
     }
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", (cpus.toInt * 2).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", sys.env.getOrElse("SPARK_DRIVER_MEM", "8g"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Measure.session(cpus.toInt)
 
     val results = scala.collection.mutable.LinkedHashMap[String, Double]()
     val allReps = scala.collection.mutable.LinkedHashMap[String, Seq[Double]]()
 
-    // uniform protocol: one full warm-up pass (JIT + plan/codegen
-    // cache), GC, then `reps` timed passes → median. Returns the count
-    // from the last rep.
-    // GC before EVERY timed rep, not just after warm-up: the UDF-heavy
-    // queries (p5, e2e) allocate GBs of short-lived strings per pass, so
-    // without this rep k pays rep k-1's collection debt — p5's reps read
-    // 0.29/0.57/0.95 in one otherwise-clean round-5 window.
+    // records a query's reps and median; returns the last rep's count
     def warmTimed(name: String)(f: => Long): Long = {
-      f
-      var n = 0L
-      val times = (1 to reps).map { _ =>
-        System.gc()
-        val (s, nn) = timed(f)
-        n = nn
-        s
-      }
-      results += (name -> median(times))
-      allReps += (name -> times)
-      n
+      val r = Measure.reps(reps)(f)
+      results += (name -> r.median)
+      allReps += (name -> r.seconds)
+      r.rows
     }
 
     // materialize the pages table once (read-side benches then measure
     // columnar-scan + compute, not generator cost)
     val replicate = sys.env.getOrElse("SPARK_GRAFT_REPLICATE", "16").toInt
+    var pagesPath = ""
     val (synthSec, _) = timed {
-      ocrspark.job.Synth.ensurePages(spark, sfDir, replicate = replicate); 0L
+      pagesPath = ocrspark.job.Synth.ensurePages(spark, sfDir, replicate = replicate); 0L
     }
     results += ("synth_pages" -> synthSec)
-    val pagesPath = ocrspark.job.Synth.ensurePages(spark, sfDir, replicate = replicate)
     val pages = spark.read.parquet(pagesPath)
 
-    // forceAll: hash result columns so Catalyst cannot prune the
-    // extraction UDF under count().
-    def forceAll(df: DataFrame): Long =
-      df.agg(sum(pmod(xxhash64(col("text"), col("method"), col("confidence")), lit(1000000007L))).as("h"),
-        count(lit(1)).as("n")).collect()(0).getAs[Long]("n")
-
-    // forceCols: the same anti-pruning hash over EVERY output column.
-    // A bare count() lets ColumnPruning drop deterministic projections
-    // (and EliminateSorts the orderBy) — t1's text-stat kernels, q1's
-    // aggregate values, j2's picked columns were all being optimized
-    // OUT of their own benchmark, so a kernel regression could never
-    // trip its tripwire. Hashing all columns forces full evaluation.
-    def forceCols(df: DataFrame): Long =
-      df.agg(sum(pmod(xxhash64(df.columns.map(col).toIndexedSeq: _*),
-          lit(1000000007L))).as("h"),
-        count(lit(1)).as("n")).collect()(0).getAs[Long]("n")
-
+    // e2e hashes text/method/confidence: xxhash64 rejects the `fields`
+    // map. Every other query hashes all of its output columns.
     val nDocs = warmTimed("e2e_extract") {
-      forceAll(ocrspark.job.ExtractJob.run(pages))
+      force(ocrspark.job.ExtractJob.run(pages), "text", "method", "confidence")
     }
 
     // sustained throughput: 3 back-to-back passes timed as ONE block,
@@ -343,35 +287,29 @@ object Bench {
     System.gc()
     val sustainedPasses = 3
     val (sustainedTotal, _) = timed {
-      var i = 0
-      while (i < sustainedPasses) {
-        forceAll(ocrspark.job.ExtractJob.run(pages)); i += 1
+      (1 to sustainedPasses).foreach { _ =>
+        force(ocrspark.job.ExtractJob.run(pages), "text", "method", "confidence")
       }
       0L
     }
     val sustainedSec = sustainedTotal / sustainedPasses
 
     warmTimed("p5_routing") {
-      ocrspark.job.ExtractJob.analyzeOnly(pages)
-        .agg(sum(pmod(xxhash64(col("route"), col("text_length")), lit(1000000007L))).as("h"),
-          count(lit(1)).as("n")).collect()
-      0L
+      force(ocrspark.job.ExtractJob.analyzeOnly(pages), "route", "text_length")
     }
 
     // pure columnar-scan floor for the same payload column: any query
     // that must read `html` cannot beat this — contextualizes p5 (its
     // compute is analyze-kernel + this scan).
     warmTimed("scan_floor") {
-      pages.agg(sum(pmod(xxhash64(octet_length(col("html"))), lit(1000000007L))).as("h"),
-        count(lit(1)).as("n")).collect()
-      0L
+      force(pages.select(octet_length(col("html")).as("html_len")))
     }
 
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     docs.cache().count()
 
     warmTimed("t1_text_stats") {
-      forceCols(SparkEntry.queries("t1_text_stats")(spark, sfDir))
+      force(SparkEntry.queries("t1_text_stats")(spark, sfDir))
     }
 
     // loan-pattern dedup run: sketches persisted for the double scan,
@@ -384,33 +322,13 @@ object Bench {
         "doc_id", "text", 0.7)(_.count())
     }
 
-    if (sys.env.contains("SPARK_GRAFT_D2_BREAKDOWN")) {
-      val corpus = ocrspark.ops.DedupCorpus.withPlantedDups(
-        docs.select(col("doc_id"), col("text"), col("lang")))
-      val (a, na) = timed { corpus.count() }
-      val (b, _) = timed {
-        corpus.select(ocrspark.ops.Dedup.minhash(col("text")).as("mh"))
-          .agg(count(lit(1))).collect(); 0L
-      }
-      val (c, nc) = timed {
-        ocrspark.ops.Dedup.minhashPairsCompute(corpus, "doc_id", "text", 0.7)(_.count())
-      }
-      val wm = ocrspark.ops.Dedup.minhashSketches(corpus, "doc_id", "text")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val (d, _) = timed { wm.count() }
-      val (e, _) = timed { ocrspark.ops.Dedup.minhashCandidates(wm).count() }
-      wm.unpersist(blocking = true)
-      System.err.println(
-        f"[d2] corpus=$a%.2fs ($na docs) sketch=$b%.2fs full=$c%.2fs ($nc pairs) persist=$d%.2fs cand=$e%.2fs")
-    }
-
     warmTimed("s2_cosine_topk") {
-      forceCols(SparkEntry.queries("s2_cosine_topk")(spark, sfDir))
+      force(SparkEntry.queries("s2_cosine_topk")(spark, sfDir))
     }
 
     Seq("q1_agg", "j1_join_agg", "a1_gated_avg", "w1_first_k",
       "t4_token_histogram", "j2_asof_join", "j3_range_context").foreach { q =>
-      warmTimed(q) { forceCols(SparkEntry.queries(q)(spark, sfDir)) }
+      warmTimed(q) { force(SparkEntry.queries(q)(spark, sfDir)) }
     }
 
     // post-suite canaries: contamination arriving MID-suite is caught by

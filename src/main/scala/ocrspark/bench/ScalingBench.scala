@@ -1,23 +1,22 @@
 package ocrspark.bench
 
+import java.lang.management.ManagementFactory
 import java.nio.file.{Files, Paths}
-
-import org.apache.spark.sql.SparkSession
 
 /** Two-cluster-size scaling evidence (north rule: throughput scaling
   * efficiency ≥ 0.8 between N and 4N executors). The sandbox has no
-  * real cluster, so the same job runs at local[8] and local[32] on the
-  * SAME materialized input — the documented stand-in (BASELINE.md).
-  * Median of timed runs after a warm-up; writes BENCH/last_scaling.md (BASELINE.md is hand-curated).
+  * real cluster, so the same job runs at local[lo] and local[hi] on the
+  * SAME materialized input — the documented stand-in (BASELINE.md) —
+  * with hi = nproc and lo = max(1, nproc / 4). Timed reps follow
+  * [[Measure]]; writes BENCH/last_scaling.md (BASELINE.md is
+  * hand-curated).
   */
 object ScalingBench {
 
-  case class Result(cores: Int, medianSec: Double, minSec: Double, docs: Long) {
-    /** Throughput from the MIN of the timed reps: the least
-      * noise-contaminated estimate of sustained capability (GC debt and
-      * OS jitter only ever ADD time); median also reported. */
-    def docsPerSec: Double = docs / minSec
-  }
+  /** Throughput from the MIN of the timed reps: the least
+    * noise-contaminated estimate of sustained capability (GC debt and
+    * OS jitter only ever ADD time); median also reported. */
+  def docsPerSec(r: Measure.Reps): Double = r.rows / r.min
 
   /** Hardware scaling ceiling: the same fixed pure-arithmetic workload
     * at lo vs hi threads. On shared/virtualized hosts, frequency scaling
@@ -26,61 +25,53 @@ object ScalingBench {
     * looks like on THIS box so the pipeline's number can be read against
     * it. */
   def cpuCeiling(lo: Int, hi: Int): (Double, Double, Double) = {
-    @volatile var sink = 0L
-    def burn(threads: Int): Double = {
-      val chunks = 256
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
-      val t0 = System.nanoTime()
-      val futs = (0 until chunks).map { c =>
-        pool.submit(new Runnable {
-          def run(): Unit = {
-            var x = c.toLong
-            var i = 0
-            while (i < 20000000) { x += i * x + i; i += 1 }
-            sink = x
-          }
-        })
-      }
-      futs.foreach(_.get())
-      pool.shutdown()
-      (System.nanoTime() - t0) / 1e9
-    }
+    // Bench's CPU canary loop; the same total steps split over the threads
+    val steps = graft.Bench.CanaryIters / 2 * hi
+    def burn(threads: Int): Double =
+      graft.Bench.canarySeconds(threads, steps / threads)
     burn(hi) // JIT warm-up
     val tLo = math.min(burn(lo), burn(lo))
     val tHi = math.min(burn(hi), burn(hi))
     (tLo, tHi, (tLo / tHi) / (hi.toDouble / lo))
   }
 
-  private val addOpens = Seq(
-    "java.base/java.lang", "java.base/java.lang.invoke",
-    "java.base/java.lang.reflect", "java.base/java.io",
-    "java.base/java.net", "java.base/java.nio",
-    "java.base/java.util", "java.base/java.util.concurrent",
-    "java.base/java.util.concurrent.atomic",
-    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-    "java.base/sun.security.action", "java.base/sun.util.calendar")
+  /** Seconds a shard JVM gets to start Spark before its budget counts. */
+  val ShardStartupSec = 20.0
+
+  /** Per-shard heap in MiB: the shards together take at most a quarter
+    * of physical memory (MemTotal; the parent bench JVM and the OS keep
+    * the rest), and no shard more than 8g. */
+  def shardHeapMb(nShards: Int): Long = {
+    val totalMb = ManagementFactory.getOperatingSystemMXBean
+      .asInstanceOf[com.sun.management.OperatingSystemMXBean]
+      .getTotalMemorySize >> 20
+    math.min(8192L, totalMb / 4 / nShards)
+  }
 
   /** Multi-executor simulation: `nShards` SEPARATE JVMs (own heap, own
     * GC — the real spark-submit deployment unit is a 4-8 core executor
     * JVM, not one 32-thread JVM), each extracting its bucket-shard of
-    * the corpus concurrently at `cores` threads. Returns the slowest
-    * shard's timed seconds (shards run concurrently; per-shard timing
-    * excludes JVM startup + warm-up, same protocol as [[runAt]]). */
+    * the corpus concurrently at `cores` threads. Every shard times reps
+    * until one shared deadline, [[ShardStartupSec]] + `budgetSec` from
+    * launch, and counts only reps that finished before it — so every
+    * counted rep ran while all shards were still running. Returns the
+    * slowest shard's min-of-reps seconds. */
   def multiJvmRun(pagesPath: String, nShards: Int, cores: Int,
-                  reps: Int = 3, minWallSec: Double = 10.0): Double = {
-    val javaBin = java.nio.file.Paths.get(
-      System.getProperty("java.home"), "bin", "java").toString
+                  budgetSec: Double): Double = {
+    val javaBin = Paths.get(System.getProperty("java.home"), "bin", "java").toString
     val cp = System.getProperty("java.class.path")
-    val opts = addOpens.flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED")) ++
-      // 4g young gen: the extraction kernels allocate GBs of short-lived
-      // strings per pass, so a small nursery forces minor-GC pauses into
-      // the timed reps (measured ~5% shard-time cost at -Xmn2g); 8g cap
-      // keeps 4 concurrent shards ≤32g committed
-      Seq("-Xmx8g", "-XX:+UseParallelGC", "-Xmn4g",
+    val heapMb = shardHeapMb(nShards)
+    // the parent's own --add-opens (Spark on JDK 17 needs them)
+    val addOpens = ManagementFactory.getRuntimeMXBean.getInputArguments
+      .toArray(Array.empty[String]).filter(_.startsWith("--add-opens")).toSeq
+    val opts = addOpens ++
+      // half the heap as young gen: the extraction kernels allocate GBs
+      // of short-lived strings per pass, so a small nursery forces
+      // minor-GC pauses into the timed reps
+      Seq(s"-Xmx${heapMb}m", "-XX:+UseParallelGC", s"-Xmn${heapMb / 2}m",
         // an executor JVM owns `cores` CPUs: size its GC + JIT pools
         // accordingly or 4 shards × 32 default GC threads thrash
-        s"-XX:ParallelGCThreads=$cores", s"-XX:CICompilerCount=2",
-        "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC")
+        s"-XX:ParallelGCThreads=$cores", s"-XX:CICompilerCount=2")
     // LPT file→shard assignment (largest file to least-loaded shard):
     // a static round-robin split leaves one shard with the expensive
     // url-range (zipfian hosts → uneven per-file extraction cost) and
@@ -99,146 +90,89 @@ object ScalingBench {
       shardLoads(tgt) += f.length()
       assignment(tgt) += f.getAbsolutePath
     }
+    val deadlineMs = System.currentTimeMillis() +
+      ((ShardStartupSec + budgetSec) * 1000).toLong
     val procs = (0 until nShards).map { i =>
       val out = java.io.File.createTempFile(s"shard$i-", ".out")
       val shardFiles = assignment(i).result()
       val pb = new ProcessBuilder(
         (Seq(javaBin) ++ opts ++ Seq("-cp", cp, "ocrspark.bench.ShardMain",
-          i.toString, cores.toString, reps.toString, minWallSec.toString,
+          i.toString, cores.toString, deadlineMs.toString,
           shardFiles.mkString(","))): _*)
       pb.redirectErrorStream(true)
       pb.redirectOutput(out)
       (pb.start(), out)
     }
     procs.foreach(_._1.waitFor())
-    val times = procs.map { case (_, out) =>
-      val lines = new String(java.nio.file.Files.readAllBytes(out.toPath))
-      lines.linesIterator.find(_.startsWith("SHARD"))
-        .map(_.split(" ")(3).toDouble)
+    val shards = procs.map { case (_, out) =>
+      val lines = new String(Files.readAllBytes(out.toPath))
+      lines.linesIterator.find(_.startsWith("SHARD")).map(_.split(" "))
         .getOrElse(throw new IllegalStateException(s"no SHARD line in $out:\n$lines"))
     }
-    System.err.println(s"[scaling] multi-jvm shard times: ${times.map(t => f"$t%.2f").mkString(", ")}")
-    times.max
+    System.err.println("[scaling] multi-jvm shard min s (counted reps): " +
+      shards.map(f => s"${f(3)} (${f(4)})").mkString(", "))
+    shards.map(_(3).toDouble).max
   }
 
-  private def sessionFor(cores: Int): SparkSession = {
-    // a fresh context per parallelism level
-    SparkSession.getActiveSession.foreach(_.stop())
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    SparkSession.builder()
-      .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", (cores * 2).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-  }
-
-  def runAt(cores: Int, pagesPath: String, reps: Int): Result = {
-    val spark = sessionFor(cores)
-    spark.sparkContext.setLogLevel("WARN")
+  def runAt(cores: Int, pagesPath: String, reps: Int): Measure.Reps = {
+    val spark = Measure.session(cores)
     val pages = spark.read.parquet(pagesPath)
-    // Force FULL materialization of the extraction output: a bare
-    // count() would let Catalyst prune the extract UDF projection away
-    // and time only the scan. Hashing text+method+confidence defeats
-    // pruning while keeping the driver-side result one row.
-    def runOnce(df: org.apache.spark.sql.DataFrame): Long = {
-      val r = ocrspark.job.ExtractJob.run(df)
-      .agg(org.apache.spark.sql.functions.sum(
-          org.apache.spark.sql.functions.pmod(
-            org.apache.spark.sql.functions.xxhash64(
-              org.apache.spark.sql.functions.col("text"),
-              org.apache.spark.sql.functions.col("method"),
-              org.apache.spark.sql.functions.col("confidence")),
-            org.apache.spark.sql.functions.lit(1000000007L))).as("h"),
-        org.apache.spark.sql.functions.count(
-          org.apache.spark.sql.functions.lit(1)).as("n"))
-        .collect()(0)
-      r.getAs[Long]("n")
+    // e2e hashes text/method/confidence: xxhash64 rejects the `fields` map
+    val r = Measure.reps(reps) {
+      Measure.force(ocrspark.job.ExtractJob.run(pages), "text", "method", "confidence")
     }
-    // warm-up: one FULL pass (JIT/C2, codegen, parquet footer + page
-    // cache), then collect GC debt before timing
-    runOnce(pages)
-    System.gc()
-    var docs = 0L
-    val times = (1 to reps).map { r =>
-      val t0 = System.nanoTime()
-      docs = runOnce(pages)
-      val sec = (System.nanoTime() - t0) / 1e9
-      System.err.println(f"[scaling] local[$cores] rep$r: $sec%.2f s")
-      System.gc() // pay GC debt outside the next rep's timing
-      sec
-    }.sorted
+    System.err.println(s"[scaling] local[$cores] reps: " +
+      r.seconds.map(s => f"$s%.2f").mkString(", "))
     spark.stop()
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    Result(cores, times(times.length / 2), times.head, docs)
+    r
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "5").toInt
-    // 4 vs 16 by default: a true 4x core ratio that leaves scheduler/GC
-    // headroom on the 32-core box and keeps turbo frequency comparable
-    // between the two sizes (8 vs 32 conflates frequency scaling with
-    // parallel efficiency — measured pure-CPU ceiling there is ~0.78).
-    val lo = sys.env.getOrElse("SPARK_GRAFT_CORES_LO", "4").toInt
-    val hi = sys.env.getOrElse("SPARK_GRAFT_CORES_HI", "16").toInt
+    val hi = Runtime.getRuntime.availableProcessors()
+    val lo = math.max(1, hi / 4)
 
     // materialize input once with a bootstrap session
-    val boot = sessionFor(hi)
-    boot.sparkContext.setLogLevel("WARN")
     val replicate = sys.env.getOrElse("SPARK_GRAFT_REPLICATE", "64").toInt
+    val boot = Measure.session(hi)
     val pagesPath = ocrspark.job.Synth.ensurePages(boot, sfDir,
       replicate = replicate)
     boot.stop()
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-
-    // the deployment-shaped measurement: `hi/lo` executor JVMs × lo
-    // cores vs one lo-core JVM; best of 2 launches (same min-statistic
-    // rationale as runAt), shard reps mirror the single-JVM rep count
-    def multiMeasure(rLo: Result): (Int, Double, Double) = {
-      val nSh = hi / lo
-      val m = math.min(multiJvmRun(pagesPath, nSh, lo, reps = reps),
-        multiJvmRun(pagesPath, nSh, lo, reps = reps))
-      (nSh, m, rLo.minSec / (nSh * m))
-    }
-
-    // multi-only mode: just the deployment-shaped measurement — for
-    // iterating on the executor-sim protocol without paying for the
-    // full two-parallelism suite each time
-    if (sys.env.contains("SPARK_GRAFT_MULTI_ONLY")) {
-      val rLo = runAt(lo, pagesPath, reps)
-      val (nSh, m, eff) = multiMeasure(rLo)
-      println(f"""{"metric":"multi-jvm efficiency","value":$eff%.3f,"unit":"ratio","single_lo_sec":${rLo.minSec}%.3f,"slowest_shard_sec":$m%.3f,"n_shards":$nSh,"docs":${rLo.docs},"sf":"$sfDir"}""")
-      return
-    }
 
     val rLo = runAt(lo, pagesPath, reps)
     val rHi = runAt(hi, pagesPath, reps)
     val coreRatio = hi.toDouble / lo
-    val efficiency = (rHi.docsPerSec / rLo.docsPerSec) / coreRatio
+    val efficiency = (docsPerSec(rHi) / docsPerSec(rLo)) / coreRatio
     val (ceilLo, ceilHi, ceiling) = cpuCeiling(lo, hi)
     val normalized = efficiency / ceiling
-    val (nShards, multiSec, multiEff) = multiMeasure(rLo)
+
+    // the deployment-shaped measurement: `hi/lo` executor JVMs × lo
+    // cores vs one lo-core JVM; best of 2 launches (same min-statistic
+    // rationale as runAt). The budget fits the warm-up plus `reps` shard
+    // reps at half of perfect scaling.
+    val nShards = hi / lo
+    val shardHeap = shardHeapMb(nShards)
+    val budgetSec = 2 * (reps + 1) * rLo.min / nShards
+    val multiSec = math.min(multiJvmRun(pagesPath, nShards, lo, budgetSec),
+      multiJvmRun(pagesPath, nShards, lo, budgetSec))
+    val multiEff = rLo.min / (nShards * multiSec)
 
     val md =
       f"""# BENCH — measured numbers (BASELINE.md targets)
          |
          |End-to-end extraction pipeline (route → parse → normalize →
          |assemble → fields → confidence) over the materialized pages
-         |table at `$sfDir` (${rLo.docs} docs). Same job, same input, two
+         |table at `$sfDir` (${rLo.rows} docs). Same job, same input, two
          |parallelism levels — the sandbox stand-in for N vs 4N executor
          |clusters (no real cluster available; see BASELINE.md). Median
          |of $reps runs after warm-up, single JVM `local[k]`.
          |
          || metric | local[$lo] | local[$hi] |
          ||---|---|---|
-         || median wall time (s) | ${rLo.medianSec}%.2f | ${rHi.medianSec}%.2f |
-         || min wall time (s) | ${rLo.minSec}%.2f | ${rHi.minSec}%.2f |
-         || extraction throughput (docs/sec, from min) | ${rLo.docsPerSec}%.1f | ${rHi.docsPerSec}%.1f |
+         || median wall time (s) | ${rLo.median}%.2f | ${rHi.median}%.2f |
+         || min wall time (s) | ${rLo.min}%.2f | ${rHi.min}%.2f |
+         || extraction throughput (docs/sec, from min) | ${docsPerSec(rLo)}%.1f | ${docsPerSec(rHi)}%.1f |
          |
          |**Scaling efficiency** (throughput ratio / core ratio $lo→$hi):
          |**${efficiency}%.3f** (target ≥ 0.8).
@@ -258,9 +192,11 @@ object ScalingBench {
          |**Multi-executor measurement (the deployment-shaped one):**
          |1 JVM × local[$lo] on the full corpus vs $nShards concurrent
          |JVMs × local[$lo], each on a url-hash shard — i.e. N vs 4N
-         |executors as spark-submit would actually run them (4-core
-         |executor JVMs, private heaps). Slowest shard: ${multiSec}%.2f s
-         |vs single-executor ${rLo.minSec}%.2f s →
+         |executors as spark-submit would actually run them ($lo-core
+         |executor JVMs, private heaps of -Xmx${shardHeap}m
+         |-Xmn${shardHeap / 2}m, sized from this host's memory). Shards
+         |time reps until one shared deadline. Slowest shard: ${multiSec}%.2f s
+         |vs single-executor ${rLo.min}%.2f s →
          |**scaling efficiency ${multiEff}%.3f**.
          |
          |Byte-identity match rate vs the reference's pure functions:
@@ -273,6 +209,6 @@ object ScalingBench {
     // the hand-curated record (best-of-N + disclosures) and must never
     // be clobbered by a single run
     Files.writeString(Paths.get("BENCH/last_scaling.md"), md)
-    println(f"""{"metric":"scaling efficiency $lo->$hi cores","value":$efficiency%.3f,"unit":"ratio","queries":{"local$lo":${rLo.minSec}%.3f,"local$hi":${rHi.minSec}%.3f},"docs_per_sec_lo":${rLo.docsPerSec}%.1f,"docs_per_sec_hi":${rHi.docsPerSec}%.1f,"cpu_ceiling":$ceiling%.3f,"efficiency_normalized":$normalized%.3f,"multi_jvm_efficiency":$multiEff%.3f,"sf":"$sfDir"}""")
+    println(f"""{"metric":"scaling efficiency $lo->$hi cores","value":$efficiency%.3f,"unit":"ratio","queries":{"local$lo":${rLo.min}%.3f,"local$hi":${rHi.min}%.3f},"docs_per_sec_lo":${docsPerSec(rLo)}%.1f,"docs_per_sec_hi":${docsPerSec(rHi)}%.1f,"cpu_ceiling":$ceiling%.3f,"efficiency_normalized":$normalized%.3f,"multi_jvm_efficiency":$multiEff%.3f,"sf":"$sfDir"}""")
   }
 }

@@ -1,59 +1,27 @@
 package ocrspark.bench
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
-
 /** One simulated executor: runs the extraction pipeline over its
   * file-shard of the pages table in its own JVM (own heap, own GC) —
-  * the multi-executor unit [[ScalingBench]] launches 4× concurrently.
-  * Args: shardIdx cores reps minWallSec file1,file2,... (disjoint
+  * the multi-executor unit [[ScalingBench]] launches concurrently.
+  * Args: shardIdx cores deadlineEpochMs file1,file2,... (disjoint
   * parquet files — no redundant scan of other shards' data). Prints one
-  * line: `SHARD <idx> <docs> <seconds>`. */
+  * line: `SHARD <idx> <docs> <min seconds> <counted reps>`.
+  *
+  * Reps run until the deadline shared by all shards
+  * ([[Measure.untilDeadline]]), and the min is taken over reps that
+  * finished before it: a fixed rep count would let the slowest shard's
+  * last reps run on an otherwise idle box, and min() would pick exactly
+  * those least-contended reps. */
 object ShardMain {
   def main(args: Array[String]): Unit = {
-    val Array(shardIdxS, coresS, repsS, minWallS, fileListS) = args
-    val (shardIdx, cores) = (shardIdxS.toInt, coresS.toInt)
-    val (reps, minWall) = (repsS.toInt, minWallS.toDouble)
-    val files = fileListS.split(",")
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", (cores * 2).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val shard = spark.read.parquet(files: _*)
-    def runOnce(): Long =
-      ocrspark.job.ExtractJob.run(shard)
-        .agg(sum(pmod(xxhash64(col("text"), col("method"), col("confidence")),
-          lit(1000000007L))).as("h"), count(lit(1)).as("n"))
-        .collect()(0).getAs[Long]("n")
-    runOnce() // warm-up (JIT + cache)
-    // Min of `reps` timed reps, GC between — the SAME statistic the
-    // single-JVM side uses (runAt takes min of its reps); timing a
-    // single rep biased the multi-JVM efficiency down (one rep eats
-    // residual JIT + the warm-up's GC debt, in a fresh JVM with far
-    // less JIT maturity than the long-lived bench JVM it is compared
-    // against). The loop additionally runs until `minWall` seconds of
-    // timed work have elapsed: all shards start ~simultaneously, so a
-    // fast shard keeps generating the contention the slow shards'
-    // measurements are supposed to include — with a bare fixed rep
-    // count, the slowest shard's last reps would run on an
-    // otherwise-idle box and min() would pick exactly those
-    // least-contended reps, inflating the efficiency metric.
-    var n = 0L
-    var best = Double.MaxValue
-    var done = 0
-    val wall0 = System.nanoTime()
-    while (done < reps || (System.nanoTime() - wall0) / 1e9 < minWall) {
-      System.gc()
-      val t0 = System.nanoTime()
-      n = runOnce()
-      best = math.min(best, (System.nanoTime() - t0) / 1e9)
-      done += 1
+    val Array(shardIdx, cores, deadlineMs, fileList) = args
+    val spark = Measure.session(cores.toInt)
+    val shard = spark.read.parquet(fileList.split(","): _*)
+    // e2e hashes text/method/confidence: xxhash64 rejects the `fields` map
+    val r = Measure.untilDeadline(deadlineMs.toLong) {
+      Measure.force(ocrspark.job.ExtractJob.run(shard), "text", "method", "confidence")
     }
-    println(f"SHARD $shardIdx $n $best%.3f")
+    println(f"SHARD $shardIdx ${r.rows} ${r.min}%.3f ${r.seconds.size}")
     spark.stop()
   }
 }

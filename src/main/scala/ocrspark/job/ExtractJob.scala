@@ -48,6 +48,24 @@ object ExtractJob {
   def saltCol(nSalts: Int): Column =
     pmod(xxhash64(col("url"), col("warc_ts")), lit(nSalts)).cast("int")
 
+  /** The map-side extraction projection: the extract UDF, `bucket` and
+    * the result fields, with no exchange. [[run]] and the streaming
+    * extraction both start from it. */
+  def extracted(pages: DataFrame, nBuckets: Int = DefaultBuckets): DataFrame =
+    pages
+      .withColumn("r",
+        extractUdf(col("html"), col("text"), col("lang"), forceOcrCol(pages)))
+      .withColumn("bucket", bucketCol(nBuckets))
+      .select(
+        col("url"), col("warc_ts"), col("lang"), col("bucket"),
+        col("r.text").as("text"), col("r.fields").as("fields"),
+        col("r.method").as("method"), col("r.pages").as("pages"),
+        col("r.confidence").as("confidence"),
+        col("r.processed_pages").as("processed_pages"),
+        col("r.low_confidence_pages").as("low_confidence_pages"),
+        col("r.route").as("route"),
+        col("r.error").as("error"))
+
   /** pages(url, warc_ts, html, text, lang) → extracted table
     * (FIXTURES.md §1.2). `repartitionTasks` sizes the shuffle: pass
     * cores×2..4 locally; on a real cluster, executors×cores×2.
@@ -64,20 +82,8 @@ object ExtractJob {
           repartitionTasks: Option[Int] = None): DataFrame = {
     val parts = repartitionTasks.getOrElse(
       pages.sparkSession.sessionState.conf.numShufflePartitions)
-    pages
-      .withColumn("r",
-        extractUdf(col("html"), col("text"), col("lang"), forceOcrCol(pages)))
-      .withColumn("bucket", bucketCol(nBuckets))
+    extracted(pages, nBuckets)
       .withColumn("salt", saltCol(nSalts))
-      .select(
-        col("url"), col("warc_ts"), col("lang"), col("bucket"), col("salt"),
-        col("r.text").as("text"), col("r.fields").as("fields"),
-        col("r.method").as("method"), col("r.pages").as("pages"),
-        col("r.confidence").as("confidence"),
-        col("r.processed_pages").as("processed_pages"),
-        col("r.low_confidence_pages").as("low_confidence_pages"),
-        col("r.route").as("route"),
-        col("r.error").as("error"))
       .repartition(parts, col("bucket"), col("salt"))
       .drop("salt")
   }

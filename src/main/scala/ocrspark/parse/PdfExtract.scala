@@ -416,7 +416,9 @@ object PdfExtract {
   private def inflate(data: Array[Byte]): Array[Byte] = {
     val inf = new Inflater()
     inf.setInput(data)
-    val out = new java.io.ByteArrayOutputStream(math.min(data.length * 4, 1 << 20))
+    // initial size ≤ 1 MiB; min() before the multiply, so a > 512 MiB
+    // stream cannot overflow Int into a negative size
+    val out = new java.io.ByteArrayOutputStream(math.min(data.length, 1 << 18) * 4)
     val buf = new Array[Byte](8192)
     try {
       while (!inf.finished()) {

@@ -25,9 +25,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object StreamExtract {
 
-  /** Streaming extraction over a pages parquet directory. The transform
-    * is IDENTICAL to the batch projection (same UDF, same map-side
-    * placement) — one definition, two execution modes. */
+  /** Streaming extraction over a pages parquet directory: columns of
+    * the batch job's map-side projection (`ExtractJob.extracted`) — one
+    * definition, two execution modes. */
   def extractStream(spark: SparkSession, pagesDir: String): DataFrame = {
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("url", org.apache.spark.sql.types.StringType),
@@ -35,17 +35,10 @@ object StreamExtract {
       org.apache.spark.sql.types.StructField("html", org.apache.spark.sql.types.BinaryType),
       org.apache.spark.sql.types.StructField("text", org.apache.spark.sql.types.StringType),
       org.apache.spark.sql.types.StructField("lang", org.apache.spark.sql.types.StringType)))
-    val stream = spark.readStream.schema(schema).parquet(pagesDir)
-    stream
-      .withColumn("r", ocrspark.job.ExtractJob.extractUdf(
-        col("html"), col("text"), col("lang"),
-        org.apache.spark.sql.functions.lit(false)))
-      .withColumn("bucket", ocrspark.job.ExtractJob.bucketCol(
-        ocrspark.job.ExtractJob.DefaultBuckets))
+    ocrspark.job.ExtractJob.extracted(spark.readStream.schema(schema).parquet(pagesDir))
       .select(col("url"), col("warc_ts"), col("lang"), col("bucket"),
-        col("r.text").as("text"), col("r.fields").as("fields"),
-        col("r.method").as("method"), col("r.confidence").as("confidence"),
-        col("r.error").as("error"))
+        col("text"), col("fields"), col("method"), col("confidence"),
+        col("error"))
   }
 
   /** Run the extraction stream into an in-memory table (tests/demo) or

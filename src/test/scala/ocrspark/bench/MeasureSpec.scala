@@ -1,0 +1,59 @@
+package ocrspark.bench
+
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions._
+import org.scalatest.funsuite.AnyFunSuite
+
+class MeasureSpec extends AnyFunSuite {
+
+  lazy val spark: SparkSession = SparkSession.builder()
+    .master("local[4]")
+    .config("spark.sql.shuffle.partitions", "4")
+    .config("spark.sql.session.timeZone", "UTC")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
+
+  test("force evaluates a projection that count() prunes") {
+    val calls = spark.sparkContext.longAccumulator("udf calls")
+    val doubled = udf { (x: Long) => calls.add(1); x * 2 }
+    val df = spark.range(100).select(doubled(col("id")).as("y"))
+    assert(df.count() == 100)
+    assert(calls.value == 0, "count() should prune the deterministic UDF")
+    assert(Measure.force(df) == 100)
+    assert(calls.value == 100)
+    calls.reset()
+    assert(Measure.force(df, "y") == 100)
+    assert(calls.value == 100)
+  }
+
+  test("rep loop: one warm-up, then exactly `reps` timed passes") {
+    var passes = 0
+    val r = Measure.reps(3) { passes += 1; passes.toLong }
+    assert(passes == 4)
+    assert(r.seconds.size == 3)
+    assert(r.rows == 4L, "rows come from the last timed pass")
+  }
+
+  test("deadline loop: no counted rep ends after the deadline") {
+    val ends = Vector.newBuilder[Long]
+    val deadline = System.currentTimeMillis() + 1000
+    val r = Measure.untilDeadline(deadline) {
+      Thread.sleep(120)
+      ends += System.currentTimeMillis()
+      0L
+    }
+    assert(System.currentTimeMillis() >= deadline, "the loop runs until the deadline")
+    val timedEnds = ends.result().tail // drop the warm-up
+    assert(r.seconds.nonEmpty)
+    assert(timedEnds.take(r.seconds.size).forall(_ < deadline))
+    assert(timedEnds.size - r.seconds.size <= 1, "only the last pass may be dropped")
+    assert(r.seconds.forall(_ >= 0.1))
+  }
+
+  test("deadline loop fails loudly when no rep finishes in time") {
+    val deadline = System.currentTimeMillis() + 50
+    intercept[IllegalStateException] {
+      Measure.untilDeadline(deadline) { Thread.sleep(100); 0L }
+    }
+  }
+}

@@ -159,6 +159,41 @@ class ParseSpec extends AnyFunSuite {
     }
   }
 
+  test("flate stream over 512 MiB degrades to a PdfError page error") {
+    // zlib header, then non-final stored deflate blocks (LEN 0xFFFF,
+    // NLEN 0) up to just past 512 MiB: inflate sizes its buffer from the
+    // compressed length, then hits the inflate cap
+    val head =
+      ("%PDF-1.4\n" +
+        "1 0 obj << /Type /Catalog /Pages 2 0 R >> endobj\n" +
+        "2 0 obj << /Type /Pages /Kids [3 0 R] /Count 1 >> endobj\n" +
+        "3 0 obj << /Type /Page /Parent 2 0 R /Contents 4 0 R >> endobj\n")
+    val block = 5 + 0xFFFF
+    val dataLen = 2 + ((512 << 20) / block + 1) * block
+    val streamHead = (head +
+      s"4 0 obj << /Length $dataLen /Filter /FlateDecode >> stream\n")
+      .getBytes("ISO-8859-1")
+    val tail = "\nendstream endobj\n".getBytes("ISO-8859-1")
+    // built in place: one array, not three concatenated copies
+    val pdf = new Array[Byte](streamHead.length + dataLen + tail.length)
+    System.arraycopy(streamHead, 0, pdf, 0, streamHead.length)
+    var p = streamHead.length
+    pdf(p) = 0x78; pdf(p + 1) = 0x01; p += 2
+    while (p + block <= streamHead.length + dataLen) {
+      pdf(p + 1) = 0xFF.toByte; pdf(p + 2) = 0xFF.toByte // LEN; BTYPE 00
+      p += block
+    }
+    System.arraycopy(tail, 0, pdf, p, tail.length)
+    assert(dataLen > (512 << 20))
+    PdfExtract.parse(pdf) match {
+      case Right(doc) =>
+        assert(doc.pages.head.error != null)
+        assert(doc.pages.head.error.startsWith("PdfError"), doc.pages.head.error)
+        assert(doc.pages.head.error.contains("exceeds"), doc.pages.head.error)
+      case Left(msg) => fail(s"document-level failure: $msg")
+    }
+  }
+
   test("HTML: Arc90 picks main content, strips nav/footer/script/style") {
     val para = "Contenido principal del documento con suficiente texto " * 5
     val html = new String(ocrspark.job.Synth.htmlFor(7L, para + "\nSegundo parrafo largo con mas contenido real aqui."),
