@@ -201,7 +201,7 @@ object SparkEntry {
     // shape, app.py:287) — slice then strip — DuckDB-verified. Python
     // .strip() removes ALL whitespace, not just spaces (trim()'s
     // semantic), so the mirror strips the explicit ws class on both
-    // sides; the kernel path (Extract.sample) uses Normalize.pyStrip
+    // sides; the kernel path (Analyze.sampleText) uses Normalize.pyStrip
     // for full Python parity, which the golden suite pins.
     "w3_truncate" -> ((s, dir) => {
       val sample = ocrspark.ops.TextOps.wsTrim(substring(col("text"), 1, 500))

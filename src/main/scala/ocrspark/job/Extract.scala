@@ -71,19 +71,19 @@ object Extract {
     try {
       if (forceOcr) {
         if (html == null || html.length == 0)
-          return errorResult("empty payload")
+          return failed("empty payload")
         return forcedOcrPath(html, lang)
       }
       if (upstreamText != null && Normalize.pyStrip(upstreamText).nonEmpty)
         return upstreamPath(upstreamText, lang)
       if (html == null || html.length == 0)
-        return errorResult("empty payload")
+        return failed("empty payload")
       if (isPdf(html)) pdfPath(html, lang)
       else if (isImage(html)) imagePath(html)
       else htmlPath(html, lang)
     } catch {
       case e: Exception =>
-        errorResult(s"${e.getClass.getSimpleName}: ${e.getMessage}")
+        failed(s"${e.getClass.getSimpleName}: ${e.getMessage}")
     }
   }
 
@@ -96,31 +96,17 @@ object Extract {
   private def forcedOcrPath(html: Array[Byte], lang: String): DocResult = {
     val sizeMb = html.length / (1024.0 * 1024.0)
     if (!isPdf(html))
-      return DocResult("", Map.empty, MethodOcr, pages = 0, confidence = 0.0,
-        processed_pages = 0, low_confidence_pages = 0,
-        route = ocrspark.route.Analyze.RouteOcr, route_confidence = 1.0,
-        has_text = false, has_images = isImage(html), text_length = 0,
-        text_density = 0.0, sample_text = "",
-        error = "OCR forzado: el payload no es un PDF")
+      return failed("OCR forzado: el payload no es un PDF", MethodOcr,
+        Analyze.RouteOcr, 1.0, hasImages = isImage(html))
     PdfExtract.parse(html) match {
-      case Left(err) =>
-        DocResult("", Map.empty, MethodOcr, pages = 0, confidence = 0.0,
-          processed_pages = 0, low_confidence_pages = 0,
-          route = ocrspark.route.Analyze.RouteOcr, route_confidence = 1.0,
-          has_text = false, has_images = false, text_length = 0,
-          text_density = 0.0, sample_text = "", error = err)
+      case Left(err) => failed(err, MethodOcr, Analyze.RouteOcr, 1.0)
       case Right(doc) if doc.pageCount == 0 =>
-        DocResult("", Map.empty, MethodOcr, pages = 0, confidence = 0.0,
-          processed_pages = 0, low_confidence_pages = 0,
-          route = ocrspark.route.Analyze.RouteOcr, route_confidence = 1.0,
-          has_text = false, has_images = false, text_length = 0,
-          text_density = 0.0, sample_text = "",
-          error = "PDF no contiene páginas") // app.py:674
+        failed(NoPages, MethodOcr, Analyze.RouteOcr, 1.0)
       case Right(doc) =>
         val forced = ocrspark.model.Analysis(has_text = false,
           has_images = false, text_length = 0, page_count = doc.pageCount,
           text_density = 0.0,
-          processing_recommendation = ocrspark.route.Analyze.RouteOcr,
+          processing_recommendation = Analyze.RouteOcr,
           confidence = 1.0, sample_text = "", file_size_mb = sizeMb)
         ocrShapedPdf(doc, forced, lang)
     }
@@ -132,12 +118,8 @@ object Extract {
     * only reads PDFs and fails (app.py:665-671,792-795). Mirrored here
     * as a typed document-level error — never parsed as HTML. */
   private def imagePath(html: Array[Byte]): DocResult =
-    DocResult("", Map.empty, MethodOcr, pages = 0, confidence = 0.0,
-      processed_pages = 0, low_confidence_pages = 0,
-      route = ocrspark.route.Analyze.RouteOcr, route_confidence = 0.8,
-      has_text = false, has_images = true, text_length = 0,
-      text_density = 0.0, sample_text = "",
-      error = "payload de imagen: la ruta OCR solo procesa PDF")
+    failed("payload de imagen: la ruta OCR solo procesa PDF", MethodOcr,
+      Analyze.RouteOcr, 0.8, hasImages = true)
 
   private def upstreamPath(text: String, lang: String): DocResult = {
     val norm = Normalize.normalize(text, lang)
@@ -147,7 +129,7 @@ object Extract {
       low_confidence_pages = 0, route = "upstream", route_confidence = 1.0,
       has_text = true, has_images = false,
       text_length = norm.length, text_density = norm.length.toDouble,
-      sample_text = sample(norm), error = null)
+      sample_text = Analyze.sampleText(norm), error = null)
   }
 
   private def pdfPath(html: Array[Byte], lang: String): DocResult = {
@@ -157,19 +139,9 @@ object Extract {
     parsed match {
       case Left(err) =>
         // reference: unparseable → scanned path → pdfinfo fails → error
-        DocResult("", Map.empty, MethodOcr, pages = 0, confidence = 0.0,
-          processed_pages = 0, low_confidence_pages = 0,
-          route = a.processing_recommendation,
-          route_confidence = a.confidence, has_text = false,
-          has_images = false, text_length = 0, text_density = 0.0,
-          sample_text = "", error = err)
+        failed(err, MethodOcr, a.processing_recommendation, a.confidence)
       case Right(doc) if doc.pageCount == 0 =>
-        DocResult("", Map.empty, MethodOcr, pages = 0, confidence = 0.0,
-          processed_pages = 0, low_confidence_pages = 0,
-          route = a.processing_recommendation,
-          route_confidence = a.confidence, has_text = false,
-          has_images = false, text_length = 0, text_density = 0.0,
-          sample_text = "", error = "PDF no contiene páginas") // app.py:674
+        failed(NoPages, MethodOcr, a.processing_recommendation, a.confidence)
       case Right(doc) =>
         if (a.processing_recommendation == Analyze.RouteText)
           textPdf(doc, a, lang)
@@ -226,7 +198,7 @@ object Extract {
       route = "html_extraction", route_confidence = 1.0,
       has_text = norm.length > 50, has_images = false,
       text_length = norm.length, text_density = norm.length.toDouble,
-      sample_text = sample(norm), error = null)
+      sample_text = Analyze.sampleText(norm), error = null)
   }
 
   /** Routing-analysis-only result (the /analyze endpoint shape). */
@@ -283,13 +255,16 @@ object Extract {
     }
   }
 
-  private def errorResult(msg: String): DocResult =
-    DocResult("", Map.empty, MethodError, pages = 0, confidence = 0.0,
-      processed_pages = 0, low_confidence_pages = 0, route = "error",
-      route_confidence = 0.0, has_text = false, has_images = false,
-      text_length = 0, text_density = 0.0, sample_text = "", error = msg)
+  private val NoPages = "PDF no contiene páginas" // app.py:674
 
-  private def sample(s: String): String =
-    if (s.length <= 500) s
-    else Normalize.pyStrip(s.substring(0, s.offsetByCodePoints(0, math.min(500, s.codePointCount(0, s.length)))))
+  /** A document-level failure: no text, pages or fields, only the
+    * error and the routing it failed on. */
+  private def failed(error: String, method: String = MethodError,
+                     route: String = "error", routeConfidence: Double = 0.0,
+                     hasImages: Boolean = false): DocResult =
+    DocResult("", Map.empty, method, pages = 0, confidence = 0.0,
+      processed_pages = 0, low_confidence_pages = 0, route = route,
+      route_confidence = routeConfidence, has_text = false,
+      has_images = hasImages, text_length = 0, text_density = 0.0,
+      sample_text = "", error = error)
 }

@@ -1,7 +1,9 @@
 package ocrspark.ops
 
+import scala.reflect.runtime.universe.TypeTag
+
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.expressions.{Aggregator, UserDefinedFunction}
 import org.apache.spark.sql.{Encoder, functions}
 
 /** Bounded-memory "collect the cap smallest members" aggregates for the
@@ -23,71 +25,51 @@ import org.apache.spark.sql.{Encoder, functions}
   */
 object BoundedCollect {
 
-  /** Append with DEFERRED trimming: the buffer grows to 2×cap before a
-    * sort-and-trim back to cap, so a hot bucket (the 10^9-member
-    * degenerate case this class exists for) pays an amortized
-    * O(log cap) per element instead of a full sort + copy per element,
-    * while the buffer stays bounded at 2×cap everywhere. The cap
-    * smallest elements always survive a trim, so the eventual keeper
-    * (global min) is never lost. */
-  private def append[T](s: Seq[T], a: T, cap: Int)
-                       (implicit ord: Ordering[T]): Seq[T] = {
-    val grown = s :+ a
-    if (grown.length <= 2 * cap) grown else grown.sorted.take(cap)
+  /** The `cap` smallest inputs under `ord`, in order. Appends and merges
+    * trim LAZILY: the buffer grows to 2×cap before a sort-and-trim back
+    * to cap, so a hot bucket (the 10^9-member degenerate case this class
+    * exists for) pays an amortized O(log cap) per element instead of a
+    * full sort + copy per element, while the buffer stays bounded at
+    * 2×cap everywhere. The cap smallest elements always survive a trim,
+    * so the eventual keeper (global min) is never lost. */
+  class BoundedSmallest[T](cap: Int, enc: Encoder[Seq[T]])
+                          (implicit ord: Ordering[T])
+      extends Aggregator[T, Seq[T], Seq[T]] {
+    private def trim(s: Seq[T]): Seq[T] =
+      if (s.length <= 2 * cap) s else s.sorted.take(cap)
+    def zero: Seq[T] = Vector.empty
+    def reduce(b: Seq[T], a: T): Seq[T] = trim(b :+ a)
+    def merge(x: Seq[T], y: Seq[T]): Seq[T] = trim(x ++ y)
+    def finish(b: Seq[T]): Seq[T] = b.sorted.take(cap)
+    def bufferEncoder: Encoder[Seq[T]] = enc
+    def outputEncoder: Encoder[Seq[T]] = enc
   }
 
-  private def mergeTrim[T](x: Seq[T], y: Seq[T], cap: Int)
-                          (implicit ord: Ordering[T]): Seq[T] = {
-    val all = x ++ y
-    if (all.length <= 2 * cap) all else all.sorted.take(cap)
-  }
-
-  /** Final sort + trim (the buffer may legitimately hold up to 2×cap). */
-  private def fin[T](s: Seq[T], cap: Int)(implicit ord: Ordering[T]): Seq[T] =
-    s.sorted.take(cap)
-
-  class BoundedLongs(cap: Int)
-      extends Aggregator[Long, Seq[Long], Seq[Long]] {
-    def zero: Seq[Long] = Vector.empty
-    def reduce(b: Seq[Long], a: Long): Seq[Long] = append(b, a, cap)
-    def merge(x: Seq[Long], y: Seq[Long]): Seq[Long] = mergeTrim(x, y, cap)
-    def finish(b: Seq[Long]): Seq[Long] = fin(b, cap)
-    def bufferEncoder: Encoder[Seq[Long]] = ExpressionEncoder()
-    def outputEncoder: Encoder[Seq[Long]] = ExpressionEncoder()
-  }
+  private[ops] def boundedSmallest[T: TypeTag: Ordering](cap: Int): BoundedSmallest[T] =
+    new BoundedSmallest[T](cap, ExpressionEncoder[Seq[T]]())
 
   case class IdSh(id: Long, sh: Long)
-  private implicit val idShOrd: Ordering[IdSh] = Ordering.by(_.id)
-
-  class BoundedIdSh(cap: Int)
-      extends Aggregator[IdSh, Seq[IdSh], Seq[IdSh]] {
-    def zero: Seq[IdSh] = Vector.empty
-    def reduce(b: Seq[IdSh], a: IdSh): Seq[IdSh] = append(b, a, cap)
-    def merge(x: Seq[IdSh], y: Seq[IdSh]): Seq[IdSh] = mergeTrim(x, y, cap)
-    def finish(b: Seq[IdSh]): Seq[IdSh] = fin(b, cap)
-    def bufferEncoder: Encoder[Seq[IdSh]] = ExpressionEncoder()
-    def outputEncoder: Encoder[Seq[IdSh]] = ExpressionEncoder()
-  }
+  object IdSh { implicit val byId: Ordering[IdSh] = Ordering.by(_.id) }
 
   case class IdVec(id: Long, v: Seq[Float])
-  private implicit val idVecOrd: Ordering[IdVec] = Ordering.by(_.id)
-
-  class BoundedIdVec(cap: Int)
-      extends Aggregator[IdVec, Seq[IdVec], Seq[IdVec]] {
-    def zero: Seq[IdVec] = Vector.empty
-    def reduce(b: Seq[IdVec], a: IdVec): Seq[IdVec] = append(b, a, cap)
-    def merge(x: Seq[IdVec], y: Seq[IdVec]): Seq[IdVec] = mergeTrim(x, y, cap)
-    def finish(b: Seq[IdVec]): Seq[IdVec] = fin(b, cap)
-    def bufferEncoder: Encoder[Seq[IdVec]] = ExpressionEncoder()
-    def outputEncoder: Encoder[Seq[IdVec]] = ExpressionEncoder()
-  }
+  object IdVec { implicit val byId: Ordering[IdVec] = Ordering.by(_.id) }
 
   case class NbrScore(neighbor_id: Long, cosine: Double)
-  /** Top-k order: best cosine first, ties to the smallest neighbor id —
-    * the same deterministic order the ANN rank step needs, so "cap
-    * smallest under this ordering" IS the top-k set. */
-  private implicit val nbrOrd: Ordering[NbrScore] =
-    Ordering.by(ns => (-ns.cosine, ns.neighbor_id))
+  object NbrScore {
+    /** Top-k order: best cosine first, ties to the smallest neighbor id
+      * — the same deterministic order the ANN rank step needs, so "cap
+      * smallest under this ordering" IS the top-k set. */
+    implicit val byRank: Ordering[NbrScore] =
+      Ordering.by(ns => (-ns.cosine, ns.neighbor_id))
+  }
+
+  private def udaf[T: TypeTag: Ordering](cap: Int): UserDefinedFunction =
+    functions.udaf(boundedSmallest[T](cap), ExpressionEncoder[T]())
+
+  /** Column aggregates, ready for `groupBy(...).agg(...)`. */
+  def boundedIds(cap: Int): UserDefinedFunction = udaf[Long](cap)
+  def boundedIdSh(cap: Int): UserDefinedFunction = udaf[IdSh](cap)
+  def boundedIdVec(cap: Int): UserDefinedFunction = udaf[IdVec](cap)
 
   /** Two-phase top-k building block for the ANN paths: map-side partial
     * aggregation keeps the best k (buffer ≤ 2k) per query per partition,
@@ -96,24 +78,5 @@ object BoundedCollect {
     * `partitionBy(query_id)`, which funnels every scored row of a query
     * into one task (the 100 TB scale-killer this replaces). `finish`
     * returns the top k already in rank order. */
-  class TopKNbrs(k: Int)
-      extends Aggregator[NbrScore, Seq[NbrScore], Seq[NbrScore]] {
-    def zero: Seq[NbrScore] = Vector.empty
-    def reduce(b: Seq[NbrScore], a: NbrScore): Seq[NbrScore] = append(b, a, k)
-    def merge(x: Seq[NbrScore], y: Seq[NbrScore]): Seq[NbrScore] =
-      mergeTrim(x, y, k)
-    def finish(b: Seq[NbrScore]): Seq[NbrScore] = fin(b, k)
-    def bufferEncoder: Encoder[Seq[NbrScore]] = ExpressionEncoder()
-    def outputEncoder: Encoder[Seq[NbrScore]] = ExpressionEncoder()
-  }
-
-  /** Column aggregates, ready for `groupBy(...).agg(...)`. */
-  def boundedIds(cap: Int): org.apache.spark.sql.expressions.UserDefinedFunction =
-    functions.udaf(new BoundedLongs(cap), ExpressionEncoder[Long]())
-  def boundedIdSh(cap: Int): org.apache.spark.sql.expressions.UserDefinedFunction =
-    functions.udaf(new BoundedIdSh(cap), ExpressionEncoder[IdSh]())
-  def boundedIdVec(cap: Int): org.apache.spark.sql.expressions.UserDefinedFunction =
-    functions.udaf(new BoundedIdVec(cap), ExpressionEncoder[IdVec]())
-  def topKNbrs(k: Int): org.apache.spark.sql.expressions.UserDefinedFunction =
-    functions.udaf(new TopKNbrs(k), ExpressionEncoder[NbrScore]())
+  def topKNbrs(k: Int): UserDefinedFunction = udaf[NbrScore](k)
 }

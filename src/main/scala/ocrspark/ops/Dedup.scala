@@ -1,6 +1,6 @@
 package ocrspark.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Deduplication suite for a web-scale training-data pipeline: exact,
@@ -53,20 +53,6 @@ object Dedup {
   val BandSize = 4 // 16 bands of 4 → catches J≳0.6 reliably
   val NumBands: Int = NumHashes / BandSize
 
-  /** Multiply-shift parameters derived from a fixed seed (SplitMix64
-    * stream) — deterministic across JVMs. */
-  private val hashParams: Array[(Long, Long)] = {
-    var x = 0x5851F42D4C957F2DL
-    def next(): Long = {
-      x += 0x9E3779B97F4A7C15L
-      var z = x
-      z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-      z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-      z ^ (z >>> 31)
-    }
-    Array.fill(NumHashes)((next() | 1L, next()))
-  }
-
   /** Character 5-gram shingle hashes of ws-normalized lowercase text. */
   private[ops] def shingleHashes(text: String): Array[Long] = {
     val s = WsRun.matcher(text).replaceAll(" ").trim
@@ -89,27 +75,6 @@ object Dedup {
       i += 1
     }
     out
-  }
-
-  /** Classic k-independent-permutation sketch (differential reference;
-    * was the production path until round 2 — 64 multiplies per shingle). */
-  private[ops] def minhashClassicImpl(text: String): Array[Long] = {
-    val mins = Array.fill(NumHashes)(Long.MaxValue)
-    if (text == null) return mins
-    val shingles = shingleHashes(text)
-    var si = 0
-    while (si < shingles.length) {
-      val sh = shingles(si)
-      var i = 0
-      while (i < NumHashes) {
-        val (a, b) = hashParams(i)
-        val v = a * sh + b
-        if (v < mins(i)) mins(i) = v
-        i += 1
-      }
-      si += 1
-    }
-    mins
   }
 
   /** 64-slot minhash signature via ONE-PERMUTATION HASHING (Li et al.,
@@ -184,45 +149,50 @@ object Dedup {
     * [[bucketSizes]] / [[embeddingBucketSizes]]. */
   val MaxBucketSize = 64
 
-  /** All i<j pairs of a (sorted, cap-bounded) bucket member list —
-    * ≤ MaxBucketSize²/2 pairs, generated inside the bucket's own
-    * aggregation row (no self-join). */
-  private val bucketPairs = udf((ids: Seq[Long]) => {
-    val s = ids.sorted
-    val out = Vector.newBuilder[(Long, Long)]
+  /** All i<j pairs of a cap-bounded bucket's members in id order, each
+    * scored by `f` inside the bucket's own aggregation row — ≤
+    * MaxBucketSize²/2 pairs, no self-join. */
+  private def bucketPairsOf[M, R](members: Seq[M])(id: M => Long)
+                                 (f: (M, M) => R): Vector[R] = {
+    val s = members.sortBy(id).toIndexedSeq
+    val out = Vector.newBuilder[R]
     var i = 0
     while (i < s.length) {
       var j = i + 1
-      while (j < s.length) { out += ((s(i), s(j))); j += 1 }
+      while (j < s.length) { out += f(s(i), s(j)); j += 1 }
       i += 1
     }
     out.result()
-  })
+  }
 
-  /** MinHash-LSH near-dup pairs: (id_a, id_b, est_jaccard ≥ threshold),
-    * id_a < id_b, distinct.
-    *
-    * Plan shape (one banding shuffle, no self-join): band rows group by
-    * (band, sig) into a capped member list — `collect_list` is safe
-    * because the [[MaxBucketSize]] filter bounds every kept group — and
-    * pairs explode from the list in place. The old shape (bucket-size
-    * agg + semi-join + self-join) was three extra exchanges carrying
-    * the same information. Shuffled payload is (band_sig, id) and
-    * (id, sketch); text never moves. */
-  def minhashSketches(df: DataFrame, idCol: String,
-                                   textCol: String): DataFrame =
-    df.select(col(idCol).as("id"), minhash(col(textCol)).as("mh"))
+  private val bucketPairs = udf((ids: Seq[Long]) =>
+    bucketPairsOf(ids)(identity)((a, b) => (a, b)))
 
-  /** Band rows (id, band, sig) for a sketch table — band signature =
-    * hash of the band's 4 minhashes. Public so the band derivation can
-    * be dumped for the cross-engine oracle (the banding shuffle's exact
-    * input) and reused by the streaming surface. */
-  def minhashBands(withMh: DataFrame): DataFrame =
-    withMh.select(col("id"),
+  /** The sketch table (id, mh) — the one row-local shingling pass every
+    * MinHash path starts from. `carry` columns ride along unchanged
+    * (the streaming operators keep their event time). */
+  def minhashSketches(df: DataFrame, idCol: String, textCol: String,
+                      carry: String*): DataFrame =
+    df.select(Seq(col(idCol).as("id"), minhash(col(textCol)).as("mh")) ++
+      carry.map(col): _*)
+
+  /** Band rows (id, [carry,] band, sig) for a sketch table — band
+    * signature = hash of the band's 4 minhashes. Public so the band
+    * derivation can be dumped for the cross-engine oracle (the banding
+    * shuffle's exact input); the streaming near-dup operators group by
+    * these same rows, carrying `mh` for scoring. */
+  def minhashBands(withMh: DataFrame, carry: String*): DataFrame =
+    withMh.select(Seq(col("id")) ++ carry.map(col) :+
       posexplode(expr(s"transform(sequence(0, ${NumBands - 1}), " +
         s"b -> hash(b, slice(mh, b * $BandSize + 1, $BandSize)))"))
-        .as(Seq("band", "sig")))
+        .as(Seq("band", "sig")): _*)
 
+  /** MinHash-LSH candidate pairs (id_a < id_b, distinct).
+    *
+    * Plan shape (one banding shuffle, no self-join): band rows group by
+    * (band, sig) into a capped member list and pairs explode from the
+    * list in place. Shuffled payload is (band_sig, id) and (id,
+    * sketch); text never moves. */
   def minhashCandidates(withMh: DataFrame): DataFrame = {
     val bands = minhashBands(withMh)
     // bounded map-side-combining aggregate: a degenerate bucket never
@@ -335,37 +305,19 @@ object Dedup {
 
   /** Bucket-size distribution for a corpus — the observability hook for
     * the MaxBucketSize cap (how many buckets / docs are over-cap). */
-  def bucketSizes(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val withMh = df.select(col(idCol).as("id"), minhash(col(textCol)).as("mh"))
-    withMh.select(col("id"),
-      posexplode(expr(s"transform(sequence(0, ${NumBands - 1}), " +
-        s"b -> hash(b, slice(mh, b * $BandSize + 1, $BandSize)))"))
-        .as(Seq("band", "sig")))
+  def bucketSizes(df: DataFrame, idCol: String, textCol: String): DataFrame =
+    minhashBands(minhashSketches(df, idCol, textCol))
       .groupBy(col("band"), col("sig")).agg(count(lit(1)).as("bn"))
-  }
+
+  /** Bucket members (id, simhash) → (id_a, id_b, hamming). */
+  private val simhashBucketPairs = udf((members: Seq[Row]) =>
+    bucketPairsOf(members.map(r => (r.getLong(0), r.getLong(1))))(_._1) {
+      (a, b) => (a._1, b._1, java.lang.Long.bitCount(a._2 ^ b._2))
+    })
 
   /** SimHash near-dup pairs with hamming ≤ maxDist, candidates via the
     * pigeonhole principle: split 64 bits in 4 blocks of 16; any pair at
     * distance ≤3 shares at least one intact block. */
-  /** All i<j pairs of a bucket's (id, simhash) members with their
-    * hamming distance, computed inside the aggregation row. */
-  private val simhashBucketPairs =
-    udf((members: Seq[org.apache.spark.sql.Row]) => {
-      val s = members.map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
-      val out = Vector.newBuilder[(Long, Long, Int)]
-      var i = 0
-      while (i < s.length) {
-        var j = i + 1
-        while (j < s.length) {
-          out += ((s(i)._1, s(j)._1,
-            java.lang.Long.bitCount(s(i)._2 ^ s(j)._2)))
-          j += 1
-        }
-        i += 1
-      }
-      out.result()
-    })
-
   def simhashPairs(df: DataFrame, idCol: String, textCol: String,
                    maxDist: Int = 3): DataFrame = {
     require(maxDist <= 3, "pigeonhole blocks sized for maxDist ≤ 3")
@@ -477,32 +429,12 @@ object Dedup {
   // embedding-cosine near-dup (delegates to Similarity's LSH machinery)
   // ------------------------------------------------------------------
 
-  /** Near-duplicate pairs by embedding cosine ≥ threshold, candidates
-    * via sign-LSH buckets (see [[Similarity.hyperplaneBucket]]).
-    * Buckets over [[MaxBucketSize]] fall back to the linear
-    * member→keeper star (same as the text LSH paths) — observable via
-    * [[embeddingBucketSizes]] — so pair generation never goes quadratic
-    * and giant duplicate clusters are still fully linked. */
-  /** All i<j pairs of a bucket's (id, vector) members with cosine,
-    * scored inside the aggregation row (bucket size is cap-bounded, so
-    * the group carries ≤ MaxBucketSize vectors). */
-  private val embBucketPairs =
-    udf((members: Seq[org.apache.spark.sql.Row]) => {
-      val s = members
-        .map(r => (r.getLong(0), r.getSeq[Float](1))).sortBy(_._1)
-      val out = Vector.newBuilder[(Long, Long, Double)]
-      var i = 0
-      while (i < s.length) {
-        var j = i + 1
-        while (j < s.length) {
-          val c = Similarity.cosineImpl(s(i)._2, s(j)._2)
-          out += ((s(i)._1, s(j)._1,
-            math.floor(c * 1e6 + 0.5) / 1e6)) // round(·, 6), half-up
-          j += 1
-        }
-        i += 1
-      }
-      out.result()
+  /** Bucket members (id, vector) → (id_a, id_b, cosine); the bucket
+    * size is cap-bounded, so the group carries ≤ MaxBucketSize vectors. */
+  private val embBucketPairs = udf((members: Seq[Row]) =>
+    bucketPairsOf(members.map(r => (r.getLong(0), r.getSeq[Float](1))))(_._1) {
+      (a, b) => (a._1, b._1, // round(·, 6), half-up
+        math.floor(Similarity.cosineImpl(a._2, b._2) * 1e6 + 0.5) / 1e6)
     })
 
   /** Plane count sized to the corpus: expected bucket population is
@@ -516,6 +448,12 @@ object Dedup {
       math.ceil(math.log(math.max(1L, corpusSize).toDouble / targetBucket) /
         math.log(2.0)).toInt)
 
+  /** Near-duplicate pairs by embedding cosine ≥ threshold, candidates
+    * via sign-LSH buckets (see [[Similarity.hyperplaneBucket]]).
+    * Buckets over [[MaxBucketSize]] fall back to the linear
+    * member→keeper star (same as the text LSH paths) — observable via
+    * [[embeddingBucketSizes]] — so pair generation never goes quadratic
+    * and giant duplicate clusters are still fully linked. */
   def embeddingNearDups(emb: DataFrame, idCol: String, vecCol: String,
                         threshold: Double = 0.95,
                         planes: Int = Similarity.NumPlanes): DataFrame = {

@@ -85,7 +85,7 @@ object Similarity {
     udf((v: Seq[Float]) => probeBucketsImpl(v, planes)).apply(vec)
 
   /** Two-phase rank step shared by every ANN path: per-partition local
-    * top-k via the bounded [[BoundedCollect.TopKNbrs]] aggregator
+    * top-k via the bounded [[BoundedCollect.topKNbrs]] aggregator
     * (map-side partial aggregation — each task keeps ≤ 2k candidates
     * per query), then a merge of the ≤ k×partitions survivors. The old
     * `row_number().over(partitionBy("query_id"))` window funneled a
@@ -161,10 +161,6 @@ object Similarity {
     best
   }
 
-  private def nearestCells(v: Seq[Float], cs: Array[Array[Float]],
-                           nProbe: Int): Array[Int] =
-    cs.indices.sortBy(c => sqDist(cs(c), v)).take(nProbe).toArray
-
   /** Deterministic Lloyd's k-means over the embedding column.
     * Initialization is the k vectors with the smallest ids (stable, no
     * RNG). Each round is ONE distributed pass: mapPartitions emits
@@ -222,43 +218,38 @@ object Similarity {
     centroids
   }
 
-  /** Corpus cell assignments from the deterministic coarse quantizer —
+  /** Nearest-centroid cell of an embedding column. */
+  private def nearestCellCol(vec: Column,
+                             centroids: Array[Array[Float]]): Column =
+    udf((v: Seq[Float]) => nearestCell(v, centroids)).apply(vec)
+
+  /** The `nProbe` nearest cells of an embedding column, nearest first. */
+  private def probedCellsCol(vec: Column, centroids: Array[Array[Float]],
+                             nProbe: Int): Column =
+    udf((v: Seq[Float]) => centroids.indices
+      .sortBy(c => sqDist(centroids(c), v)).take(nProbe).toArray).apply(vec)
+
+  /** Corpus cell assignments (id, cell) from a trained quantizer —
     * exposed so the s4 oracle can dump them and re-derive candidate
     * generation + scoring + ranking in SQL (the quantizer itself is
     * sbt-verified; re-deriving float-precision argmin cross-engine
-    * would be a tie-break lottery). Same (nCells, iters) ⇒ same
-    * centroids as [[ivfTopK]] (Lloyd's here is RNG-free). */
-  def ivfCells(emb: DataFrame, idCol: String, vecCol: String,
-               nCells: Int = 16, iters: Int = 4): DataFrame =
-    ivfCellsFrom(emb, idCol, vecCol,
-      kmeansCentroids(emb, idCol, vecCol, nCells, iters))
-
-  /** [[ivfCells]] over a precomputed quantizer — callers running
-    * several IVF artifacts over one corpus (cells dump + probes dump +
-    * the query itself) train ONCE and share the centroids instead of
-    * paying three identical deterministic trainings. */
+    * would be a tie-break lottery). Callers running several IVF
+    * artifacts over one corpus (cells dump + probes dump + the query
+    * itself) train ONCE with [[kmeansCentroids]] and share the
+    * centroids. */
   def ivfCellsFrom(emb: DataFrame, idCol: String, vecCol: String,
-                   centroids: Array[Array[Float]]): DataFrame = {
-    val assign = udf((v: Seq[Float]) => nearestCell(v, centroids))
-    emb.select(col(idCol).as("id"), assign(col(vecCol)).as("cell"))
-  }
+                   centroids: Array[Array[Float]]): DataFrame =
+    emb.select(col(idCol).as("id"),
+      nearestCellCol(col(vecCol), centroids).as("cell"))
 
-  /** Per-query probed cells (nearest `nProbe` centroids), for the same
-    * oracle dump as [[ivfCells]]. */
-  def ivfProbes(emb: DataFrame, idCol: String, vecCol: String,
-                queryIds: Seq[Long], nCells: Int = 16, nProbe: Int = 4,
-                iters: Int = 4): DataFrame =
-    ivfProbesFrom(emb, idCol, vecCol, queryIds,
-      kmeansCentroids(emb, idCol, vecCol, nCells, iters), nProbe)
-
-  /** [[ivfProbes]] over a precomputed quantizer. */
+  /** Per-query probed cells (query_id, cells): the nearest `nProbe`
+    * centroids, for the same oracle dump as [[ivfCellsFrom]]. */
   def ivfProbesFrom(emb: DataFrame, idCol: String, vecCol: String,
                     queryIds: Seq[Long], centroids: Array[Array[Float]],
-                    nProbe: Int = 4): DataFrame = {
-    val probes = udf((v: Seq[Float]) => nearestCells(v, centroids, nProbe))
+                    nProbe: Int = 4): DataFrame =
     emb.filter(col(idCol).isin(queryIds: _*))
-      .select(col(idCol).as("query_id"), probes(col(vecCol)).as("cells"))
-  }
+      .select(col(idCol).as("query_id"),
+        probedCellsCol(col(vecCol), centroids, nProbe).as("cells"))
 
   /** IVF approximate top-k: the corpus is partitioned into `nCells`
     * k-means cells (one assignment pass; the coarse quantizer ships in
@@ -278,13 +269,11 @@ object Similarity {
                   queryIds: Seq[Long], k: Int,
                   centroids: Array[Array[Float]],
                   nProbe: Int = 4): DataFrame = {
-    val assign = udf((v: Seq[Float]) => nearestCell(v, centroids))
-    val probes = udf((v: Seq[Float]) => nearestCells(v, centroids, nProbe))
     val corpus = emb.select(col(idCol).as("neighbor_id"),
-      col(vecCol).as("nv"), assign(col(vecCol)).as("cell"))
+      col(vecCol).as("nv"), nearestCellCol(col(vecCol), centroids).as("cell"))
     val q = emb.filter(col(idCol).isin(queryIds: _*))
       .select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-        explode(probes(col(vecCol))).as("cell"))
+        explode(probedCellsCol(col(vecCol), centroids, nProbe)).as("cell"))
     val joined = corpus.join(broadcast(q), Seq("cell"))
       .filter(col("neighbor_id") =!= col("query_id"))
       .select(col("query_id"), col("neighbor_id"),

@@ -37,9 +37,11 @@ object Analyze {
 
   private def cpLen(s: String): Int = s.codePointCount(0, s.length)
 
-  private def cpSlice(s: String, n: Int): String =
-    if (cpLen(s) <= n) s
-    else s.substring(0, s.offsetByCodePoints(0, n))
+  /** The analyzer's `sample_text`: the first 500 code points, stripped
+    * AFTER slicing (app.py:287). */
+  def sampleText(s: String): String = ocrspark.text.Normalize.pyStrip(
+    if (s.length <= 500 || cpLen(s) <= 500) s
+    else s.substring(0, s.offsetByCodePoints(0, 500)))
 
   /** Analysis over a parsed PDF (or parse failure). */
   def analyzePdf(parsed: Either[String, PdfExtract.Doc],
@@ -81,7 +83,7 @@ object Analyze {
         text_density = density,
         processing_recommendation = route,
         confidence = conf,
-        sample_text = ocrspark.text.Normalize.pyStrip(cpSlice(joined, 500)),
+        sample_text = sampleText(joined),
         file_size_mb = sizeMb)
   }
 }

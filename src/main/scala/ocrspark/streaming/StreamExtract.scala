@@ -2,7 +2,9 @@ package ocrspark.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+
+import ocrspark.ops.Dedup
 
 /** Structured Streaming surface (SURVEY.md §2.8).
   *
@@ -40,18 +42,6 @@ object StreamExtract {
         col("text"), col("fields"), col("method"), col("confidence"),
         col("error"))
   }
-
-  /** Run the extraction stream into an in-memory table (tests/demo) or
-    * parquet sink; AvailableNow processes the backlog then stops. */
-  def startExtract(spark: SparkSession, pagesDir: String,
-                   checkpoint: String, queryName: String): StreamingQuery =
-    extractStream(spark, pagesDir).writeStream
-      .outputMode(OutputMode.Append)
-      .format("memory")
-      .queryName(queryName)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
 
   /** Watermarked sliding-window event aggregation with the reference's
     * gated-average shape (A1) per window. */
@@ -174,32 +164,40 @@ object StreamExtract {
     * same event-time-stamped data through the same batch boundaries
     * evicts at identical points on every run, unlike the
     * processing-time variant whose eviction depends on how fast the
-    * replay happens to execute. (The max() guard keeps Spark's
-    * timeout-must-exceed-watermark contract when a key's last-seen
-    * event time lags far behind the stream.) */
+    * replay happens to execute. */
   def dedupFirstSeenEventTime(ttlMs: Long)(
       key: String, rows: Iterator[DocEventTs],
-      state: GroupState[Long]): Iterator[DocEventTs] = {
-    if (state.hasTimedOut) { // watermark passed last-seen + TTL: evict
+      state: GroupState[Long]): Iterator[DocEventTs] =
+    withEventTimeTtl(ttlMs, rows, state)(_.ts.getTime) { batch =>
+      if (state.exists || batch.isEmpty) Iterator.empty
+      else {
+        val keeper = batch.minBy(_.doc_id)
+        state.update(keeper.doc_id)
+        Iterator.single(keeper)
+      }
+    }
+
+  /** Event-time TTL around a state step: on timeout (the watermark
+    * passed the key's last event time + ttlMs) the state is evicted;
+    * otherwise `step` runs on the batch and, if state is held, the
+    * timer is re-armed at the batch's last event time + ttlMs. (The
+    * max() guard keeps Spark's timeout-must-exceed-watermark contract
+    * when a key's last-seen event time lags far behind the stream.) */
+  private def withEventTimeTtl[R, S, O](ttlMs: Long, rows: Iterator[R],
+                                        state: GroupState[S])(
+      eventMs: R => Long)(step: Seq[R] => Iterator[O]): Iterator[O] =
+    if (state.hasTimedOut) {
       state.remove()
       Iterator.empty
     } else {
       val batch = rows.toSeq
-      val out =
-        if (state.exists || batch.isEmpty) Iterator.empty[DocEventTs]
-        else {
-          val keeper = batch.minBy(_.doc_id)
-          state.update(keeper.doc_id)
-          Iterator.single(keeper)
-        }
-      if (state.exists && batch.nonEmpty) {
-        val lastSeen = batch.iterator.map(_.ts.getTime).max
-        state.setTimeoutTimestamp(
-          math.max(lastSeen + ttlMs, state.getCurrentWatermarkMs() + 1))
-      }
+      val out = step(batch)
+      if (state.exists && batch.nonEmpty)
+        state.setTimeoutTimestamp(math.max(
+          batch.iterator.map(eventMs).max + ttlMs,
+          state.getCurrentWatermarkMs() + 1))
       out
     }
-  }
 
   /** Wire the event-time-TTL dedup: same md5-content grouping as
     * [[dedupStream]], but `EventTimeTimeout` + a watermark on `ts`
@@ -209,13 +207,7 @@ object StreamExtract {
     val spark = docs.sparkSession
     import spark.implicits._
     docs.withWatermark("ts", watermarkDelay)
-      .groupByKey { d =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        md.update(if (d.text == null) 0.toByte else 1.toByte)
-        md.digest(if (d.text == null) Array.emptyByteArray
-          else d.text.getBytes("UTF-8"))
-          .map("%02x".format(_)).mkString
-      }
+      .groupByKey(d => contentKey(d.text))
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.EventTimeTimeout())(dedupFirstSeenEventTime(ttlMs))
   }
@@ -230,35 +222,17 @@ object StreamExtract {
                              watermarkDelay: String = "0 seconds"): Dataset[BandPair] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    import ocrspark.ops.Dedup
-    val bands = docs.withWatermark("ts", watermarkDelay)
-      .select(col("doc_id").as("id"), Dedup.minhash(col("text")).as("mh"),
-        col("ts"))
-      .select(col("id"), col("mh"), col("ts"),
-        posexplode(expr(s"transform(sequence(0, ${Dedup.NumBands - 1}), " +
-          s"b -> hash(b, slice(mh, b * ${Dedup.BandSize} + 1, " +
-          s"${Dedup.BandSize})))"))
-          .as(Seq("band", "sig")))
+    bandRows(docs.withWatermark("ts", watermarkDelay).toDF(), "ts")
       .as[(Long, Seq[Long], java.sql.Timestamp, Int, Int)]
-    bands.groupByKey(r => (r._4, r._5))
+      .groupByKey(r => (r._4, r._5))
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.EventTimeTimeout()) {
         (key: (Int, Int),
          rows: Iterator[(Long, Seq[Long], java.sql.Timestamp, Int, Int)],
          state: GroupState[Seq[(Long, Seq[Long])]]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val batch = rows.toSeq
-            val out = nearDupBand(threshold, Dedup.MaxBucketSize, None)(
+          withEventTimeTtl(ttlMs, rows, state)(_._3.getTime) { batch =>
+            nearDupBand(threshold, Dedup.MaxBucketSize, None)(
               key, batch.iterator.map(r => (r._1, r._2)), state)
-            if (batch.nonEmpty) {
-              val lastSeen = batch.iterator.map(_._3.getTime).max
-              state.setTimeoutTimestamp(
-                math.max(lastSeen + ttlMs, state.getCurrentWatermarkMs() + 1))
-            }
-            out
           }
       }
   }
@@ -310,15 +284,28 @@ object StreamExtract {
     }
   }
 
+  /** The rows the near-dup operators group by: (id, mh, [carry,] band,
+    * sig) from the batch sketch projection and band derivation
+    * ([[Dedup.minhashSketches]], [[Dedup.minhashBands]]), carrying the
+    * sketch for in-bucket scoring. */
+  private[streaming] def bandRows(docs: DataFrame, carry: String*): DataFrame =
+    Dedup.minhashBands(Dedup.minhashSketches(docs, "doc_id", "text", carry: _*),
+      "mh" +: carry: _*)
+
+  /** Processing-time timeouts only when an idle TTL is set. */
+  private def processingTimeout(ttlMs: Option[Long]): GroupStateTimeout =
+    if (ttlMs.isDefined) GroupStateTimeout.ProcessingTimeTimeout()
+    else GroupStateTimeout.NoTimeout()
+
   /** Streaming MinHash near-dup: the batch banding pipeline
     * ([[ocrspark.ops.Dedup.minhashPairs]]) re-expressed as per-bucket
     * `flatMapGroupsWithState`. Sketching and band-signature derivation
-    * are the SAME expressions as batch (one row-local sketch UDF, then
-    * 16 (band, sig) keys per doc); the shuffle carries (band_sig, id,
-    * sketch) and the state store holds ≤ MaxBucketSize sketches per
-    * bucket. A pair colliding in k bands is emitted once per band (the
-    * `band` column disambiguates); consumers aggregate by (id_a, id_b)
-    * exactly as the batch path's distinct() does.
+    * are the batch functions themselves ([[bandRows]]: one row-local
+    * sketch UDF, then 16 (band, sig) keys per doc); the shuffle carries
+    * (band_sig, id, sketch) and the state store holds ≤ MaxBucketSize
+    * sketches per bucket. A pair colliding in k bands is emitted once
+    * per band (the `band` column disambiguates); consumers aggregate by
+    * (id_a, id_b) exactly as the batch path's distinct() does.
     *
     * `ttlMs`: idle-bucket eviction TTL (see [[nearDupBand]]) — without
     * it, total state-store size grows with distinct docs forever. */
@@ -327,24 +314,25 @@ object StreamExtract {
                     ttlMs: Option[Long] = None): Dataset[BandPair] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    import ocrspark.ops.Dedup
-    val bands = docs
-      .select(col("doc_id").as("id"), Dedup.minhash(col("text")).as("mh"))
-      .select(col("id"), col("mh"),
-        posexplode(expr(s"transform(sequence(0, ${Dedup.NumBands - 1}), " +
-          s"b -> hash(b, slice(mh, b * ${Dedup.BandSize} + 1, " +
-          s"${Dedup.BandSize})))"))
-          .as(Seq("band", "sig")))
-      .as[(Long, Seq[Long], Int, Int)]
-    bands.groupByKey(r => (r._3, r._4))
-      .flatMapGroupsWithState(OutputMode.Append,
-        ttlMs.map(_ => GroupStateTimeout.ProcessingTimeTimeout())
-          .getOrElse(GroupStateTimeout.NoTimeout())) {
+    bandRows(docs.toDF()).as[(Long, Seq[Long], Int, Int)]
+      .groupByKey(r => (r._3, r._4))
+      .flatMapGroupsWithState(OutputMode.Append, processingTimeout(ttlMs)) {
         (key: (Int, Int), rows: Iterator[(Long, Seq[Long], Int, Int)],
          state: GroupState[Seq[(Long, Seq[Long])]]) =>
           nearDupBand(threshold, Dedup.MaxBucketSize, ttlMs)(
             key, rows.map(r => (r._1, r._2)), state)
       }
+  }
+
+  /** Content key of a document: md5 hex of a null-marker byte + the
+    * UTF-8 text, so a null-text doc never collides with an empty-string
+    * doc (batch md5(cast binary) keeps null and "" as distinct groups;
+    * streaming matches that). */
+  private def contentKey(text: String): String = {
+    val md = java.security.MessageDigest.getInstance("MD5")
+    md.update(if (text == null) 0.toByte else 1.toByte)
+    md.digest(if (text == null) Array.emptyByteArray else text.getBytes("UTF-8"))
+      .map("%02x".format(_)).mkString
   }
 
   /** Wire the stateful dedup over a stream of documents. The group key
@@ -355,18 +343,8 @@ object StreamExtract {
                   ttlMs: Option[Long] = None): Dataset[DocEvent] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    docs.groupByKey { d =>
-        // null-marker prefix byte: a null-text doc must NOT collide
-        // with an empty-string doc (batch md5(cast binary) keeps null
-        // and "" as distinct groups; streaming matches that)
-        val md = java.security.MessageDigest.getInstance("MD5")
-        md.update(if (d.text == null) 0.toByte else 1.toByte)
-        md.digest(if (d.text == null) Array.emptyByteArray
-          else d.text.getBytes("UTF-8"))
-          .map("%02x".format(_)).mkString
-      }
+    docs.groupByKey(d => contentKey(d.text))
       .flatMapGroupsWithState(OutputMode.Append,
-        ttlMs.map(_ => GroupStateTimeout.ProcessingTimeTimeout())
-          .getOrElse(GroupStateTimeout.NoTimeout()))(dedupFirstSeen(ttlMs))
+        processingTimeout(ttlMs))(dedupFirstSeen(ttlMs))
   }
 }

@@ -492,10 +492,6 @@ object Normalize {
     pyStrip(t)
   }
 
-  /** Reference language whitelist (app.py:912-913): unknown → 'spa'. */
-  def validateLang(lang: String): String =
-    if (lang == "spa" || lang == "eng" || lang == "spa+eng") lang else "spa"
-
   /** Language-aware entry point (SURVEY.md §2.9): the reference's OCR
     * languages ('spa','eng','spa+eng' — and 'es'/'en' ISO aliases from
     * the lake schema) get the full legal chain, mirroring the reference

@@ -337,6 +337,84 @@ class StreamSpec extends AnyFunSuite {
     assert(run1 == run2, s"replay diverged: $run1 vs $run2")
   }
 
+  test("event-time near-dup: planted pair emitted, evicted bucket not re-paired, replay-deterministic") {
+    import spark.implicits._
+    val t0 = 1700000000000L
+    val ttl = 5000L
+    val base = ("los documentos administrativos del expediente se archivan " +
+      "por orden cronologico en la mesa de partes principal ") * 5
+    val mutated = base.replace("cronologico", "alfabetico")
+    def doc(id: Long, text: String, dt: Long) =
+      StreamExtract.DocEventTs(id, text, new java.sql.Timestamp(t0 + dt))
+    // batch 1 plants the pair (10, 11); batch 2 moves the watermark to
+    // t0+20s, so batch 3 evicts their buckets (timers at t0+5s); doc 40,
+    // a copy of doc 10 arriving after that, must start fresh buckets
+    val batches = Seq(
+      Seq(doc(10, base, 0), doc(11, mutated, 0),
+        doc(12, "el clima de la sierra cambia durante la temporada de lluvias", 0)),
+      Seq(doc(20, "et texto W sin relacion con los demas documentos", 20000)),
+      Seq(doc(30, "et texto X tampoco se parece a ningun otro", 40000)),
+      Seq(doc(40, base, 41000)))
+
+    def replay(): Seq[StreamExtract.BandPair] = {
+      val dir = Files.createTempDirectory("ndupet_docs").toString
+      val ckpt = Files.createTempDirectory("ndupet_ckpt").toString
+      val sink = Files.createTempDirectory("ndupet_sink").toString
+      batches.foreach { docs =>
+        docs.toDS().write.mode("append").parquet(dir)
+        val stream = spark.readStream
+          .schema(implicitly[org.apache.spark.sql.Encoder[StreamExtract.DocEventTs]].schema)
+          .parquet(dir).as[StreamExtract.DocEventTs]
+        val q = StreamExtract.nearDupStreamEventTime(stream, 0.7, ttlMs = ttl)
+          .writeStream
+          .outputMode("append").format("parquet")
+          .option("path", sink).option("checkpointLocation", ckpt)
+          .trigger(Trigger.AvailableNow()).start()
+        q.awaitTermination()
+      }
+      spark.read.parquet(sink).as[StreamExtract.BandPair].collect().toSeq
+        .sortBy(p => (p.id_a, p.id_b, p.band))
+    }
+
+    val run1 = replay()
+    assert(run1.nonEmpty && run1.map(p => (p.id_a, p.id_b)).toSet == Set((10L, 11L)),
+      s"only the planted pair may be emitted: $run1")
+    assert(run1.forall(_.est_jaccard >= 0.7))
+    val run2 = replay()
+    assert(run1 == run2, s"replay diverged: $run1 vs $run2")
+  }
+
+  test("streaming near-dup groups by the batch band keys; bucketSizes counts every band row") {
+    import spark.implicits._
+    import ocrspark.ops.Dedup
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+      .select($"doc_id", $"text")
+    val dir = Files.createTempDirectory("bands_docs").toString + "/docs"
+    docs.write.parquet(dir)
+    val stream = spark.readStream
+      .schema(implicitly[org.apache.spark.sql.Encoder[StreamExtract.DocEvent]].schema)
+      .parquet(dir)
+    val q = StreamExtract.bandRows(stream).select($"id", $"band", $"sig")
+      .writeStream.outputMode("append").format("memory")
+      .queryName("stream_band_rows")
+      .option("checkpointLocation", Files.createTempDirectory("bands_ckpt").toString)
+      .trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    val streamed = spark.table("stream_band_rows").as[(Long, Int, Int)].collect()
+    val batch = Dedup.minhashBands(Dedup.minhashSketches(docs, "doc_id", "text"))
+      .as[(Long, Int, Int)].collect()
+    val nDocs = docs.count()
+    assert(batch.length == Dedup.NumBands * nDocs)
+    assert(streamed.sorted.toSeq == batch.sorted.toSeq,
+      "streaming band keys differ from Dedup.minhashBands")
+
+    val sizes = Dedup.bucketSizes(docs, "doc_id", "text")
+      .agg(sum($"bn"), count(lit(1))).as[(Long, Long)].head()
+    assert(sizes._1 == Dedup.NumBands * nDocs,
+      s"bucket sizes sum to ${sizes._1}, expected ${Dedup.NumBands} × $nDocs")
+    assert(sizes._2 == batch.map(r => (r._2, r._3)).distinct.length)
+  }
+
   test("event-time TTL state fn: timer anchored to last event time, not the clock") {
     val state = new TestGroupState[Long]
     val ts = new java.sql.Timestamp(1700000000000L)
