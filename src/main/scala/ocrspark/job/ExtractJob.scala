@@ -3,6 +3,8 @@ package ocrspark.job
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import ocrspark.route.Analyze
+
 /** The end-to-end extraction job over the `pages` lake table —
   * partitioning, skew handling, and the single-projection extraction
   * stage (SURVEY.md §3.1 Spark restatement, §4 O3-O5).
@@ -12,12 +14,12 @@ import org.apache.spark.sql.functions._
   *     bucketing; the bucket is the unit of lineage + resume (north
   *     rule). nBuckets scales with cluster size, not data size per se
   *     (target ≈ 2-4 tasks per core at full fleet).
-  *   - `salt = pmod(xxhash64(url, warc_ts), nSalts)` folded into the
-  *     repartition key: per-row extraction cost varies ~100× between a
-  *     5-page PDF and a nav-only HTML shell, and host-locality in crawl
+  *   - `salt = pmod(xxhash64(url, warc_ts), DefaultSalts)` folded into
+  *     the repartition key: per-row extraction cost varies ~100× between
+  *     a 5-page PDF and a nav-only HTML shell, and host-locality in crawl
   *     order makes byte-size per bucket skewed; the salt spreads each
-  *     bucket across `nSalts` tasks while `partitionBy(bucket)` still
-  *     lands files under one bucket dir for manifest commits.
+  *     bucket across `DefaultSalts` tasks while `partitionBy(bucket)`
+  *     still lands files under one bucket dir for manifest commits.
   *   - AQE + skew-join stay enabled as belt-and-braces (session conf).
   *   - The extraction itself is ONE UDF projection: no intermediate
   *     wide rows, no exploded page shuffle — pages stay inside their
@@ -45,9 +47,6 @@ object ExtractJob {
   def bucketCol(nBuckets: Int): Column =
     pmod(xxhash64(col("url")), lit(nBuckets)).cast("int")
 
-  def saltCol(nSalts: Int): Column =
-    pmod(xxhash64(col("url"), col("warc_ts")), lit(nSalts)).cast("int")
-
   /** The map-side extraction projection: the extract UDF, `bucket` and
     * the result fields, with no exchange. [[run]] and the streaming
     * extraction both start from it. */
@@ -67,8 +66,9 @@ object ExtractJob {
         col("r.error").as("error"))
 
   /** pages(url, warc_ts, html, text, lang) → extracted table
-    * (FIXTURES.md §1.2). `repartitionTasks` sizes the shuffle: pass
-    * cores×2..4 locally; on a real cluster, executors×cores×2.
+    * (FIXTURES.md §1.2). The shuffle is `spark.sql.shuffle.partitions`
+    * wide, a deployment setting: cores×2..4 locally; on a real cluster,
+    * executors×cores×2.
     *
     * Stage order matters at 100 TB: extraction runs in the SCAN stage
     * (map-side, before any exchange), so the one shuffle carries only
@@ -77,16 +77,13 @@ object ExtractJob {
     * write. Per-task input balance comes from parquet split sizing
     * (`spark.sql.files.maxPartitionBytes`); the salt balances the write
     * so one hot bucket cannot serialize into one reducer. */
-  def run(pages: DataFrame, nBuckets: Int = DefaultBuckets,
-          nSalts: Int = DefaultSalts,
-          repartitionTasks: Option[Int] = None): DataFrame = {
-    val parts = repartitionTasks.getOrElse(
-      pages.sparkSession.sessionState.conf.numShufflePartitions)
+  def run(pages: DataFrame, nBuckets: Int = DefaultBuckets): DataFrame =
     extracted(pages, nBuckets)
-      .withColumn("salt", saltCol(nSalts))
-      .repartition(parts, col("bucket"), col("salt"))
+      .withColumn("salt",
+        pmod(xxhash64(col("url"), col("warc_ts")), lit(DefaultSalts)).cast("int"))
+      .repartition(pages.sparkSession.sessionState.conf.numShufflePartitions,
+        col("bucket"), col("salt"))
       .drop("salt")
-  }
 
   /** The routing-analysis-only stage as a column (cheap: 3-page PDF
     * sample, no normalize/fields — Extract.analyzeDocument). */
@@ -116,18 +113,20 @@ object ExtractJob {
   }
 
   /** Stage counters for the metrics table — the Spark analog of the
-    * reference's batch summary (app.py:1146-1163). One tiny aggregate
-    * row set; partial aggregation makes this map-side cheap. */
-  def metrics(extracted: DataFrame): DataFrame = {
-    extracted.agg(
+    * reference's batch summary (app.py:1146-1163), one row per group of
+    * `by` (one row in all when `by` is empty). Every `LongType` column is
+    * a counter that sums across groups; the lake writer records them
+    * all, so a new counter is added here and nowhere else. Partial
+    * aggregation makes this map-side cheap. */
+  def metrics(extracted: DataFrame, by: Column*): DataFrame =
+    extracted.groupBy(by: _*).agg(
       count(lit(1)).as("docs_in"),
       sum(when(col("error").isNull, 1L).otherwise(0L)).as("successful"),
       sum(when(col("error").isNotNull, 1L).otherwise(0L)).as("failed"),
-      sum(when(col("route") === "text_extraction", 1L).otherwise(0L)).as("route_text"),
-      sum(when(col("route") === "hybrid", 1L).otherwise(0L)).as("route_hybrid"),
-      sum(when(col("route") === "ocr", 1L).otherwise(0L)).as("route_ocr"),
+      sum(when(col("route") === Analyze.RouteText, 1L).otherwise(0L)).as("route_text"),
+      sum(when(col("route") === Analyze.RouteHybrid, 1L).otherwise(0L)).as("route_hybrid"),
+      sum(when(col("route") === Analyze.RouteOcr, 1L).otherwise(0L)).as("route_ocr"),
       sum(when(col("method") === Extract.MethodHtml, 1L).otherwise(0L)).as("route_html"),
       sum(col("pages").cast("long")).as("total_pages"),
       avg(col("confidence")).as("avg_confidence"))
-  }
 }

@@ -2,6 +2,7 @@ package ocrspark.job
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 import ocrspark.lake.LakeTable
 
@@ -26,8 +27,7 @@ object IncrementalExtract {
                      noop: Boolean)
 
   def run(spark: SparkSession, pages: DataFrame, table: LakeTable,
-          nBuckets: Int = ExtractJob.DefaultBuckets,
-          nSalts: Int = ExtractJob.DefaultSalts): Summary = {
+          nBuckets: Int = ExtractJob.DefaultBuckets): Summary = {
     val committed = table.committedBuckets
     val bucketed = pages.withColumn("bucket", ExtractJob.bucketCol(nBuckets))
 
@@ -42,45 +42,35 @@ object IncrementalExtract {
 
     val nextId = table.nextSnapshotId
     val staging = table.stagingDir(nextId)
-    val extracted = ExtractJob.run(todo, nBuckets, nSalts)
+    val extracted = ExtractJob.run(todo, nBuckets)
     extracted.write.mode("overwrite").partitionBy("bucket").parquet(staging)
 
-    // Per-bucket stats from the staged parquet (metadata-only count +
-    // on-disk bytes) — never recomputes the pipeline.
     val staged = LakeTable.stagedEntries(staging)
     if (staged.isEmpty) {
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(staging))
       return Summary(table.currentSnapshotId.getOrElse(0L), 0, 0L,
         committed.size, noop = true)
     }
-    // ONE job for all per-bucket counts (bucket is the partition column,
-    // so this reads footer metadata + directory names only) — a per-
-    // bucket count() loop would be a driver-serial bottleneck at 100k
-    // buckets.
-    val counts = spark.read.parquet(staging)
-      .groupBy(col("bucket")).count()
-      .collect()
-      .map(r => r.getAs[Int]("bucket") -> r.getAs[Long]("count"))
-      .toMap
+    // The staged snapshot is read once, by one aggregate grouped by
+    // bucket: its `docs_in` is the lineage row count, and its counters
+    // summed over buckets are the stage's metrics (north rule: every
+    // stage emits lineage rows plus counters). Column pruning keeps
+    // text out of the scan; the schema of the DataFrame just written
+    // spares a parquet schema-inference job.
+    val perBucket = ExtractJob.metrics(
+      spark.read.schema(extracted.schema).parquet(staging), col("bucket"))
+    val rows = perBucket.collect()
+    val counts = rows.map(r => r.getAs[Int]("bucket") -> r.getAs[Long]("docs_in")).toMap
     val entries = staged.map { case (b, files) =>
       table.BucketEntry(b, files.map(_.getAbsolutePath),
         counts.getOrElse(b, 0L), files.map(_.length()).sum)
     }
     val snap = table.commit(entries)
 
-    // per-stage counters into the metrics table (north rule: every
-    // stage emits lineage rows plus counters). Computed from the staged
-    // parquet with column pruning — text is never rescanned.
-    val m = ExtractJob.metrics(spark.read.parquet(staging)).collect()(0)
-    table.writeMetrics(spark, snap, "extract", Seq(
-      "docs_in" -> m.getAs[Long]("docs_in"),
-      "successful" -> m.getAs[Long]("successful"),
-      "failed" -> m.getAs[Long]("failed"),
-      "route_text" -> m.getAs[Long]("route_text"),
-      "route_hybrid" -> m.getAs[Long]("route_hybrid"),
-      "route_ocr" -> m.getAs[Long]("route_ocr"),
-      "route_html" -> m.getAs[Long]("route_html"),
-      "total_pages" -> m.getAs[Long]("total_pages"),
+    val counters = perBucket.schema.fields.toSeq
+      .filter(_.dataType == LongType)
+      .map(f => f.name -> rows.map(_.getAs[Long](f.name)).sum)
+    table.writeMetrics(spark, snap, "extract", counters ++ Seq(
       "buckets_written" -> entries.size.toLong,
       "buckets_skipped" -> committed.size.toLong))
 

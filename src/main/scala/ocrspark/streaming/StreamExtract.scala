@@ -1,6 +1,6 @@
 package ocrspark.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -31,12 +31,7 @@ object StreamExtract {
     * the batch job's map-side projection (`ExtractJob.extracted`) — one
     * definition, two execution modes. */
   def extractStream(spark: SparkSession, pagesDir: String): DataFrame = {
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("url", org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("warc_ts", org.apache.spark.sql.types.TimestampType),
-      org.apache.spark.sql.types.StructField("html", org.apache.spark.sql.types.BinaryType),
-      org.apache.spark.sql.types.StructField("text", org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("lang", org.apache.spark.sql.types.StringType)))
+    val schema = Encoders.product[ocrspark.model.PageRow].schema
     ocrspark.job.ExtractJob.extracted(spark.readStream.schema(schema).parquet(pagesDir))
       .select(col("url"), col("warc_ts"), col("lang"), col("bucket"),
         col("text"), col("fields"), col("method"), col("confidence"),

@@ -131,6 +131,17 @@ class PipelineSpec extends AnyFunSuite {
     assert(m.getAs[Long]("docs_in") == 500L)
     assert(m.getAs[Long]("successful") + m.getAs[Long]("failed") == 500L)
     assert(m.getAs[Long]("failed") == extracted.filter($"error".isNotNull).count())
+    // grouped by bucket: one row per bucket, each counter sums to the
+    // global one
+    val byBucket = ExtractJob.metrics(extracted, $"bucket")
+    val rows = byBucket.collect()
+    assert(rows.length.toLong == extracted.select($"bucket").distinct().count())
+    val counters = m.schema.fields
+      .filter(_.dataType == org.apache.spark.sql.types.LongType).map(_.name)
+    assert(counters.contains("docs_in"))
+    counters.foreach { k =>
+      assert(rows.map(_.getAs[Long](k)).sum == m.getAs[Long](k), k)
+    }
   }
 
   test("report UDF survives a null-html row (size coalesces to 0, report non-null)") {

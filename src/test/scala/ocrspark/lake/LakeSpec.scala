@@ -87,6 +87,37 @@ class LakeSpec extends AnyFunSuite {
     assert(diff == 0L)
   }
 
+  test("snapshot counters and lineage reconcile with the rows read back") {
+    import spark.implicits._
+    val t = freshTable()
+    val nB = ExtractJob.DefaultBuckets
+    IncrementalExtract.run(spark, pages.filter(ExtractJob.bucketCol(nB) < 20), t)
+    IncrementalExtract.run(spark, pages, t)
+    val readBack = t.read(spark).withColumn("bucket", ExtractJob.bucketCol(nB))
+    val wrote = t.snapshot(2).buckets.filter(_.added == 2L).map(_.bucket)
+    assert(wrote.nonEmpty)
+    val counters = t.metrics(spark)
+      .filter($"snapshot_id" === 2L && $"stage" === "extract")
+      .select($"counter", $"value").as[(String, Long)].collect().toMap
+    val direct = ExtractJob.metrics(readBack.filter($"bucket".isin(wrote: _*)))
+    val longCounters = direct.schema.fields
+      .filter(_.dataType == org.apache.spark.sql.types.LongType).map(_.name)
+    val expected = direct.collect()(0)
+    assert(counters.keySet ==
+      longCounters.toSet ++ Set("buckets_written", "buckets_skipped"))
+    longCounters.foreach { k =>
+      assert(counters(k) == expected.getAs[Long](k), k)
+    }
+    assert(counters("buckets_written") == wrote.size.toLong)
+    assert(counters("buckets_skipped") == t.snapshot(1).buckets.size.toLong)
+    // every lineage n_docs is its bucket's read-back row count
+    val perBucket = readBack.groupBy($"bucket").count()
+      .as[(Int, Long)].collect().toMap
+    val lineage = t.lineage(spark).select($"bucket", $"n_docs")
+      .as[(Int, Long)].collect().toMap
+    assert(lineage == perBucket)
+  }
+
   test("uncommitted staged files are invisible to readers") {
     val t = freshTable()
     IncrementalExtract.run(spark, pages, t)
