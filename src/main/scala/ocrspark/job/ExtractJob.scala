@@ -113,20 +113,24 @@ object ExtractJob {
   }
 
   /** Stage counters for the metrics table — the Spark analog of the
-    * reference's batch summary (app.py:1146-1163), one row per group of
-    * `by` (one row in all when `by` is empty). Every `LongType` column is
-    * a counter that sums across groups; the lake writer records them
-    * all, so a new counter is added here and nowhere else. Partial
-    * aggregation makes this map-side cheap. */
+    * reference's batch summary (app.py:1146-1163). Each is a `LongType`
+    * aggregate that sums across groups; [[metrics]] aggregates them and
+    * the lake writer observes them on its staged write, so a new counter
+    * is added here and nowhere else. */
+  val counters: Seq[Column] = Seq(
+    count(lit(1)).as("docs_in"),
+    sum(when(col("error").isNull, 1L).otherwise(0L)).as("successful"),
+    sum(when(col("error").isNotNull, 1L).otherwise(0L)).as("failed"),
+    sum(when(col("route") === Analyze.RouteText, 1L).otherwise(0L)).as("route_text"),
+    sum(when(col("route") === Analyze.RouteHybrid, 1L).otherwise(0L)).as("route_hybrid"),
+    sum(when(col("route") === Analyze.RouteOcr, 1L).otherwise(0L)).as("route_ocr"),
+    sum(when(col("method") === Extract.MethodHtml, 1L).otherwise(0L)).as("route_html"),
+    sum(col("pages").cast("long")).as("total_pages"))
+
+  /** The counters plus `avg_confidence`, one row per group of `by` (one
+    * row in all when `by` is empty). Partial aggregation makes this
+    * map-side cheap. */
   def metrics(extracted: DataFrame, by: Column*): DataFrame =
-    extracted.groupBy(by: _*).agg(
-      count(lit(1)).as("docs_in"),
-      sum(when(col("error").isNull, 1L).otherwise(0L)).as("successful"),
-      sum(when(col("error").isNotNull, 1L).otherwise(0L)).as("failed"),
-      sum(when(col("route") === Analyze.RouteText, 1L).otherwise(0L)).as("route_text"),
-      sum(when(col("route") === Analyze.RouteHybrid, 1L).otherwise(0L)).as("route_hybrid"),
-      sum(when(col("route") === Analyze.RouteOcr, 1L).otherwise(0L)).as("route_ocr"),
-      sum(when(col("method") === Extract.MethodHtml, 1L).otherwise(0L)).as("route_html"),
-      sum(col("pages").cast("long")).as("total_pages"),
-      avg(col("confidence")).as("avg_confidence"))
+    extracted.groupBy(by: _*).agg(counters.head,
+      counters.tail :+ avg(col("confidence")).as("avg_confidence"): _*)
 }

@@ -1,8 +1,9 @@
 package ocrspark.job
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Observation, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
 
 import ocrspark.lake.LakeTable
 
@@ -11,14 +12,19 @@ import ocrspark.lake.LakeTable
   *
   * Mechanics (SURVEY.md §2.3, §2.8, §4 O12):
   *   1. input partitions = url-hash buckets;
-  *   2. LEFT ANTI join input buckets against the committed lineage of
-  *      the current snapshot (broadcast — lineage is tiny);
+  *   2. drop the input buckets the current snapshot already lists (a
+  *      plain `isin` filter on the bucket column — the committed set is
+  *      a few ints read from the manifest, so no join is needed);
   *   3. extract only the remaining buckets;
-  *   4. stage files under data/snap-(next)/bucket=N via partitionBy;
-  *   5. commit manifest + flip the _current pointer atomically.
+  *   4. stage files under data/snap-(next)/bucket=N via partitionBy,
+  *      observing the stage counters and per-bucket row counts on the
+  *      write itself (no re-read of the staged files);
+  *   5. commit the manifest — buckets and counters together — and flip
+  *      the _current pointer atomically.
   * A crash before (5) leaves staged files invisible to readers; rerun
-  * re-stages only uncommitted buckets. Re-running a fully committed
-  * table is a no-op (idempotence).
+  * re-stages only uncommitted buckets. Every readable snapshot carries
+  * its counters. Re-running a fully committed table is a no-op
+  * (idempotence).
   */
 object IncrementalExtract {
 
@@ -26,24 +32,36 @@ object IncrementalExtract {
                      docsProcessed: Long, skippedBuckets: Int,
                      noop: Boolean)
 
+  /** Row count per bucket id, as an array indexed by bucket. */
+  private class BucketDocs(nBuckets: Int) extends Aggregator[Int, Array[Long], Array[Long]] {
+    def zero: Array[Long] = new Array[Long](nBuckets)
+    def reduce(b: Array[Long], bucket: Int): Array[Long] = { b(bucket) += 1; b }
+    def merge(x: Array[Long], y: Array[Long]): Array[Long] = {
+      var i = 0
+      while (i < nBuckets) { x(i) += y(i); i += 1 }
+      x
+    }
+    def finish(b: Array[Long]): Array[Long] = b
+    def bufferEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
+    def outputEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
+  }
+
   def run(spark: SparkSession, pages: DataFrame, table: LakeTable,
           nBuckets: Int = ExtractJob.DefaultBuckets): Summary = {
     val committed = table.committedBuckets
     val bucketed = pages.withColumn("bucket", ExtractJob.bucketCol(nBuckets))
-
-    // resume anti-join: input buckets minus committed lineage buckets
     val todo =
       if (committed.isEmpty) bucketed
-      else {
-        import spark.implicits._
-        val committedDf = committed.toSeq.toDF("bucket")
-        bucketed.join(broadcast(committedDf), Seq("bucket"), "left_anti")
-      }
+      else bucketed.filter(!col("bucket").isin(committed.toSeq: _*))
 
     val nextId = table.nextSnapshotId
     val staging = table.stagingDir(nextId)
-    val extracted = ExtractJob.run(todo, nBuckets)
-    extracted.write.mode("overwrite").partitionBy("bucket").parquet(staging)
+    val observed = Observation()
+    val bucketDocs = udaf(new BucketDocs(nBuckets), Encoders.scalaInt)
+    ExtractJob.run(todo, nBuckets)
+      .observe(observed, ExtractJob.counters.head,
+        ExtractJob.counters.tail :+ bucketDocs(col("bucket")).as("bucket_docs"): _*)
+      .write.mode("overwrite").partitionBy("bucket").parquet(staging)
 
     val staged = LakeTable.stagedEntries(staging)
     if (staged.isEmpty) {
@@ -51,29 +69,17 @@ object IncrementalExtract {
       return Summary(table.currentSnapshotId.getOrElse(0L), 0, 0L,
         committed.size, noop = true)
     }
-    // The staged snapshot is read once, by one aggregate grouped by
-    // bucket: its `docs_in` is the lineage row count, and its counters
-    // summed over buckets are the stage's metrics (north rule: every
-    // stage emits lineage rows plus counters). Column pruning keeps
-    // text out of the scan; the schema of the DataFrame just written
-    // spares a parquet schema-inference job.
-    val perBucket = ExtractJob.metrics(
-      spark.read.schema(extracted.schema).parquet(staging), col("bucket"))
-    val rows = perBucket.collect()
-    val counts = rows.map(r => r.getAs[Int]("bucket") -> r.getAs[Long]("docs_in")).toMap
+    val m = observed.get
+    val docs = m("bucket_docs").asInstanceOf[scala.collection.Seq[Long]]
     val entries = staged.map { case (b, files) =>
-      table.BucketEntry(b, files.map(_.getAbsolutePath),
-        counts.getOrElse(b, 0L), files.map(_.length()).sum)
+      table.BucketEntry(b, files.map(_.getAbsolutePath), docs(b),
+        files.map(_.length()).sum)
     }
-    val snap = table.commit(entries)
-
-    val counters = perBucket.schema.fields.toSeq
-      .filter(_.dataType == LongType)
-      .map(f => f.name -> rows.map(_.getAs[Long](f.name)).sum)
-    table.writeMetrics(spark, snap, "extract", counters ++ Seq(
+    val counters = (m - "bucket_docs").toSeq.sortBy(_._1)
+      .map { case (k, v) => k -> v.asInstanceOf[Long] } ++ Seq(
       "buckets_written" -> entries.size.toLong,
-      "buckets_skipped" -> committed.size.toLong))
-
+      "buckets_skipped" -> committed.size.toLong)
+    val snap = table.commit(entries, Map("extract" -> counters))
     Summary(snap, entries.size, entries.map(_.nDocs).sum, committed.size,
       noop = false)
   }

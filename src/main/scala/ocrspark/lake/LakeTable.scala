@@ -2,7 +2,7 @@ package ocrspark.lake
 
 import java.io.File
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.sql.Timestamp
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
@@ -12,13 +12,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Iceberg-shaped snapshot/commit layer over Parquet (SURVEY.md §1.2):
   * no Iceberg runtime exists in this sandbox, so the semantics the north
   * rule needs — atomic snapshot commits listing finished partitions,
-  * monotonically numbered snapshots, resume = anti-join of input
-  * partitions against the last committed manifest — are implemented as
+  * monotonically numbered snapshots, resume = skip the input
+  * partitions the last committed manifest lists — are implemented as
   * a thin manifest layer. Same contract, swappable for real Iceberg.
   *
   * Layout under `root/`:
   *   data/snap-<id>/bucket=<b>/part-*.parquet   (staged by writer)
-  *   snapshots/snapshot-<id>.json               (manifest: bucket → files)
+  *   snapshots/snapshot-<id>.json               (manifest: bucket → files,
+  *                                               plus a `metrics` object:
+  *                                               stage → counter → value)
   *   _current                                   (atomic pointer, rename)
   *
   * Readers only ever see files listed in the manifest of `_current`;
@@ -36,8 +38,11 @@ class LakeTable(val root: String) {
     * preserved across commits so lineage shows true provenance. */
   case class BucketEntry(bucket: Int, files: Seq[String], nDocs: Long,
                          nBytes: Long, added: Long = 0L)
+  /** `metrics`: stage → counters, this snapshot's own (not inherited
+    * from its parent — Iceberg's snapshot `summary`). */
   case class Snapshot(id: Long, parent: Long, committedTs: Long,
-                      buckets: Seq[BucketEntry])
+                      buckets: Seq[BucketEntry],
+                      metrics: Map[String, Seq[(String, Long)]] = Map.empty)
 
   def currentSnapshotId: Option[Long] =
     if (!currentFile.exists()) None
@@ -57,14 +62,20 @@ class LakeTable(val root: String) {
         b.get("n_docs").asLong(), b.get("n_bytes").asLong(),
         b.get("added").asLong())
     }
+    val metrics = Map.newBuilder[String, Seq[(String, Long)]]
+    Option(node.get("metrics")).foreach { _.properties().forEach { st =>
+      val counters = Vector.newBuilder[(String, Long)]
+      st.getValue.properties().forEach(c => counters += c.getKey -> c.getValue.asLong())
+      metrics += st.getKey -> counters.result()
+    } }
     Snapshot(node.get("id").asLong(), node.get("parent").asLong(),
-      node.get("committed_ts").asLong(), out.result())
+      node.get("committed_ts").asLong(), out.result(), metrics.result())
   }
 
   def currentSnapshot: Option[Snapshot] = currentSnapshotId.map(snapshot)
 
-  /** Buckets present in the current snapshot — the resume anti-join's
-    * right side. */
+  /** Buckets present in the current snapshot — the ones a resumed run
+    * skips. */
   def committedBuckets: Set[Int] =
     currentSnapshot.map(_.buckets.map(_.bucket).toSet).getOrElse(Set.empty)
 
@@ -74,10 +85,13 @@ class LakeTable(val root: String) {
 
   def nextSnapshotId: Long = currentSnapshotId.getOrElse(0L) + 1
 
-  /** Atomically commit: parent's surviving buckets + the new entries.
-    * New entries shadow a parent bucket of the same id (overwrite
-    * semantics per partition). */
-  def commit(newEntries: Seq[BucketEntry], ts: Long = System.currentTimeMillis()): Long = synchronized {
+  /** Atomically commit: parent's surviving buckets + the new entries,
+    * with `metrics` (stage → counters) in the same manifest. New entries
+    * shadow a parent bucket of the same id (overwrite semantics per
+    * partition). */
+  def commit(newEntries: Seq[BucketEntry],
+             metrics: Map[String, Seq[(String, Long)]] = Map.empty,
+             ts: Long = System.currentTimeMillis()): Long = synchronized {
     val parentId = currentSnapshotId.getOrElse(0L)
     val id = parentId + 1
     val parentBuckets: Seq[BucketEntry] =
@@ -88,13 +102,29 @@ class LakeTable(val root: String) {
       }
     val all = (parentBuckets ++ newEntries.map(e =>
       if (e.added == 0L) e.copy(added = id) else e)).sortBy(_.bucket)
+    writeManifest(Snapshot(id, parentId, ts, all, metrics))
+    // atomic pointer flip
+    replace(Paths.get(root, s"_current.tmp$id"), currentFile,
+      id.toString.getBytes(StandardCharsets.UTF_8))
+    id
+  }
 
+  /** Add `stage`'s counters to the manifest of committed snapshot
+    * `snapshotId` (replacing that stage's counters if present), by an
+    * atomic replace of the manifest. */
+  def writeMetrics(spark: SparkSession, snapshotId: Long, stage: String,
+                   counters: Seq[(String, Long)]): Unit = synchronized {
+    val s = snapshot(snapshotId)
+    writeManifest(s.copy(metrics = s.metrics + (stage -> counters)))
+  }
+
+  private def writeManifest(s: Snapshot): Unit = {
     val rootNode: ObjectNode = mapper.createObjectNode()
-    rootNode.put("id", id)
-    rootNode.put("parent", parentId)
-    rootNode.put("committed_ts", ts)
+    rootNode.put("id", s.id)
+    rootNode.put("parent", s.parent)
+    rootNode.put("committed_ts", s.committedTs)
     val arr: ArrayNode = rootNode.putArray("buckets")
-    all.foreach { e =>
+    s.buckets.foreach { e =>
       val b = arr.addObject()
       b.put("bucket", e.bucket)
       b.put("n_docs", e.nDocs)
@@ -103,15 +133,22 @@ class LakeTable(val root: String) {
       val fs = b.putArray("files")
       e.files.foreach(fs.add)
     }
+    val m = rootNode.putObject("metrics")
+    s.metrics.foreach { case (stage, counters) =>
+      val st = m.putObject(stage)
+      counters.foreach { case (k, v) => st.put(k, v) }
+    }
     snapDir.mkdirs()
-    val snapFile = new File(snapDir, s"snapshot-$id.json")
-    mapper.writerWithDefaultPrettyPrinter().writeValue(snapFile, rootNode)
-    // atomic pointer flip
-    val tmp = Paths.get(root, s"_current.tmp$id")
-    Files.write(tmp, id.toString.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, currentFile.toPath, StandardCopyOption.ATOMIC_MOVE,
+    replace(Paths.get(snapDir.getPath, s"snapshot-${s.id}.json.tmp"),
+      new File(snapDir, s"snapshot-${s.id}.json"),
+      mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(rootNode))
+  }
+
+  /** Write `bytes` to `tmp`, then rename it over `target` atomically. */
+  private def replace(tmp: Path, target: File, bytes: Array[Byte]): Unit = {
+    Files.write(tmp, bytes)
+    Files.move(tmp, target.toPath, StandardCopyOption.ATOMIC_MOVE,
       StandardCopyOption.REPLACE_EXISTING)
-    id
   }
 
   /** Read the table as of the current snapshot — only manifested files. */
@@ -147,25 +184,18 @@ class LakeTable(val root: String) {
     }
   }
 
-  /** Metrics table dir (counter rows per stage per snapshot,
-    * FIXTURES.md §1.3 — the Spark analog of the reference batch summary
-    * app.py:1149-1163). Plain append parquet: audit-only, tiny. */
-  def metricsDir: String = new File(root, "metrics").getPath
-
-  def writeMetrics(spark: SparkSession, snapshotId: Long, stage: String,
-                   counters: Seq[(String, Long)]): Unit = {
+  /** Counter rows per stage per snapshot (FIXTURES.md §1.3 — the Spark
+    * analog of the reference batch summary app.py:1149-1163), read from
+    * every snapshot's manifest. */
+  def metrics(spark: SparkSession): DataFrame = {
     import spark.implicits._
-    counters.map { case (k, v) =>
-      ocrspark.model.MetricRow(snapshotId, stage, k, v)
-    }.toDF().coalesce(1).write.mode("append").parquet(metricsDir)
-  }
-
-  def metrics(spark: SparkSession): DataFrame =
-    if (new File(metricsDir).exists()) spark.read.parquet(metricsDir)
-    else {
-      import spark.implicits._
-      Seq.empty[ocrspark.model.MetricRow].toDF()
+    val rows = (1L to currentSnapshotId.getOrElse(0L)).flatMap { id =>
+      snapshot(id).metrics.toSeq.flatMap { case (stage, counters) =>
+        counters.map { case (k, v) => ocrspark.model.MetricRow(id, stage, k, v) }
+      }
     }
+    rows.toDF()
+  }
 
   /** All snapshots' lineage (audit view across commits). */
   def lineageHistory(spark: SparkSession): DataFrame = {

@@ -9,7 +9,7 @@ import ocrspark.ops.Dedup
 /** Structured Streaming surface (SURVEY.md §2.8).
   *
   * The production resume story is batch-incremental (manifest snapshots
-  * + anti-join, `IncrementalExtract`) because the north rule wants
+  * + committed-bucket filter, `IncrementalExtract`) because the north rule wants
   * partition-level lineage; this module provides the streaming
   * ALTERNATIVE for continuously arriving pages plus the standard
   * streaming analytics the engine exposes:

@@ -73,7 +73,8 @@ class PipelineSpec extends AnyFunSuite {
   test("diff-join vs row-local reference implementation: zero mismatches") {
     import spark.implicits._
     // expected side computed OUTSIDE Spark via the pure function —
-    // the north rule's diff-join (broadcast the small expected side)
+    // the north rule's diff-join (a full outer join, so a row missing
+    // on either side counts as a mismatch; Spark cannot broadcast it)
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select($"doc_id", $"text", $"lang").as[(Long, String, String)]
       .collect()
@@ -83,7 +84,7 @@ class PipelineSpec extends AnyFunSuite {
       (p.url, r.text, r.method)
     }.toSeq.toDF("url", "exp_text", "exp_method")
     val mismatches = extracted
-      .join(org.apache.spark.sql.functions.broadcast(expected), Seq("url"), "full_outer")
+      .join(expected, Seq("url"), "full_outer")
       .filter(!($"text" <=> $"exp_text") || !($"method" <=> $"exp_method"))
       .count()
     assert(mismatches == 0L)

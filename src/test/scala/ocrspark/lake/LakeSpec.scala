@@ -116,6 +116,38 @@ class LakeSpec extends AnyFunSuite {
     val lineage = t.lineage(spark).select($"bucket", $"n_docs")
       .as[(Int, Long)].collect().toMap
     assert(lineage == perBucket)
+    // every snapshot carries its own counters in its manifest: its
+    // docs_in is the docs of the buckets it added
+    (1L to t.currentSnapshotId.get).foreach { id =>
+      val s = t.snapshot(id)
+      val extract = s.metrics.getOrElse("extract", Nil).toMap
+      assert(extract.get("docs_in").contains(
+        s.buckets.filter(_.added == id).map(_.nDocs).sum), s"snapshot $id")
+    }
+    // a later stage's counters join an existing snapshot's manifest
+    // and leave the extract stage as it was
+    val before = t.metrics(spark).as[ocrspark.model.MetricRow].collect().toSet
+    t.writeMetrics(spark, 1L, "audit", Seq("rows_checked" -> 7L))
+    val after = t.metrics(spark).as[ocrspark.model.MetricRow].collect().toSet
+    assert(after == before + ocrspark.model.MetricRow(1L, "audit", "rows_checked", 7L))
+    assert(t.currentSnapshotId.contains(2L))
+  }
+
+  test("a resumed commit runs at most 2 Spark jobs") {
+    val t = freshTable()
+    val nB = ExtractJob.DefaultBuckets
+    IncrementalExtract.run(spark, pages.filter(ExtractJob.bucketCol(nB) < 20), t)
+    val sc = spark.sparkContext
+    def jobs(group: String)(body: => Unit): Int = {
+      sc.setJobGroup(group, group)
+      try body finally sc.clearJobGroup()
+      sc.statusTracker.getJobIdsForGroup(group).length
+    }
+    val resumed = jobs("lake-resume")(IncrementalExtract.run(spark, pages, t))
+    assert(t.currentSnapshotId.contains(2L))
+    assert(resumed <= 2, s"resumed commit ran $resumed jobs")
+    val noop = jobs("lake-noop")(assert(IncrementalExtract.run(spark, pages, t).noop))
+    assert(noop <= 2, s"no-op ran $noop jobs")
   }
 
   test("uncommitted staged files are invisible to readers") {
