@@ -6,29 +6,24 @@ import org.apache.spark.sql.functions._
 import ocrspark.route.Analyze
 
 /** The end-to-end extraction job over the `pages` lake table —
-  * partitioning, skew handling, and the single-projection extraction
-  * stage (SURVEY.md §3.1 Spark restatement, §4 O3-O5).
+  * bucketing and the single-projection extraction stage (SURVEY.md
+  * §3.1 Spark restatement, §4 O3-O5).
   *
   * Scale design (10^12 docs / 100 TB):
   *   - `bucket = pmod(xxhash64(url), nBuckets)` — explicit url-hash
   *     bucketing; the bucket is the unit of lineage + resume (north
   *     rule). nBuckets scales with cluster size, not data size per se
   *     (target ≈ 2-4 tasks per core at full fleet).
-  *   - `salt = pmod(xxhash64(url, warc_ts), DefaultSalts)` folded into
-  *     the repartition key: per-row extraction cost varies ~100× between
-  *     a 5-page PDF and a nav-only HTML shell, and host-locality in crawl
-  *     order makes byte-size per bucket skewed; the salt spreads each
-  *     bucket across `DefaultSalts` tasks while `partitionBy(bucket)`
-  *     still lands files under one bucket dir for manifest commits.
   *   - AQE + skew-join stay enabled as belt-and-braces (session conf).
   *   - The extraction itself is ONE UDF projection: no intermediate
   *     wide rows, no exploded page shuffle — pages stay inside their
   *     document row (SURVEY.md §2.4 A4).
+  *   - [[run]] adds no exchange; the lake writer (`IncrementalExtract`)
+  *     places its own salted repartition.
   */
 object ExtractJob {
 
   val DefaultBuckets = 64
-  val DefaultSalts = 8
 
   /** The extraction stage as a column over (html, text, lang,
     * force_ocr). */
@@ -47,10 +42,13 @@ object ExtractJob {
   def bucketCol(nBuckets: Int): Column =
     pmod(xxhash64(col("url")), lit(nBuckets)).cast("int")
 
-  /** The map-side extraction projection: the extract UDF, `bucket` and
-    * the result fields, with no exchange. [[run]] and the streaming
-    * extraction both start from it. */
-  def extracted(pages: DataFrame, nBuckets: Int = DefaultBuckets): DataFrame =
+  /** pages(url, warc_ts, html, text, lang) → extracted table
+    * (FIXTURES.md §1.2): the map-side extraction projection — the
+    * extract UDF, `bucket` and the result fields, with no exchange.
+    * Per-task input balance comes from parquet split sizing
+    * (`spark.sql.files.maxPartitionBytes`). Batch passes, the lake
+    * writer and the streaming extraction all start from it. */
+  def run(pages: DataFrame, nBuckets: Int = DefaultBuckets): DataFrame =
     pages
       .withColumn("r",
         extractUdf(col("html"), col("text"), col("lang"), forceOcrCol(pages)))
@@ -64,26 +62,6 @@ object ExtractJob {
         col("r.low_confidence_pages").as("low_confidence_pages"),
         col("r.route").as("route"),
         col("r.error").as("error"))
-
-  /** pages(url, warc_ts, html, text, lang) → extracted table
-    * (FIXTURES.md §1.2). The shuffle is `spark.sql.shuffle.partitions`
-    * wide, a deployment setting: cores×2..4 locally; on a real cluster,
-    * executors×cores×2.
-    *
-    * Stage order matters at 100 TB: extraction runs in the SCAN stage
-    * (map-side, before any exchange), so the one shuffle carries only
-    * the extracted output (text + fields + metadata — typically ≪ raw
-    * html payload), grouped by (bucket, salt) for the bucketed lineage
-    * write. Per-task input balance comes from parquet split sizing
-    * (`spark.sql.files.maxPartitionBytes`); the salt balances the write
-    * so one hot bucket cannot serialize into one reducer. */
-  def run(pages: DataFrame, nBuckets: Int = DefaultBuckets): DataFrame =
-    extracted(pages, nBuckets)
-      .withColumn("salt",
-        pmod(xxhash64(col("url"), col("warc_ts")), lit(DefaultSalts)).cast("int"))
-      .repartition(pages.sparkSession.sessionState.conf.numShufflePartitions,
-        col("bucket"), col("salt"))
-      .drop("salt")
 
   /** The routing-analysis-only stage as a column (cheap: 3-page PDF
     * sample, no normalize/fields — Extract.analyzeDocument). */

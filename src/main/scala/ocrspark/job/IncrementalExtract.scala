@@ -16,9 +16,9 @@ import ocrspark.lake.LakeTable
   *      plain `isin` filter on the bucket column — the committed set is
   *      a few ints read from the manifest, so no join is needed);
   *   3. extract only the remaining buckets;
-  *   4. stage files under data/snap-(next)/bucket=N via partitionBy,
-  *      observing the stage counters and per-bucket row counts on the
-  *      write itself (no re-read of the staged files);
+  *   4. stage files under data/snap-(next)/bucket=N via one salted
+  *      repartition and partitionBy, observing the stage counters and
+  *      per-bucket row counts on the write itself (no re-read);
   *   5. commit the manifest — buckets and counters together — and flip
   *      the _current pointer atomically.
   * A crash before (5) leaves staged files invisible to readers; rerun
@@ -46,8 +46,11 @@ object IncrementalExtract {
     def outputEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
   }
 
-  def run(spark: SparkSession, pages: DataFrame, table: LakeTable,
-          nBuckets: Int = ExtractJob.DefaultBuckets): Summary = {
+  private val Salts = 8
+
+  def run(spark: SparkSession, pages: DataFrame, table: LakeTable): Summary = {
+    // a table's bucket count is fixed by the buckets its manifest lists
+    val nBuckets = ExtractJob.DefaultBuckets
     val committed = table.committedBuckets
     val bucketed = pages.withColumn("bucket", ExtractJob.bucketCol(nBuckets))
     val todo =
@@ -58,7 +61,18 @@ object IncrementalExtract {
     val staging = table.stagingDir(nextId)
     val observed = Observation()
     val bucketDocs = udaf(new BucketDocs(nBuckets), Encoders.scalaInt)
+    // Step 4's one shuffle, `spark.sql.shuffle.partitions` wide (a
+    // deployment setting), grouped by (bucket, salt). Extraction runs
+    // map-side before it, so only the extracted output (≪ raw html)
+    // crosses it. Per-doc cost varies ~100× and crawl order skews bytes
+    // per bucket, so the salt spreads each bucket over `Salts` tasks
+    // while `partitionBy(bucket)` still lands few files per bucket dir.
     ExtractJob.run(todo, nBuckets)
+      .withColumn("salt",
+        pmod(xxhash64(col("url"), col("warc_ts")), lit(Salts)).cast("int"))
+      .repartition(todo.sparkSession.sessionState.conf.numShufflePartitions,
+        col("bucket"), col("salt"))
+      .drop("salt")
       .observe(observed, ExtractJob.counters.head,
         ExtractJob.counters.tail :+ bucketDocs(col("bucket")).as("bucket_docs"): _*)
       .write.mode("overwrite").partitionBy("bucket").parquet(staging)

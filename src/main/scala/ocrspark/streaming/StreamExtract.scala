@@ -28,11 +28,11 @@ import ocrspark.ops.Dedup
 object StreamExtract {
 
   /** Streaming extraction over a pages parquet directory: columns of
-    * the batch job's map-side projection (`ExtractJob.extracted`) — one
+    * the batch job's map-side projection (`ExtractJob.run`) — one
     * definition, two execution modes. */
   def extractStream(spark: SparkSession, pagesDir: String): DataFrame = {
     val schema = Encoders.product[ocrspark.model.PageRow].schema
-    ocrspark.job.ExtractJob.extracted(spark.readStream.schema(schema).parquet(pagesDir))
+    ocrspark.job.ExtractJob.run(spark.readStream.schema(schema).parquet(pagesDir))
       .select(col("url"), col("warc_ts"), col("lang"), col("bucket"),
         col("text"), col("fields"), col("method"), col("confidence"),
         col("error"))

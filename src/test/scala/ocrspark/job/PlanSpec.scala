@@ -1,16 +1,27 @@
 package ocrspark.job
 
+import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.scalatest.BeforeAndAfterAll
+import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.SpanSugar._
 
 /** Physical-plan shape assertions — the 100 TB design intent, pinned
   * (SURVEY.md §4): predicate pushdown + column pruning reach the parquet
-  * scan, the extraction job adds exactly one exchange over a lake scan
-  * (the bucket+salt repartition, AFTER map-side extraction), dimension
-  * joins broadcast, and aggregations run partial (map-side) before
-  * final. AQE is disabled in this suite only, so the static plan shape
-  * is inspectable; production sessions keep it on. */
-class PlanSpec extends AnyFunSuite {
+  * scan, batch extraction adds no exchange over a lake scan, the lake
+  * write adds exactly one (the bucket+salt repartition, AFTER map-side
+  * extraction), dimension joins broadcast, and aggregations run partial
+  * (map-side) before final. AQE is disabled in this suite only, so the
+  * static plan shape is inspectable; production sessions keep it on. */
+class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
@@ -25,10 +36,16 @@ class PlanSpec extends AnyFunSuite {
 
   val sfDir = "/root/testdata/sf0.001"
 
+  /** Every directory this suite writes lives under one root. */
+  private val root = Files.createTempDirectory("planspec")
+
+  override def afterAll(): Unit =
+    try FileUtils.deleteQuietly(root.toFile) finally super.afterAll()
+
   /** Pages as a parquet scan (the production shape: the lake table on
     * disk, not the in-session generator with its own exchange). */
   lazy val pagesParquet: org.apache.spark.sql.DataFrame = {
-    val dir = java.nio.file.Files.createTempDirectory("planspec_pages").toString
+    val dir = root.resolve("pages").toString
     Synth.pagesDF(spark, sfDir).write.mode("overwrite").parquet(dir)
     spark.read.parquet(dir)
   }
@@ -50,8 +67,27 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("extraction over a lake scan: exactly one exchange, AFTER the extract UDF") {
-    val df = ExtractJob.run(pagesParquet)
-    val plan = planOf(df)
+    // the exchange is the lake writer's: pin the staged write of a
+    // resumed IncrementalExtract commit, as the engine plans it
+    val table = new ocrspark.lake.LakeTable(root.resolve("lake").toString)
+    IncrementalExtract.run(spark,
+      pagesParquet.filter(ExtractJob.bucketCol(ExtractJob.DefaultBuckets) < 20), table)
+    val plans = new ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val plan =
+      try {
+        assert(!IncrementalExtract.run(spark, pagesParquet, table).noop)
+        eventually(timeout(30.seconds)) {
+          plans.asScala.find(_.contains("InsertIntoHadoopFsRelationCommand")).get
+        }
+      } finally spark.listenerManager.unregister(listener)
+    // the resume step filters committed buckets; it does not join
+    assert(!plan.contains("Join"), plan)
     val exchanges = plan.linesIterator.count(_.contains("Exchange"))
     assert(exchanges == 1, s"expected 1 exchange, got $exchanges\n$plan")
     // map-side extraction: the UDF projection sits BELOW the exchange
@@ -61,6 +97,11 @@ class PlanSpec extends AnyFunSuite {
     val exchangeChild = plan.substring(plan.indexOf("Exchange"))
     val projLine = exchangeChild.linesIterator.drop(1).next()
     assert(!projLine.contains("html"), projLine)
+  }
+
+  test("batch extraction over a lake scan runs with no exchange") {
+    val plan = planOf(ExtractJob.run(pagesParquet))
+    assert(!plan.contains("Exchange"), plan)
   }
 
   test("analyze-only query over a lake scan runs with no shuffle at all") {
@@ -88,16 +129,6 @@ class PlanSpec extends AnyFunSuite {
     assert(plan.contains("WholeStageCodegen") || plan.contains("*("), plan)
   }
 
-  test("resume anti-join broadcasts the committed-lineage side") {
-    import spark.implicits._
-    val committed = Seq(1, 2, 3).toDF("bucket")
-    val pages = pagesParquet.withColumn("bucket", ExtractJob.bucketCol(64))
-    val todo = pages.join(
-      org.apache.spark.sql.functions.broadcast(committed), Seq("bucket"), "left_anti")
-    val plan = planOf(todo)
-    assert(plan.contains("BroadcastHashJoin"), plan)
-  }
-
   test("bucketed lake tables join with no shuffle and no sort") {
     // The 100 TB co-located-join story: two lake tables bucketed+sorted
     // by url join WITHOUT any Exchange (bucketing provides the hash
@@ -105,8 +136,7 @@ class PlanSpec extends AnyFunSuite {
     // honored at the scan). On a cluster this is the difference between
     // re-shuffling 100 TB per join and reading co-located splits.
     import spark.implicits._
-    val whPath = java.nio.file.Files.createTempDirectory("planspec_wh")
-    val wh = whPath.toString
+    val wh = root.resolve("wh").toString
     val a = pagesParquet.select($"url", $"lang")
     val b = pagesParquet.select($"url", org.apache.spark.sql.functions
       .octet_length($"html").as("n_bytes"))
@@ -135,11 +165,6 @@ class PlanSpec extends AnyFunSuite {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
       spark.sql("DROP TABLE IF EXISTS pages_b")
       spark.sql("DROP TABLE IF EXISTS ext_b")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete()
-      }
-      rm(whPath.toFile)
     }
   }
 

@@ -2,14 +2,16 @@ package ocrspark.lake
 
 import java.nio.file.Files
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import ocrspark.job.{ExtractJob, IncrementalExtract, Synth}
 
 /** Snapshot-commit + resume semantics (north rule: resume from last
   * committed snapshot without recomputing finished partitions). */
-class LakeSpec extends AnyFunSuite {
+class LakeSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -19,8 +21,15 @@ class LakeSpec extends AnyFunSuite {
     .getOrCreate()
 
   val sfDir = "/root/testdata/sf0.001"
+
+  /** Every table this suite writes lives under one root. */
+  private val root = Files.createTempDirectory("lakespec")
+
+  override def afterAll(): Unit =
+    try FileUtils.deleteQuietly(root.toFile) finally super.afterAll()
+
   def freshTable(): LakeTable =
-    new LakeTable(Files.createTempDirectory("lake").toString)
+    new LakeTable(Files.createTempDirectory(root, "lake").toString)
 
   lazy val pages = {
     val df = Synth.pagesDF(spark, sfDir)

@@ -2,12 +2,14 @@ package ocrspark.streaming
 
 import java.nio.file.Files
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-class StreamSpec extends AnyFunSuite {
+class StreamSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -18,16 +20,23 @@ class StreamSpec extends AnyFunSuite {
 
   val sfDir = "/root/testdata/sf0.001"
 
+  /** Every source, checkpoint and sink dir this suite writes lives
+    * under one root. */
+  private val root = Files.createTempDirectory("streamspec")
+
+  override def afterAll(): Unit =
+    try FileUtils.deleteQuietly(root.toFile) finally super.afterAll()
+
   test("streaming extraction processes a pages backlog exactly once and resumes") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("stream_pages").toString
-    val ckpt = Files.createTempDirectory("stream_ckpt").toString
+    val dir = Files.createTempDirectory(root, "stream_pages").toString
+    val ckpt = Files.createTempDirectory(root, "stream_ckpt").toString
     val pages = ocrspark.job.Synth.pagesDF(spark, sfDir).cache()
     // first micro-deposit: 60% of pages
     pages.filter(xxhash64($"url") % 10 < 6).write.mode("append").parquet(dir)
 
     // file sink (memory sink cannot recover from a checkpoint)
-    val sink = Files.createTempDirectory("stream_sink").toString
+    val sink = Files.createTempDirectory(root, "stream_sink").toString
     def runAvailable(): Unit = {
       val q = StreamExtract.extractStream(spark, dir).writeStream
         .outputMode("append").format("parquet")
@@ -63,7 +72,7 @@ class StreamSpec extends AnyFunSuite {
 
     // then as a genuine stream from a file source
     import spark.implicits._
-    val dir = Files.createTempDirectory("stream_events").toString
+    val dir = Files.createTempDirectory(root, "stream_events").toString
     events.write.mode("overwrite").parquet(dir)
     val stream = spark.readStream.schema(events.schema).parquet(dir)
     val q = StreamExtract.eventCounts(stream).writeStream
@@ -101,9 +110,9 @@ class StreamSpec extends AnyFunSuite {
 
   test("streaming exact dedup emits each distinct text once across batches") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("dedup_docs").toString
-    val ckpt = Files.createTempDirectory("dedup_ckpt").toString
-    val sink = Files.createTempDirectory("dedup_sink").toString
+    val dir = Files.createTempDirectory(root, "dedup_docs").toString
+    val ckpt = Files.createTempDirectory(root, "dedup_ckpt").toString
+    val sink = Files.createTempDirectory(root, "dedup_sink").toString
 
     def deposit(docs: Seq[StreamExtract.DocEvent]): Unit =
       docs.toDS().write.mode("append").parquet(dir)
@@ -140,9 +149,9 @@ class StreamSpec extends AnyFunSuite {
 
   test("streaming near-dup catches a mutated copy arriving batches later") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("ndup_docs").toString
-    val ckpt = Files.createTempDirectory("ndup_ckpt").toString
-    val sink = Files.createTempDirectory("ndup_sink").toString
+    val dir = Files.createTempDirectory(root, "ndup_docs").toString
+    val ckpt = Files.createTempDirectory(root, "ndup_ckpt").toString
+    val sink = Files.createTempDirectory(root, "ndup_sink").toString
 
     def deposit(docs: Seq[StreamExtract.DocEvent]): Unit =
       docs.toDS().write.mode("append").parquet(dir)
@@ -192,9 +201,9 @@ class StreamSpec extends AnyFunSuite {
 
   test("streaming dedup keeps null-text and empty-text as distinct groups (batch parity)") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("dedupn_docs").toString
-    val ckpt = Files.createTempDirectory("dedupn_ckpt").toString
-    val sink = Files.createTempDirectory("dedupn_sink").toString
+    val dir = Files.createTempDirectory(root, "dedupn_docs").toString
+    val ckpt = Files.createTempDirectory(root, "dedupn_ckpt").toString
+    val sink = Files.createTempDirectory(root, "dedupn_sink").toString
     Seq(StreamExtract.DocEvent(1, null),
       StreamExtract.DocEvent(2, ""),
       StreamExtract.DocEvent(3, null))
@@ -236,9 +245,9 @@ class StreamSpec extends AnyFunSuite {
 
   test("streaming dedup TTL evicts idle state; a later duplicate is re-admitted") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("dedupttl_docs").toString
-    val ckpt = Files.createTempDirectory("dedupttl_ckpt").toString
-    val sink = Files.createTempDirectory("dedupttl_sink").toString
+    val dir = Files.createTempDirectory(root, "dedupttl_docs").toString
+    val ckpt = Files.createTempDirectory(root, "dedupttl_ckpt").toString
+    val sink = Files.createTempDirectory(root, "dedupttl_sink").toString
     val ttl = 1500L
 
     def deposit(docs: Seq[StreamExtract.DocEvent]): Unit =
@@ -310,9 +319,9 @@ class StreamSpec extends AnyFunSuite {
       Seq(StreamExtract.DocEventTs(8, "et texto A", new java.sql.Timestamp(t0 + 41000))))
 
     def replay(): Seq[(Long, Long)] = {
-      val dir = Files.createTempDirectory("dedupet_docs").toString
-      val ckpt = Files.createTempDirectory("dedupet_ckpt").toString
-      val sink = Files.createTempDirectory("dedupet_sink").toString
+      val dir = Files.createTempDirectory(root, "dedupet_docs").toString
+      val ckpt = Files.createTempDirectory(root, "dedupet_ckpt").toString
+      val sink = Files.createTempDirectory(root, "dedupet_sink").toString
       batches.foreach { docs =>
         docs.toDS().write.mode("append").parquet(dir)
         val stream = spark.readStream
@@ -357,9 +366,9 @@ class StreamSpec extends AnyFunSuite {
       Seq(doc(40, base, 41000)))
 
     def replay(): Seq[StreamExtract.BandPair] = {
-      val dir = Files.createTempDirectory("ndupet_docs").toString
-      val ckpt = Files.createTempDirectory("ndupet_ckpt").toString
-      val sink = Files.createTempDirectory("ndupet_sink").toString
+      val dir = Files.createTempDirectory(root, "ndupet_docs").toString
+      val ckpt = Files.createTempDirectory(root, "ndupet_ckpt").toString
+      val sink = Files.createTempDirectory(root, "ndupet_sink").toString
       batches.foreach { docs =>
         docs.toDS().write.mode("append").parquet(dir)
         val stream = spark.readStream
@@ -389,7 +398,7 @@ class StreamSpec extends AnyFunSuite {
     import ocrspark.ops.Dedup
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select($"doc_id", $"text")
-    val dir = Files.createTempDirectory("bands_docs").toString + "/docs"
+    val dir = Files.createTempDirectory(root, "bands_docs").toString + "/docs"
     docs.write.parquet(dir)
     val stream = spark.readStream
       .schema(implicitly[org.apache.spark.sql.Encoder[StreamExtract.DocEvent]].schema)
@@ -397,7 +406,7 @@ class StreamSpec extends AnyFunSuite {
     val q = StreamExtract.bandRows(stream).select($"id", $"band", $"sig")
       .writeStream.outputMode("append").format("memory")
       .queryName("stream_band_rows")
-      .option("checkpointLocation", Files.createTempDirectory("bands_ckpt").toString)
+      .option("checkpointLocation", Files.createTempDirectory(root, "bands_ckpt").toString)
       .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
     val streamed = spark.table("stream_band_rows").as[(Long, Int, Int)].collect()
