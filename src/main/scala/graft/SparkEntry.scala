@@ -247,19 +247,13 @@ object SparkEntry {
       val lakeDir = java.nio.file.Paths.get(
         sys.props("java.io.tmpdir"),
         "graft_lake_resume_" + Integer.toHexString(dir.hashCode))
-      if (java.nio.file.Files.exists(lakeDir)) {
-        import scala.jdk.CollectionConverters._
-        val walk = java.nio.file.Files.walk(lakeDir)
-        try walk.iterator().asScala.toSeq
-          .sortBy(-_.getNameCount)
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-        finally walk.close()
-      }
+      org.apache.commons.io.FileUtils.deleteDirectory(lakeDir.toFile)
       java.nio.file.Files.createDirectories(lakeDir)
       val table = new ocrspark.lake.LakeTable(lakeDir.toString)
       val pages = ocrspark.job.Synth.pagesDF(s, dir)
+      val nBuckets = ocrspark.job.ExtractJob.DefaultBuckets
       ocrspark.job.IncrementalExtract.run(s,
-        pages.filter(ocrspark.job.ExtractJob.bucketCol(64) < 20), table)
+        pages.filter(ocrspark.job.ExtractJob.bucketCol(nBuckets) < 20), table)
       ocrspark.job.IncrementalExtract.run(s, pages, table)
       table.lineage(s)
         .select(col("bucket"), col("snapshot_id"), col("n_docs"))

@@ -7,6 +7,8 @@ import org.apache.spark.sql.functions._
   * [[ScalingBench]] and [[ShardMain]]: the same session, the same
   * forcing action and the same warm-up-then-time rule, so compile, JIT
   * and codegen cost fall outside every timed rep in the same way.
+  * [[session]] is also the only place a session is built: `graft.Verify`,
+  * `graft.Explain` and the test suites take theirs from it too.
   */
 object Measure {
 
@@ -18,15 +20,19 @@ object Measure {
   }
 
   /** A fresh `local[cores]` session: shuffle partitions `2 × cores`,
-    * AQE on, UTC, UI off. Any active session is stopped first, so each
-    * parallelism level gets its own context. */
-  def session(cores: Int): SparkSession = {
+    * AQE on, UTC, UI off. */
+  def session(cores: Int): SparkSession = session(cores, 2 * cores)
+
+  /** A fresh `local[cores]` session, `shufflePartitions` wide, AQE on,
+    * UTC, UI off. Any active session is stopped first, so each caller
+    * gets its own context and none inherits another's SQL conf. */
+  def session(cores: Int, shufflePartitions: Int): SparkSession = {
     SparkSession.getActiveSession.foreach(_.stop())
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     val spark = SparkSession.builder()
       .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", (cores * 2).toString)
+      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")

@@ -114,14 +114,17 @@ object GraftFunctions {
   def page_separator(page: Column, total: Column): Column =
     co(PageSeparator(ex(page), ex(total)))
 
-  private val registry: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "normalize_text" -> (es => NormalizeText(es(0), es(1))),
-    "extract_fields" -> (es => ExtractFields(es.head)),
-    "page_separator" -> (es => PageSeparator(es(0), es(1))))
+  /** (SQL name, expression class, builder) of every function:
+    * [[registerAll]] and [[GraftExtensions]] both register from it. */
+  private[functions] val registry
+      : Seq[(String, Class[_ <: Expression], Seq[Expression] => Expression)] = Seq(
+    ("normalize_text", classOf[NormalizeText], es => NormalizeText(es(0), es(1))),
+    ("extract_fields", classOf[ExtractFields], es => ExtractFields(es.head)),
+    ("page_separator", classOf[PageSeparator], es => PageSeparator(es(0), es(1))))
 
   /** Make the functions callable from `spark.sql` in this session. */
   def registerAll(spark: SparkSession): Unit =
-    registry.foreach { case (name, builder) =>
+    registry.foreach { case (name, _, builder) =>
       spark.sessionState.functionRegistry
         .createOrReplaceTempFunction(name, builder, "scala_udf")
     }
@@ -129,15 +132,9 @@ object GraftFunctions {
 
 /** spark-submit entry: `--conf spark.sql.extensions=ocrspark.functions.GraftExtensions`. */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    e.injectFunction((org.apache.spark.sql.catalyst.FunctionIdentifier("normalize_text"),
-      new ExpressionInfo(classOf[NormalizeText].getName, "normalize_text"),
-      (es: Seq[Expression]) => NormalizeText(es(0), es(1))))
-    e.injectFunction((org.apache.spark.sql.catalyst.FunctionIdentifier("extract_fields"),
-      new ExpressionInfo(classOf[ExtractFields].getName, "extract_fields"),
-      (es: Seq[Expression]) => ExtractFields(es.head)))
-    e.injectFunction((org.apache.spark.sql.catalyst.FunctionIdentifier("page_separator"),
-      new ExpressionInfo(classOf[PageSeparator].getName, "page_separator"),
-      (es: Seq[Expression]) => PageSeparator(es(0), es(1))))
-  }
+  override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit =
+    GraftFunctions.registry.foreach { case (name, cls, builder) =>
+      e.injectFunction((org.apache.spark.sql.catalyst.FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name), builder))
+    }
 }

@@ -46,7 +46,7 @@ object IncrementalExtract {
     def outputEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
   }
 
-  private val Salts = 8
+  private[job] val Salts = 8
 
   def run(spark: SparkSession, pages: DataFrame, table: LakeTable): Summary = {
     // a table's bucket count is fixed by the buckets its manifest lists

@@ -27,11 +27,10 @@ import java.util.regex.{Matcher, Pattern}
   * ([[applyCorrections]]) and the five always-on whitespace regexes via
   * single-pass kernels — each differentially pinned against its regex
   * original (TextProps properties incl. full-BMP \w and \s sweeps,
-  * [[applyCorrectionsSequential]]/[[applyCorrectionsRegex]] cross-checks
-  * in GoldenSpec/TextProps) and byte-identical on the CPython golden
-  * corpus. Equivalence of one-pass vs sequential order holds because
-  * every replacement is a single \b-delimited word that is a fixed
-  * point of the table.
+  * [[applyCorrectionsSequential]] cross-checks in GoldenSpec/TextProps)
+  * and byte-identical on the CPython golden corpus. Equivalence of
+  * one-pass vs sequential order holds because every replacement is a
+  * single \b-delimited word that is a fixed point of the table.
   */
 object Normalize {
 
@@ -106,22 +105,6 @@ object Normalize {
 
   // --- compiled artifacts (one-time, executor-shared) -------------------
 
-  /** One-pass alternation over all 48 correction keys (perf; see header). */
-  private val combinedCorrection: Pattern = Pattern.compile(
-    corrections.map { case (k, _) => Pattern.quote(k) }
-      .mkString("\\b(?:", "|", ")\\b"),
-    UniFlags)
-
-  /** foldChar-folded key → quoted replacement, for the regex one-pass
-    * lookup. Keyed by the same char-wise fold the matcher uses —
-    * String.toLowerCase keys crashed on dotless-ı text ('ı' matches 'I'
-    * under both Java regex and CPython folding, but lowercases to
-    * itself). */
-  private lazy val correctionLookup: Map[String, String] =
-    corrections.map { case (k, v) =>
-      foldString(k) -> Matcher.quoteReplacement(v)
-    }.toMap
-
   /** Sequential per-entry patterns — reference-faithful slow path, kept
     * for differential testing against the one-pass fast path. */
   private[text] lazy val sequentialCorrections: Vector[(Pattern, String)] =
@@ -186,21 +169,6 @@ object Normalize {
     if (i == 0 && j == s.length) s else s.substring(i, j)
   }
 
-  /** Regex one-pass alternation (differential reference for the scanner
-    * below; was the production path until round 2). */
-  private[text] def applyCorrectionsRegex(text: String): String = {
-    val m = combinedCorrection.matcher(text)
-    if (!m.find()) return text // common case: no legal vocabulary present
-    val sb = new java.lang.StringBuilder(text.length + 16)
-    var cont = true
-    while (cont) {
-      m.appendReplacement(sb, correctionLookup(foldString(m.group())))
-      cont = m.find()
-    }
-    m.appendTail(sb)
-    sb.toString
-  }
-
   // --- hand-rolled correction scanner (the production fast path) --------
   //
   // `\b(?:K1|...|K48)\b` over all-word-char keys matches exactly the word
@@ -208,10 +176,11 @@ object Normalize {
   // both run edges; Java CI matching is simple per-char folding, so
   // lengths are preserved and a run can equal at most one key). That
   // reduces the 48-way alternation scan (~100ns/char) to one code-point
-  // pass + a hash probe per candidate word. Equivalence with the regex
-  // is pinned by NormalizeSpec's differential property (word/non-word,
-  // 'İ', supplementary letters, NBSP, Cyrillic) and a full \w-vs-
-  // isWordCp sweep of the BMP + astral sample.
+  // pass + a hash probe per candidate word. Equivalence with the 48
+  // sequential `\bK\b` passes of the reference is pinned by TextProps'
+  // differential properties (word/non-word, 'İ', supplementary letters,
+  // NBSP, Cyrillic) and a full \w-vs-isWordCp sweep of the BMP +
+  // astral sample.
 
   /** Java regex `\w` under UNICODE_CHARACTER_CLASS:
     * [\p{Alpha}\p{gc=Mn}\p{gc=Me}\p{gc=Mc}\p{Digit}\p{gc=Pc}\p{IsJoin_Control}]. */

@@ -4,14 +4,9 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class MeasureSpec extends AnyFunSuite {
+import ocrspark.SparkSuite
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class MeasureSpec extends AnyFunSuite with SparkSuite {
 
   test("force evaluates a projection that count() prunes") {
     val calls = spark.sparkContext.longAccumulator("udf calls")
@@ -55,5 +50,21 @@ class MeasureSpec extends AnyFunSuite {
     intercept[IllegalStateException] {
       Measure.untilDeadline(deadline) { Thread.sleep(100); 0L }
     }
+  }
+
+  // Runs last: a new session stops the suite's own.
+  test("session: a fresh one has AQE on, UTC and the requested shuffle width") {
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.conf.set("spark.sql.session.timeZone", "America/Lima")
+    def check(s: SparkSession, cores: Int, width: Int): Unit =
+      try {
+        assert(s.sparkContext.master == s"local[$cores]")
+        assert(s.conf.get("spark.sql.adaptive.enabled") == "true")
+        assert(s.conf.get("spark.sql.session.timeZone") == "UTC")
+        assert(s.conf.get("spark.sql.shuffle.partitions") == width.toString)
+      } finally s.stop()
+    check(Measure.session(2, 3), 2, 3)
+    assert(spark.sparkContext.isStopped, "the earlier session was not stopped")
+    check(Measure.session(3), 3, 6)
   }
 }

@@ -4,16 +4,10 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class FunctionsSpec extends AnyFunSuite {
+import ocrspark.SparkSuite
+import ocrspark.bench.Measure
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  val sfDir = "/root/testdata/sf0.001"
+class FunctionsSpec extends AnyFunSuite with SparkSuite {
 
   test("native expressions equal the UDF path on the whole documents table") {
     import spark.implicits._
@@ -32,10 +26,11 @@ class FunctionsSpec extends AnyFunSuite {
     assert(bad == 0L)
   }
 
-  test("SQL registration: callable from spark.sql") {
-    GraftFunctions.registerAll(spark)
-    spark.read.parquet(s"$sfDir/documents.parquet").createOrReplaceTempView("docs_v")
-    val row = spark.sql(
+  /** The SQL registration query: the three functions on literals and
+    * over the documents table, through `session.sql`. */
+  private def checkSqlFunctions(session: SparkSession): Unit = {
+    session.read.parquet(s"$sfDir/documents.parquet").createOrReplaceTempView("docs_v")
+    val row = session.sql(
       """SELECT normalize_text('fiscalia  provincial
         |
         |
@@ -47,9 +42,14 @@ class FunctionsSpec extends AnyFunSuite {
       "5006014504-2024-215-0")
     assert(row.getAs[String]("s") == "\n\n--- Página 2 de 10 ---\n\n")
     // and over a table
-    assert(spark.sql(
+    assert(session.sql(
       "SELECT count(*) FROM docs_v WHERE length(normalize_text(text, lang)) > 0")
       .collect()(0).getLong(0) > 0)
+  }
+
+  test("SQL registration: callable from spark.sql") {
+    GraftFunctions.registerAll(spark)
+    checkSqlFunctions(spark)
   }
 
   test("null semantics: null text → null; null lang → legal chain") {
@@ -59,5 +59,12 @@ class FunctionsSpec extends AnyFunSuite {
     val rows = df.select(GraftFunctions.normalize_text($"text", $"lang")).collect()
     assert(rows(0).isNullAt(0))
     assert(rows(1).getString(0) == "PÚBLICO") // unknown lang → legal tables
+  }
+
+  // Runs last: a new session stops the suite's own.
+  test("GraftExtensions: spark.sql.extensions registers the SQL functions") {
+    sys.props("spark.sql.extensions") = classOf[GraftExtensions].getName
+    val session = try Measure.session(4, 4) finally sys.props -= "spark.sql.extensions"
+    try checkSqlFunctions(session) finally session.stop()
   }
 }

@@ -1,21 +1,13 @@
 package ocrspark.job
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import ocrspark.SparkSuite
 
 /** Distributed end-to-end: the extraction pipeline over the synthesized
   * pages table at sf0.001, including the diff-join shape of the north
   * rule (expected vs actual per url). */
-class PipelineSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  val sfDir = "/root/testdata/sf0.001"
+class PipelineSpec extends AnyFunSuite with SparkSuite {
 
   lazy val extracted = {
     val df = ExtractJob.run(Synth.pagesDF(spark, sfDir))

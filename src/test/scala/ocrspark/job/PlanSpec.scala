@@ -1,18 +1,16 @@
 package ocrspark.job
 
-import java.nio.file.Files
 import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.commons.io.FileUtils
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.time.SpanSugar._
+
+import ocrspark.SparkSuite
 
 /** Physical-plan shape assertions — the 100 TB design intent, pinned
   * (SURVEY.md §4): predicate pushdown + column pruning reach the parquet
@@ -21,26 +19,12 @@ import org.scalatest.time.SpanSugar._
   * extraction), dimension joins broadcast, and aggregations run partial
   * (map-side) before final. AQE is disabled in this suite only, so the
   * static plan shape is inspectable; production sessions keep it on. */
-class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
+class PlanSpec extends AnyFunSuite with SparkSuite {
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.conf.set("spark.sql.adaptive.enabled", "false")
-    s
+  override def beforeAll(): Unit = {
+    super.beforeAll()
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
   }
-
-  val sfDir = "/root/testdata/sf0.001"
-
-  /** Every directory this suite writes lives under one root. */
-  private val root = Files.createTempDirectory("planspec")
-
-  override def afterAll(): Unit =
-    try FileUtils.deleteQuietly(root.toFile) finally super.afterAll()
 
   /** Pages as a parquet scan (the production shape: the lake table on
     * disk, not the in-session generator with its own exchange). */
@@ -54,9 +38,6 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     df.queryExecution.executedPlan.toString
 
   test("filter+project pushes predicates and prunes columns at the scan") {
-    // another suite may have .cache()d documents in the shared session —
-    // pushdown is only visible on the real parquet scan
-    spark.catalog.clearCache()
     val df = graft.SparkEntry.queries("p1_filter_project")(spark, sfDir)
     val plan = planOf(df)
     assert(plan.contains("PushedFilters:"), plan)

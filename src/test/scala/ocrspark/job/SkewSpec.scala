@@ -1,48 +1,27 @@
 package ocrspark.job
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import ocrspark.SparkSuite
+
 /** Skew handling evidence (north rule: explicit salted repartitioning
   * for skewed hosts; SURVEY.md §4 O4-O5). The synthesized corpus has a
-  * zipfian host distribution (top host ≈ 23% of traffic), so a
-  * host-keyed repartition produces a dominant straggler partition; the
-  * salt must demonstrably flatten it. */
-class SkewSpec extends AnyFunSuite {
+  * zipfian host distribution (top host ≈ 23% of traffic), so bucketing
+  * hashes the url, not the host, and the lake writer salts each bucket
+  * over a few tasks. */
+class SkewSpec extends AnyFunSuite with SparkSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  val sfDir = "/root/testdata/sf0.001"
-
-  private def maxPartitionRows(df: org.apache.spark.sql.DataFrame): Long =
-    df.withColumn("pid", spark_partition_id())
-      .groupBy(col("pid")).count()
-      .agg(max(col("count"))).collect()(0).getLong(0)
-
-  test("zipfian hosts: salted repartition flattens the straggler partition") {
-    val nParts = 16
-    val pages = Synth.pagesDF(spark, sfDir)
-      .withColumn("host", regexp_extract(col("url"), "https://([^/]+)/", 1))
-      .cache()
-    pages.count()
-
-    // host distribution really is skewed
-    val top = pages.groupBy(col("host")).count()
-      .agg(max(col("count"))).collect()(0).getLong(0)
-    assert(top > 100, s"top host only $top of 500 — synth skew too weak")
-
-    val unsalted = maxPartitionRows(pages.repartition(nParts, col("host")))
-    val salted = maxPartitionRows(pages.repartition(nParts, col("host"),
-      pmod(xxhash64(col("url")), lit(8))))
-    assert(salted * 2 <= unsalted,
-      s"salting did not flatten skew: unsalted max=$unsalted salted max=$salted")
-    pages.unpersist()
+  test("lake writer's (bucket, salt) repartition: a few staged files per bucket") {
+    val table = new ocrspark.lake.LakeTable(root.resolve("lake").toString)
+    IncrementalExtract.run(spark, Synth.pagesDF(spark, sfDir), table)
+    val files = table.currentSnapshot.get.buckets.map(b => b.bucket -> b.files.size)
+    // one task writes one file per bucket it holds: unsalted, each
+    // bucket would sit in exactly one task and so one file
+    assert(files.exists(_._2 > 1), s"no bucket spread over tasks: $files")
+    val cap = math.min(IncrementalExtract.Salts,
+      spark.sessionState.conf.numShufflePartitions)
+    assert(files.forall(_._2 <= cap), s"a bucket exceeds $cap files: $files")
   }
 
   test("url-hash bucketing distributes rows evenly regardless of host skew") {

@@ -2,31 +2,14 @@ package ocrspark.lake
 
 import java.nio.file.Files
 
-import org.apache.commons.io.FileUtils
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import ocrspark.SparkSuite
 import ocrspark.job.{ExtractJob, IncrementalExtract, Synth}
 
 /** Snapshot-commit + resume semantics (north rule: resume from last
   * committed snapshot without recomputing finished partitions). */
-class LakeSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  val sfDir = "/root/testdata/sf0.001"
-
-  /** Every table this suite writes lives under one root. */
-  private val root = Files.createTempDirectory("lakespec")
-
-  override def afterAll(): Unit =
-    try FileUtils.deleteQuietly(root.toFile) finally super.afterAll()
+class LakeSpec extends AnyFunSuite with SparkSuite {
 
   def freshTable(): LakeTable =
     new LakeTable(Files.createTempDirectory(root, "lake").toString)
@@ -174,7 +157,7 @@ class LakeSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("commit chain: snapshots are monotone and parent-linked") {
     val t = freshTable()
     val s1 = IncrementalExtract.run(spark,
-      pages.filter(ExtractJob.bucketCol(64) < 10), t)
+      pages.filter(ExtractJob.bucketCol(ExtractJob.DefaultBuckets) < 10), t)
     val s2 = IncrementalExtract.run(spark, pages, t)
     val snap2 = t.snapshot(2)
     assert(snap2.parent == 1L)

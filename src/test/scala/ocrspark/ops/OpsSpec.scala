@@ -1,19 +1,11 @@
 package ocrspark.ops
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class OpsSpec extends AnyFunSuite {
+import ocrspark.SparkSuite
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  val sfDir = "/root/testdata/sf0.001"
+class OpsSpec extends AnyFunSuite with SparkSuite {
 
   lazy val docs = {
     val d = spark.read.parquet(s"$sfDir/documents.parquet")

@@ -2,30 +2,13 @@ package ocrspark.streaming
 
 import java.nio.file.Files
 
-import org.apache.commons.io.FileUtils
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-class StreamSpec extends AnyFunSuite with BeforeAndAfterAll {
+import ocrspark.SparkSuite
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  val sfDir = "/root/testdata/sf0.001"
-
-  /** Every source, checkpoint and sink dir this suite writes lives
-    * under one root. */
-  private val root = Files.createTempDirectory("streamspec")
-
-  override def afterAll(): Unit =
-    try FileUtils.deleteQuietly(root.toFile) finally super.afterAll()
+class StreamSpec extends AnyFunSuite with SparkSuite {
 
   test("streaming extraction processes a pages backlog exactly once and resumes") {
     import spark.implicits._

@@ -61,9 +61,9 @@ object TextProps extends Properties("ocrspark.text") {
       1 -> Gen.oneOf(".", "-", "°", "𝒳", "‍", "́")))
       .map(_.mkString(""))
 
-  property("scanner dict correction equals the regex alternation (adversarial folds)") =
+  property("scanner equals sequential correction on adversarial folds") =
     forAll(foldyText) { t =>
-      Normalize.applyCorrections(t) == Normalize.applyCorrectionsRegex(t)
+      Normalize.applyCorrections(t) == Normalize.applyCorrectionsSequential(t)
     }
 
   // whitespace-torture generator for the hand ws kernels: every Unicode
