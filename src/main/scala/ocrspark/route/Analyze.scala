@@ -1,7 +1,5 @@
 package ocrspark.route
 
-import java.util.regex.Pattern
-
 import ocrspark.model.Analysis
 import ocrspark.parse.PdfExtract
 
@@ -32,9 +30,6 @@ object Analyze {
   val RouteHybrid = "hybrid"
   val RouteOcr = "ocr"
 
-  private val reWs =
-    Pattern.compile("""\s+""", Pattern.UNICODE_CHARACTER_CLASS)
-
   private def cpLen(s: String): Int = s.codePointCount(0, s.length)
 
   /** The analyzer's `sample_text`: the first 500 code points, stripped
@@ -60,7 +55,7 @@ object Analyze {
       doc.pages.take(toCheck).foreach { p =>
         if (p.error == null) { // page error → skip (app.py:278-280)
           val clean = ocrspark.text.Normalize.pyStrip(
-            reWs.matcher(if (p.text == null) "" else p.text).replaceAll(" "))
+            ocrspark.text.Normalize.squashWs(if (p.text == null) "" else p.text))
           totalText.append(clean).append(' ')
           if (p.hasImage) imageCount += 1
         }

@@ -15,7 +15,8 @@ import scala.collection.immutable.ListMap
   * Python fidelity: patterns compiled `re.I` ⇒ Java
   * `CASE_INSENSITIVE|UNICODE_CASE|UNICODE_CHARACTER_CLASS`;
   * `match.lastindex` ⇒ highest non-null Java group; value cleanup is
-  * `\s+`→' ', trailing `[|#]+` strip, Python-strip.
+  * `\s+`→' ', trailing `[|#]+` strip, Python-strip. Each pattern is
+  * tried only where its match can start ([[Anchored]]).
   */
 object Fields {
 
@@ -78,46 +79,36 @@ object Fields {
     ),
   )
 
-  private val compiled: Array[(String, Array[Pattern])] =
-    fieldPatterns.map { case (f, ps) =>
-      f -> ps.map(Pattern.compile(_, Normalize.UniFlags)).toArray
-    }.toArray
-
-  /** Cheap skip-guards per field (perf only): a field whose patterns all
-    * hinge on a distinctive case-folded literal (or any digit) is
-    * skipped when none occurs — one lowercase copy feeds every check.
-    * Same exotic-case-fold caveat as Normalize.patternGuards; the golden
-    * corpus arbitrates. Needle lists include the OCR l-variants. */
-  private val fieldGuards: Map[String, (Array[String], Boolean)] = Map(
-    "carpeta_fiscal" -> (Array("carpeta"), true),
-    "expediente" -> (Array("exp"), true),
-    "fiscalia" -> (Array("fiscal", "flscal"), false),
-    "distrito_fiscal" -> (Array("distrito", "dlstrlto"), false),
-    "delito" -> (Array("delito", "dellto", "contra", "usurpaci", "apropiaci"), false),
-    "imputado" -> (Array("imputado", "lmputado", "investigado"), false),
-    "agraviado" -> (Array("agraviado", "agravlado"), false),
-    "fecha" -> (Array.empty[String], true),
-    "resolucion" -> (Array("resoluci"), true),
-    "juzgado" -> (Array("juzgado"), false),
-    "juez" -> (Array("jue", "magistrado"), false),
-    "fiscal" -> (Array("fiscal", "flscal"), false),
-  )
-  private val compiledWithGuards: Array[(String, Array[Pattern], Array[String], Boolean)] =
-    compiled.map { case (f, ps) =>
-      val (needles, digit) = fieldGuards(f)
-      (f, ps, needles, digit)
-    }
-
-  @inline private def hasDigit(s: String): Boolean = {
-    var i = 0
-    while (i < s.length) {
-      if (Character.isDigit(s.charAt(i))) return true
-      i += 1
-    }
-    false
+  /** Where each field pattern's match can start: at its case-folded
+    * leading literal, or at a digit for the two numeric dates. */
+  private val fieldStarts: Map[String, Vector[Anchored.Anchor]] = {
+    import Anchored._
+    Map(
+      "carpeta_fiscal" -> Vector(Lit("carpeta"), Lit("carpeta")),
+      "expediente" -> Vector(Lit("exp"), Lit("exp")),
+      "fiscalia" -> Vector(Lit("fiscalía"), Lit("flscalía")),
+      "distrito_fiscal" -> Vector(Lit("distrito"), Lit("dlstrlto")),
+      "delito" -> Vector(Lit("delito"), Lit("dellto"), Lit("contra"),
+        Lit("usurpación"), Lit("apropiación")),
+      "imputado" -> Vector(Lit("imputado"), Lit("lmputado"), Lit("investigado")),
+      "agraviado" -> Vector(Lit("agraviado"), Lit("agravlado")),
+      "fecha" -> Vector(Digit, Lit("fecha"), Digit),
+      "resolucion" -> Vector(Lit("resolución"), Lit("resolucion")),
+      "juzgado" -> Vector(Lit("juzgado"), Lit("juzgado")),
+      "juez" -> Vector(Lit("jue"), Lit("magistrado")),
+      "fiscal" -> Vector(Lit("fiscal"), Lit("flscal")),
+    )
   }
 
-  private val reWs = Pattern.compile("""\s+""", Pattern.UNICODE_CHARACTER_CLASS)
+  private[text] val compiled: Array[(String, Array[Anchored])] =
+    fieldPatterns.map { case (f, ps) =>
+      val starts = fieldStarts(f)
+      require(starts.length == ps.length, f)
+      f -> ps.zip(starts).map { case (p, a) =>
+        new Anchored(p, Normalize.UniFlags, a)
+      }.toArray
+    }.toArray
+
   private val reTrailJunk = Pattern.compile("""[|#]+$""")
   // fecha post-processing (app.py:528)
   private val reLongDate = Pattern.compile(
@@ -131,7 +122,7 @@ object Fields {
   }
 
   private def cleanValue(raw: String): String = {
-    var v = reWs.matcher(raw).replaceAll(" ")
+    var v = Normalize.squashWs(raw)
     v = reTrailJunk.matcher(v).replaceAll("")
     Normalize.pyStrip(v)
   }
@@ -140,20 +131,16 @@ object Fields {
     * with `fecha_normalizada` appended last (app.py:524-531). */
   def extract(text: String): Map[String, String] = {
     if (text == null) return Map.empty
-    val lowered = text.toLowerCase(java.util.Locale.ROOT)
-    val digits = hasDigit(text)
+    val folded = Normalize.foldString(text)
     var fields = ListMap.empty[String, String]
     var fi = 0
-    while (fi < compiledWithGuards.length) {
-      val (name, pats, needles, needsDigit) = compiledWithGuards(fi)
-      val applicable =
-        (!needsDigit || digits) &&
-          (needles.isEmpty || needles.exists(lowered.contains(_)))
+    while (fi < compiled.length) {
+      val (name, pats) = compiled(fi)
       var pi = 0
-      var done = !applicable
+      var done = false
       while (pi < pats.length && !done) {
-        val m = pats(pi).matcher(text)
-        if (m.find()) {
+        val m = pats(pi).find(text, folded, 0)
+        if (m != null) {
           val raw =
             if (lastIndex(m) >= 1) Normalize.pyStrip(m.group(1))
             else Normalize.pyStrip(m.group(0))

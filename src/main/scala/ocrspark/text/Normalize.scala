@@ -22,9 +22,10 @@ import java.util.regex.{Matcher, Pattern}
   *     custom [[pyStrip]] (Java `String.strip` misses U+00A0).
   *
   * Scale note: normalization is the dominant per-row cost at 10^12-doc
-  * scale. All patterns are compiled once per JVM (executor-shared). The
-  * 48 word corrections apply via a single hand-rolled word-run scanner
-  * ([[applyCorrections]]) and the five always-on whitespace regexes via
+  * scale. All patterns are compiled once per JVM (executor-shared), and
+  * each pattern-table regex is tried only where its match can start
+  * ([[Anchored]]). The 48 word corrections apply via a single
+  * hand-rolled word-run scanner ([[applyCorrections]]) and the five always-on whitespace regexes via
   * single-pass kernels — each differentially pinned against its regex
   * original (TextProps properties incl. full-BMP \w and \s sweeps,
   * [[applyCorrectionsSequential]] cross-checks in GoldenSpec/TextProps)
@@ -113,40 +114,28 @@ object Normalize {
         Matcher.quoteReplacement(v)
     }
 
-  private val compiledPatterns: Array[(Pattern, String)] =
-    patternTable.map { case (p, r) =>
-      Pattern.compile(p, UniFlags | Pattern.MULTILINE) -> r
-    }.toArray
-
-  /** Cheap skip-guards per pattern-table entry (perf only — a pattern
-    * whose distinctive literal (case-folded) is absent cannot match, so
-    * its scan is skipped; empty seq + needsDigit=false ⇒ always run).
-    * Guarded needles are checked against ONE lowercase copy of the text.
-    * (Assumption, documented: no Turkish dotted-İ/Kelvin-K inside legal
-    * keywords — exotic case folds where toLowerCase ≠ regex simple fold.)
-    * Replacements earlier in the chain only insert words already covered
-    * by their own family's needles, so guard staleness cannot skip a
-    * newly-enabled match — verified by the golden corpus. */
-  private val patternGuards: Array[(Array[String], Boolean)] = Array(
-    (Array("carpeta"), true), (Array("carpeta"), true), // 1-2
-    (Array("exp"), true), (Array("exp"), true), // 3-4
-    (Array("resoluci"), true), (Array("resoluci"), true), // 5-6
-    (Array("fiscal"), false), (Array("flscal"), false), // 7-8
-    (Array.empty[String], true), (Array.empty[String], true), // dates: digits
-    (Array.empty[String], true), (Array.empty[String], true), // plates: digits
-    (Array("art"), true), (Array("inc"), true), // 13-14
-    (Array.empty[String], false), (Array.empty[String], false), // ws cleanup
-  )
-  require(patternGuards.length == patternTable.length)
-
-  @inline private def hasDigit(s: String): Boolean = {
-    var i = 0
-    while (i < s.length) {
-      if (Character.isDigit(s.charAt(i))) return true
-      i += 1
-    }
-    false
+  /** Where each regex rule's match can start (rules 15-16 are hand
+    * kernels): at its case-folded leading literal; at a digit for the
+    * dates; 1-4 chars before a digit run for the plates (two or three
+    * letters, then an optional separator). */
+  private val patternStarts: Array[Anchored.Anchor] = {
+    import Anchored._
+    Array(
+      Lit("carpeta"), Lit("carpeta"), // 1-2
+      Lit("exp"), Lit("exp"), // 3-4
+      Lit("resolución"), Lit("resolucion"), // 5-6
+      Lit("fiscalía"), Lit("flscalía"), // 7-8
+      Digit, Digit, // 9-10 dates
+      BeforeDigitRun(4), BeforeDigitRun(3), // 11-12 plates
+      Lit("art"), Lit("inc"), // 13-14
+    )
   }
+  require(patternStarts.length == patternTable.length - 2)
+
+  private[text] val anchoredPatterns: Array[(Anchored, String)] =
+    patternStarts.zip(patternTable).map { case (a, (p, r)) =>
+      new Anchored(p, UniFlags | Pattern.MULTILINE, a) -> r
+    }
 
   // Cleanup-tail regexes (app.py:447-449); \s Unicode-aware like Python.
   // Retained as the differential reference for the hand kernels below.
@@ -196,13 +185,22 @@ object Normalize {
   /** Java regex CASE_INSENSITIVE|UNICODE_CASE char equivalence class
     * representative: toLowerCase(toUpperCase(c)) (simple fold, char-wise,
     * length-preserving — NOT String.toLowerCase, which expands 'İ'). */
-  @inline private def foldChar(c: Char): Char =
+  @inline private[text] def foldChar(c: Char): Char =
     Character.toLowerCase(Character.toUpperCase(c))
 
-  private def foldString(s: String): String = {
-    val a = new Array[Char](s.length)
+  /** [[foldChar]] over every char; indices are kept. */
+  private[text] def foldString(s: String): String = {
+    val n = s.length
+    val a = new Array[Char](n)
     var i = 0
-    while (i < s.length) { a(i) = foldChar(s.charAt(i)); i += 1 }
+    while (i < n) {
+      val c = s.charAt(i)
+      a(i) =
+        if (c >= 0x80) foldChar(c)
+        else if (c >= 'A' && c <= 'Z') (c + 32).toChar
+        else c
+      i += 1
+    }
     new String(a)
   }
 
@@ -247,6 +245,27 @@ object Normalize {
         var j = i + 1
         while (j < n && isWsCh(text.charAt(j))) j += 1
         if (j - i >= 2) {
+          if (sb == null) sb = new java.lang.StringBuilder(n)
+          sb.append(text, copied, i).append(' ')
+          copied = j
+        }
+        i = j
+      } else i += 1
+    }
+    if (sb == null) text else { sb.append(text, copied, n); sb.toString }
+  }
+
+  /** `\s+` → " " (field values, analyzer page text). */
+  private[ocrspark] def squashWs(text: String): String = {
+    val n = text.length
+    var sb: java.lang.StringBuilder = null
+    var copied = 0
+    var i = 0
+    while (i < n) {
+      if (isWsCh(text.charAt(i))) {
+        var j = i + 1
+        while (j < n && isWsCh(text.charAt(j))) j += 1
+        if (j - i >= 2 || text.charAt(i) != ' ') {
           if (sb == null) sb = new java.lang.StringBuilder(n)
           sb.append(text, copied, i).append(' ')
           copied = j
@@ -432,17 +451,12 @@ object Normalize {
     * (app.py:434-451). Byte-identical to CPython on the golden corpus. */
   def normalizeLegal(text: String): String = {
     var t = applyCorrections(text)
-    // one lowercase copy + one digit flag feed all pattern guards
-    val lowered = t.toLowerCase(java.util.Locale.ROOT)
-    val digits = hasDigit(t)
+    var folded = foldString(t)
     var i = 0
-    val ps = compiledPatterns
-    while (i < ps.length - 2) { // last 2 (ws collapse) are hand kernels
-      val (needles, needsDigit) = patternGuards(i)
-      val applicable =
-        (!needsDigit || digits) &&
-          (needles.isEmpty || needles.exists(lowered.contains(_)))
-      if (applicable) t = ps(i)._1.matcher(t).replaceAll(ps(i)._2)
+    while (i < anchoredPatterns.length) {
+      val (p, r) = anchoredPatterns(i)
+      val u = p.replaceAll(t, folded, r)
+      if (u ne t) { t = u; folded = foldString(t) }
       i += 1
     }
     t = collapseWsRuns(t) // \s{2,} → " "

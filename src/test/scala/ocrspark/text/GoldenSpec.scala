@@ -79,6 +79,24 @@ class GoldenSpec extends AnyFunSuite {
     assert(Fields.extract(c.input) == c.fieldsRaw)
   }
 
+  // Cases outside the golden corpus (tools/gen_golden.py needs the
+  // reference app to add them); the expected values are CPython `re`
+  // output for the same patterns and flags.
+
+  test("exotic case folds (ſ, İ) match the fiscal pattern as CPython re.I does") {
+    // re.search(r"FISCAL[:\s]+([A-ZÁÉÍÓÚÑ\s]+?)(?:\n|$)", s, re.I).group(1)
+    Seq("FIſCAL: JUAN PEREZ\n", "FİSCAL: JUAN PEREZ\n").foreach { s =>
+      assert(Fields.extract(s) == Map("fiscal" -> "JUAN PEREZ"), s)
+    }
+  }
+
+  test("astral digits are \\d, as in CPython re") {
+    // re.sub(r"Inc\.?\s*(\d+)", r"Inciso \1", "inc𝟏𝟐", flags=re.I|re.M)
+    assert(Normalize.normalizeLegal("inc𝟏𝟐") == "Inciso 𝟏𝟐")
+    // re.search(r"(\d{1,2})\s+de\s+(\w+)\s+del?\s+(\d{4})", s, re.I).group(1)
+    assert(Fields.extract("𝟏𝟐 de marzo del 𝟐𝟎𝟐𝟒") == Map("fecha" -> "𝟏𝟐"))
+  }
+
   test("one-pass dict correction == sequential reference order on every case") {
     cases.foreach { c =>
       assert(Normalize.applyCorrections(c.input) ==

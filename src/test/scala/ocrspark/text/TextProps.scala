@@ -1,7 +1,11 @@
 package ocrspark.text
 
+import java.util.regex.{Matcher, Pattern}
+
 import org.scalacheck.{Gen, Prop, Properties}
-import org.scalacheck.Prop.forAll
+import org.scalacheck.Prop.{forAll, propBoolean}
+import org.scalacheck.rng.Seed
+import scala.collection.immutable.ListMap
 
 import ocrspark.model.PageResult
 import ocrspark.parse.{PdfExtract, PdfWriter}
@@ -135,6 +139,130 @@ object TextProps extends Properties("ocrspark.text") {
       Fields.extract(t).forall { case (k, v) =>
         knownKeys.contains(k) && v.nonEmpty && v == Normalize.pyStrip(v)
       }
+    }
+
+  // --- anchored pattern search vs plain java.util.regex -----------------
+  //
+  // Adversarial generator for Anchored and the chains built on it: the
+  // tables' literals with exotic case folds (ſ folds to s, İ and ı to i,
+  // the Kelvin sign to k), astral and full-width digits, astral letters,
+  // NBSP, plate-like digit runs and `|#` value tails.
+  private val legalBit = Gen.oneOf(
+    "CARPETA FISCAL: ", "carpeta  fiscal", "CARPETA FlSCAL:", "CARPETA FIſCAL ",
+    "Carpeta Fİscal ", "0123456789-2024-12-3", "1234567890-2024-1-12",
+    "EXP. N° ", "EXPEDIENTE Nº ", "exp", "ExPEDlENTE N°", "eXp.n",
+    "01234-2024-0-0401-JR-PE", "12345-2024-123-ABCD-XY",
+    "RESOLUCIÓN N° ", "resolucion nº", "RESOLUCİON ", "Reſolución", "12-3",
+    "FISCALÍA PROVINCIAL PENAL", "FlSCALÍA PROVlNClAL ClVlL",
+    "fiſcalía provincial familia", "FISCALIA SUPERIOR ", "SUPREMA",
+    "DISTRITO", "DISTRITO FISCAL DE AREQUIPA", "DlSTRlTO FlSCAL DE ",
+    "DELITO: ", "DELlTO:", "deliTo ", "CONTRA EL PATRIMONIO", "USURPACIÓN",
+    "usurpación", "APROPIACIÓN ILÍCITA", "IMPUTADO: ", "lMPUTADO:",
+    "ımputado ", "INVESTIGADO:", "AGRAVIADO: ", "AGRAVlADO", "FECHA: ",
+    "fecha:", "12 de marzo del 2024", "1 de enero de 2023", "03/04/2024",
+    "3-4-2024", "JUZGADO PENAL ", "JUZGADO ", " DE ", "JUEZ: ", "JUES:",
+    "MAGISTRADO: ", "FISCAL: ", "FİSCAL: ", "FIſCAL:", "FlSCAL:", "Art. 5°",
+    "ART 12º", "art", "Inc. 3", "INC 4", "inc𝟏𝟐", "JUAN PEREZ",
+    "MARÍA ÑAÑEZ")
+  private val digitBit = Gen.oneOf(
+    "ABC1234", "ABC-123", "AB 1234", "ABC 123", "XY-9876", "abc123",
+    "ſſS 123", "KKK-123", "İı 1234", "ABCD1234", "1", "12", "123",
+    "1234", "2024", "𝟏𝟐", "𝟏𝟐𝟑", "𝟐𝟎𝟐𝟒", "１２", "１２３４", "٣")
+  private val oddBit = Gen.oneOf(
+    "ſ", "İ", "ı", "K", "𝐀", "𝒳", " ", " ", "\n", "\n\n",
+    " ", "  ", ":", "|#", "||", "#", ".", "-", "/", "°", "º", "a", "Z", "ñ")
+  private val anchorText: Gen[String] =
+    Gen.choose(1, 24).flatMap(n => Gen.listOfN(n,
+      Gen.frequency(4 -> legalBit, 3 -> digitBit, 3 -> oddBit))
+    ).map(_.mkString(""))
+
+  /** `n` texts from consecutive seeds after a random base (printed on
+    * failure), for properties that need more samples than forAll's 100. */
+  private def samples(n: Int)(ok: String => Boolean): Prop = {
+    val base = Seed.random()
+    val bad = Iterator.range(0, n).map { i =>
+      anchorText.pureApply(Gen.Parameters.default, base.reseed(i.toLong))
+    }.find(t => !ok(t))
+    bad.isEmpty :| s"counterexample (base seed ${base.toBase64}): " +
+      bad.map(_.flatMap(c => if (c < 0x20 || c > 0x7E) f"\\u${c.toInt}%04x" else c.toString))
+  }
+
+  private def sameMatch(a: Matcher, b: Matcher): Boolean =
+    if (a == null || b == null) a == null && b == null
+    else a.start() == b.start() && a.end() == b.end() &&
+      a.groupCount() == b.groupCount() &&
+      (1 to a.groupCount()).forall(g => a.group(g) == b.group(g))
+
+  /** Every anchored table pattern with its plain counterpart and a
+    * replacement: the table's own for Normalize, every group for Fields. */
+  private lazy val anchoredVsPlain: Seq[(Anchored, Pattern, String)] =
+    Normalize.anchoredPatterns.toSeq.zip(Normalize.patternTable).map {
+      case ((a, r), (src, _)) =>
+        (a, Pattern.compile(src, Normalize.UniFlags | Pattern.MULTILINE), r)
+    } ++ Fields.compiled.toSeq.zip(Fields.fieldPatterns).flatMap {
+      case ((_, as), (_, srcs)) => as.toSeq.zip(srcs).map { case (a, src) =>
+        val p = Pattern.compile(src, Normalize.UniFlags)
+        (a, p, (1 to p.matcher("").groupCount()).map("<$" + _ + ">").mkString("[", "", "]"))
+      }
+    }
+
+  property("anchored find/replaceAll equal Matcher.find/replaceAll on every table pattern") =
+    samples(10000) { t =>
+      val folded = Normalize.foldString(t)
+      anchoredVsPlain.forall { case (a, p, r) =>
+        (0 to t.length by math.max(1, t.length / 4)).forall { from =>
+          val m = p.matcher(t)
+          sameMatch(a.find(t, folded, from), if (m.find(from)) m else null)
+        } && a.replaceAll(t, folded, r) == p.matcher(t).replaceAll(r)
+      }
+    }
+
+  // The unguarded regex chains: the reference order with plain
+  // replaceAll / find, no skip of any pattern.
+  private lazy val plainRules = Normalize.patternTable.map { case (p, r) =>
+    Pattern.compile(p, Normalize.UniFlags | Pattern.MULTILINE) -> r
+  }
+  private def plainNormalize(text: String): String = {
+    var t = Normalize.applyCorrectionsSequential(text)
+    plainRules.foreach { case (p, r) => t = p.matcher(t).replaceAll(r) }
+    t = Normalize.reCrLf.matcher(t).replaceAll("\n")
+    t = Normalize.reSpTab.matcher(t).replaceAll(" ")
+    t = Normalize.reTripleNl.matcher(t).replaceAll("\n\n")
+    Normalize.pyStrip(t)
+  }
+  private lazy val plainFieldRules = Fields.fieldPatterns.map { case (f, ps) =>
+    f -> ps.map(Pattern.compile(_, Normalize.UniFlags))
+  }
+  private val reWs = Pattern.compile("\\s+", Pattern.UNICODE_CHARACTER_CLASS)
+  private val reTrailJunk = Pattern.compile("[|#]+$")
+  private val reLongDate = Pattern.compile(
+    "(\\d{1,2})\\s+de\\s+(\\w+)\\s+del?\\s+(\\d{4})", Normalize.UniFlags)
+  private def plainExtract(text: String): Map[String, String] = {
+    var fields = ListMap.empty[String, String]
+    plainFieldRules.foreach { case (f, ps) =>
+      ps.iterator.map(_.matcher(text)).filter(_.find()).map { m =>
+        val lastIndex = (0 to m.groupCount()).findLast(m.group(_) != null).get
+        var v = Normalize.pyStrip(m.group(if (lastIndex >= 1) 1 else 0))
+        v = reWs.matcher(v).replaceAll(" ")
+        Normalize.pyStrip(reTrailJunk.matcher(v).replaceAll(""))
+      }.find(_.nonEmpty).foreach(v => fields = fields.updated(f, v))
+    }
+    fields.get("fecha").map(reLongDate.matcher(_)).filter(_.find()).foreach { m =>
+      fields = fields.updated("fecha_normalizada",
+        s"${m.group(1)} de ${m.group(2).toLowerCase(java.util.Locale.ROOT)} del ${m.group(3)}")
+    }
+    fields
+  }
+
+  property("normalizeLegal and Fields.extract equal the unguarded regex chain") =
+    samples(50000) { t =>
+      Normalize.normalizeLegal(t) == plainNormalize(t) &&
+        Fields.extract(t) == plainExtract(t)
+    }
+
+  property("squashWs equals regex \\s+ replaceAll") =
+    forAll(wsText) { t =>
+      Normalize.squashWs(t) == reWs.matcher(t).replaceAll(" ")
     }
 
   property("OCR-path assembly renders exactly one separator per page") =
