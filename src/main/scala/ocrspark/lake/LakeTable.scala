@@ -5,9 +5,19 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.sql.Timestamp
 
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
+import org.apache.parquet.ParquetReadOptions
+import org.apache.parquet.conf.PlainParquetConfiguration
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.io.LocalInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** Iceberg-shaped snapshot/commit layer over Parquet (SURVEY.md §1.2):
   * no Iceberg runtime exists in this sandbox, so the semantics the north
@@ -18,13 +28,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Layout under `root/`:
   *   data/snap-<id>/bucket=<b>/part-*.parquet   (staged by writer)
-  *   snapshots/snapshot-<id>.json               (manifest: bucket → files,
+  *   snapshots/snapshot-<id>.json               (manifest: bucket → files
+  *                                               and their byte `sizes`,
+  *                                               the table's Spark `schema`,
   *                                               plus a `metrics` object:
   *                                               stage → counter → value)
   *   _current                                   (atomic pointer, rename)
   *
   * Readers only ever see files listed in the manifest of `_current`;
   * a crashed writer leaves staged data that is invisible until commit.
+  * A read plans its scan from the manifest alone: it lists no
+  * directory and infers no schema, so it runs no Spark job before its
+  * action. Every commit keeps the schema of its parent.
   * At cluster scale the manifest write is one driver-side file per
   * commit — no coordination beyond the atomic rename.
   */
@@ -35,14 +50,18 @@ class LakeTable(val root: String) {
   private def currentFile = new File(root, "_current")
 
   /** `added` = snapshot id that first wrote this bucket's files —
-    * preserved across commits so lineage shows true provenance. */
+    * preserved across commits so lineage shows true provenance.
+    * `sizes` = each file's length in bytes; `commit` records them. */
   case class BucketEntry(bucket: Int, files: Seq[String], nDocs: Long,
-                         nBytes: Long, added: Long = 0L)
+                         nBytes: Long, added: Long = 0L,
+                         sizes: Seq[Long] = Nil)
   /** `metrics`: stage → counters, this snapshot's own (not inherited
-    * from its parent — Iceberg's snapshot `summary`). */
+    * from its parent — Iceberg's snapshot `summary`). `schema`: the
+    * Spark schema of every listed file (empty while none is listed). */
   case class Snapshot(id: Long, parent: Long, committedTs: Long,
                       buckets: Seq[BucketEntry],
-                      metrics: Map[String, Seq[(String, Long)]] = Map.empty)
+                      metrics: Map[String, Seq[(String, Long)]] = Map.empty,
+                      schema: StructType = new StructType())
 
   def currentSnapshotId: Option[Long] =
     if (!currentFile.exists()) None
@@ -58,9 +77,12 @@ class LakeTable(val root: String) {
       val files = Vector.newBuilder[String]
       val fs = b.get("files").elements()
       while (fs.hasNext) files += fs.next().asText()
+      val sizes = Vector.newBuilder[Long]
+      val ss = b.get("sizes").elements()
+      while (ss.hasNext) sizes += ss.next().asLong()
       out += BucketEntry(b.get("bucket").asInt(), files.result(),
         b.get("n_docs").asLong(), b.get("n_bytes").asLong(),
-        b.get("added").asLong())
+        b.get("added").asLong(), sizes.result())
     }
     val metrics = Map.newBuilder[String, Seq[(String, Long)]]
     Option(node.get("metrics")).foreach { _.properties().forEach { st =>
@@ -69,7 +91,8 @@ class LakeTable(val root: String) {
       metrics += st.getKey -> counters.result()
     } }
     Snapshot(node.get("id").asLong(), node.get("parent").asLong(),
-      node.get("committed_ts").asLong(), out.result(), metrics.result())
+      node.get("committed_ts").asLong(), out.result(), metrics.result(),
+      DataType.fromJson(node.get("schema").toString).asInstanceOf[StructType])
   }
 
   def currentSnapshot: Option[Snapshot] = currentSnapshotId.map(snapshot)
@@ -88,21 +111,38 @@ class LakeTable(val root: String) {
   /** Atomically commit: parent's surviving buckets + the new entries,
     * with `metrics` (stage → counters) in the same manifest. New entries
     * shadow a parent bucket of the same id (overwrite semantics per
-    * partition). */
+    * partition). The manifest records each new file's size, stat'ed
+    * here, and the table's schema, read from the footer of the first
+    * new file; the files of one commit come from one write. A commit
+    * whose schema differs from its parent's is refused. */
   def commit(newEntries: Seq[BucketEntry],
              metrics: Map[String, Seq[(String, Long)]] = Map.empty,
              ts: Long = System.currentTimeMillis()): Long = synchronized {
     val parentId = currentSnapshotId.getOrElse(0L)
     val id = parentId + 1
-    val parentBuckets: Seq[BucketEntry] =
-      if (parentId == 0) Seq.empty
-      else {
-        val newIds = newEntries.map(_.bucket).toSet
-        snapshot(parentId).buckets.filterNot(b => newIds.contains(b.bucket))
+    val parent = if (parentId == 0) None else Some(snapshot(parentId))
+    val newIds = newEntries.map(_.bucket).toSet
+    val parentBuckets = parent.toSeq.flatMap(
+      _.buckets.filterNot(b => newIds.contains(b.bucket)))
+    val parentSchema = parent.map(_.schema).getOrElse(new StructType())
+    val schema = newEntries.flatMap(_.files).headOption match {
+      case None => parentSchema
+      case Some(f) =>
+        val s = LakeTable.footerSchema(f)
+        require(parentSchema.isEmpty || s == parentSchema,
+          s"$f has schema ${s.simpleString}, table $root has ${parentSchema.simpleString}")
+        s
+    }
+    val added = newEntries.map { e =>
+      val sizes = e.files.map { f =>
+        val file = new File(f)
+        require(file.isFile, s"$f is not a file")
+        file.length()
       }
-    val all = (parentBuckets ++ newEntries.map(e =>
-      if (e.added == 0L) e.copy(added = id) else e)).sortBy(_.bucket)
-    writeManifest(Snapshot(id, parentId, ts, all, metrics))
+      e.copy(added = if (e.added == 0L) id else e.added, sizes = sizes)
+    }
+    val all = (parentBuckets ++ added).sortBy(_.bucket)
+    writeManifest(Snapshot(id, parentId, ts, all, metrics, schema))
     // atomic pointer flip
     replace(Paths.get(root, s"_current.tmp$id"), currentFile,
       id.toString.getBytes(StandardCharsets.UTF_8))
@@ -123,6 +163,7 @@ class LakeTable(val root: String) {
     rootNode.put("id", s.id)
     rootNode.put("parent", s.parent)
     rootNode.put("committed_ts", s.committedTs)
+    rootNode.set[ObjectNode]("schema", mapper.readTree(s.schema.json))
     val arr: ArrayNode = rootNode.putArray("buckets")
     s.buckets.foreach { e =>
       val b = arr.addObject()
@@ -132,6 +173,8 @@ class LakeTable(val root: String) {
       b.put("added", e.added)
       val fs = b.putArray("files")
       e.files.foreach(fs.add)
+      val ss = b.putArray("sizes")
+      e.sizes.foreach(ss.add(_))
     }
     val m = rootNode.putObject("metrics")
     s.metrics.foreach { case (stage, counters) =>
@@ -167,10 +210,16 @@ class LakeTable(val root: String) {
     readSnapshot(spark, snapshot(id))
   }
 
+  /** The relation `spark.read.parquet(files: _*)` would build, built
+    * from the manifest: its file statuses and its schema. */
   private def readSnapshot(spark: SparkSession, s: Snapshot): DataFrame = {
-    val files = s.buckets.flatMap(_.files)
+    val files = s.buckets.flatMap(b => b.files.zip(b.sizes)).map { case (f, n) =>
+      new FileStatus(n, false, 0, 0L, 0L, new HPath(new File(f).toURI))
+    }
     if (files.isEmpty) spark.emptyDataFrame
-    else spark.read.parquet(files: _*)
+    else spark.baseRelationToDataFrame(HadoopFsRelation(
+      new LakeTable.ManifestIndex(files), new StructType(), s.schema, None,
+      new ParquetFileFormat, Map.empty)(spark))
   }
 
   /** Per-partition lineage rows (FIXTURES.md §1.3). */
@@ -209,8 +258,49 @@ class LakeTable(val root: String) {
   }
 }
 
-/** Helpers used by the incremental writer. */
+/** Helpers used by the incremental writer and the manifest reader. */
 object LakeTable {
+
+  /** The footer key under which Spark's parquet writer stores the
+    * row schema; `spark.read.parquet` infers its schema from it. */
+  private val RowSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** The Spark schema of the parquet file `file`, read from its footer
+    * on the driver, all fields nullable as `spark.read.parquet` reads
+    * them. The plain configuration keeps Hadoop's `Configuration` out:
+    * building one re-parses Hadoop's default resources, which costs
+    * many times the footer read itself. */
+  private def footerSchema(file: String): StructType = {
+    val reader = ParquetFileReader.open(new LocalInputFile(Paths.get(file)),
+      ParquetReadOptions.builder(new PlainParquetConfiguration()).build())
+    val json = try reader.getFooter.getFileMetaData.getKeyValueMetaData.get(RowSchemaKey)
+      finally reader.close()
+    require(json != null, s"$file has no Spark schema in its footer")
+    nullable(DataType.fromJson(json)).asInstanceOf[StructType]
+  }
+
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType =>
+      StructType(s.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
+    case other => other
+  }
+
+  /** The listed files of one snapshot, unpartitioned: Spark plans the
+    * scan from these statuses and lists nothing. Equal file lists give
+    * equal indexes, so two reads of one snapshot are the same plan. */
+  private case class ManifestIndex(files: Seq[FileStatus]) extends FileIndex {
+    def rootPaths: Seq[HPath] = files.map(_.getPath)
+    def listFiles(partitionFilters: Seq[Expression],
+                  dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
+      Seq(PartitionDirectory(InternalRow.empty, files.toArray))
+    def inputFiles: Array[String] = files.map(_.getPath.toString).toArray
+    def refresh(): Unit = ()
+    def sizeInBytes: Long = files.map(_.getLen).sum
+    def partitionSchema: StructType = new StructType()
+    override def toString: String = s"ManifestIndex(${files.size} files)"
+  }
 
   /** List staged parquet files per bucket under `stagingDir`
     * (bucket=<b>/part-*.parquet layout from partitionBy). */

@@ -2,6 +2,7 @@ package ocrspark.lake
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.functions.{array_sort, col, map_entries}
 import org.scalatest.funsuite.AnyFunSuite
 
 import ocrspark.SparkSuite
@@ -17,6 +18,23 @@ class LakeSpec extends AnyFunSuite with SparkSuite {
   lazy val pages = {
     val df = Synth.pagesDF(spark, sfDir)
     df.cache(); df.count(); df
+  }
+
+  /** The number of Spark jobs `body` runs; `group` names them. */
+  def jobs(group: String)(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try body finally sc.clearJobGroup()
+    sc.statusTracker.getJobIdsForGroup(group).length
+  }
+
+  /** A table with snapshot 1 = buckets < 20 and snapshot 2 = all. */
+  def twoSnapshots(): LakeTable = {
+    val t = freshTable()
+    IncrementalExtract.run(spark,
+      pages.filter(ExtractJob.bucketCol(ExtractJob.DefaultBuckets) < 20), t)
+    IncrementalExtract.run(spark, pages, t)
+    t
   }
 
   test("full run commits snapshot 1; read() sees exactly the extracted rows") {
@@ -129,12 +147,6 @@ class LakeSpec extends AnyFunSuite with SparkSuite {
     val t = freshTable()
     val nB = ExtractJob.DefaultBuckets
     IncrementalExtract.run(spark, pages.filter(ExtractJob.bucketCol(nB) < 20), t)
-    val sc = spark.sparkContext
-    def jobs(group: String)(body: => Unit): Int = {
-      sc.setJobGroup(group, group)
-      try body finally sc.clearJobGroup()
-      sc.statusTracker.getJobIdsForGroup(group).length
-    }
     val resumed = jobs("lake-resume")(IncrementalExtract.run(spark, pages, t))
     assert(t.currentSnapshotId.contains(2L))
     assert(resumed <= 2, s"resumed commit ran $resumed jobs")
@@ -170,7 +182,7 @@ class LakeSpec extends AnyFunSuite with SparkSuite {
     val t = freshTable()
     val nB = ExtractJob.DefaultBuckets
     // data files don't carry the bucket column (it's the partition dir,
-    // and read() loads explicit file lists) — re-derive it from url
+    // and read() scans the manifest's file list) — re-derive it from url
     def withBucket(df: org.apache.spark.sql.DataFrame) =
       df.withColumn("b", ExtractJob.bucketCol(nB))
     IncrementalExtract.run(spark, pages.filter(ExtractJob.bucketCol(nB) < 20), t)
@@ -197,5 +209,74 @@ class LakeSpec extends AnyFunSuite with SparkSuite {
     // history outside the overwritten bucket is shared, not duplicated
     assert(t.read(spark).count() == 500L - bucket3Old + 1L)
     intercept[IllegalArgumentException] { t.readAt(spark, 4) }
+  }
+
+  test("read and readAt plan from the manifest: no Spark job before the action") {
+    val t = twoSnapshots()
+    // above 32 paths a listing read would list the files in a Spark job
+    assert(t.snapshot(1).buckets.map(_.files.size).sum >= 33)
+    assert(t.snapshot(2).buckets.map(_.files.size).sum >= 33)
+    val read = jobs("lake-read")(t.read(spark))
+    assert(read == 0, s"read ran $read jobs")
+    val readAt = jobs("lake-read-at")(t.readAt(spark, 1))
+    assert(readAt == 0, s"readAt ran $readAt jobs")
+    // the manifest records every file's size as the file system has it
+    t.snapshot(2).buckets.foreach { b =>
+      assert(b.sizes == b.files.map(f => new java.io.File(f).length()), s"bucket ${b.bucket}")
+    }
+  }
+
+  test("read and readAt return what a listing read of their files returns") {
+    val t = twoSnapshots()
+    // snapshot 3 overwrites the buckets >= 40 through a paths-only
+    // commit of a plain partitioned write
+    val nB = ExtractJob.DefaultBuckets
+    val staging = t.stagingDir(3)
+    ExtractJob.run(pages.filter(ExtractJob.bucketCol(nB) >= 40), nB)
+      .write.partitionBy("bucket").parquet(staging)
+    t.commit(LakeTable.stagedEntries(staging).map { case (b, files) =>
+      t.BucketEntry(b, files.map(_.getAbsolutePath), nDocs = 0L, nBytes = 0L)
+    })
+    // set operations take no map column: compare its sorted entries
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.withColumn("fields", array_sort(map_entries(col("fields"))))
+    def same(manifested: org.apache.spark.sql.DataFrame, id: Long): Unit = {
+      val listed = spark.read.parquet(t.snapshot(id).buckets.flatMap(_.files): _*)
+      assert(manifested.schema == listed.schema, s"snapshot $id")
+      assert(rows(manifested).exceptAll(rows(listed)).isEmpty, s"snapshot $id")
+      assert(rows(listed).exceptAll(rows(manifested)).isEmpty, s"snapshot $id")
+    }
+    same(t.read(spark), 3L)
+    same(t.readAt(spark, 1), 1L)
+    same(t.readAt(spark, 2), 2L)
+    assert(t.read(spark).count() == 500L)
+  }
+
+  test("a commit whose file changes the table's schema is refused") {
+    import spark.implicits._
+    val t = freshTable()
+    IncrementalExtract.run(spark, pages, t)
+    val before = t.read(spark).schema
+    val staging = t.stagingDir(2)
+    t.read(spark).drop("error").withColumn("extra", $"text").limit(3)
+      .write.parquet(s"$staging/bucket=3")
+    val files = new java.io.File(s"$staging/bucket=3").listFiles()
+      .filter(_.getName.endsWith(".parquet")).map(_.getPath).toSeq
+    intercept[IllegalArgumentException] {
+      t.commit(Seq(t.BucketEntry(3, files, nDocs = 3L, nBytes = 0L)))
+    }
+    assert(t.currentSnapshotId.contains(1L))
+    assert(t.read(spark).schema == before)
+    assert(t.read(spark).count() == 500L)
+  }
+
+  test("a missing data file fails the read's action, not with fewer rows") {
+    val t = freshTable()
+    IncrementalExtract.run(spark, pages, t)
+    val victim = new java.io.File(t.snapshot(1).buckets.head.files.head)
+    assert(victim.delete())
+    // planning reads only the manifest, so the scan finds the hole
+    val df = t.read(spark)
+    intercept[org.apache.spark.SparkException] { df.count() }
   }
 }
