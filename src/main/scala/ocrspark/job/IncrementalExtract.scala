@@ -18,7 +18,9 @@ import ocrspark.lake.LakeTable
   *   3. extract only the remaining buckets;
   *   4. stage files under data/snap-(next)/bucket=N via one salted
   *      repartition and partitionBy, observing the stage counters and
-  *      per-bucket row counts on the write itself (no re-read);
+  *      per-bucket row counts on the write itself (no re-read); the
+  *      write goes through `LakeTable.LocalFs`, which sets each file's
+  *      and directory's permission bits in-process (no `chmod` fork);
   *   5. commit the manifest — buckets and counters together — and flip
   *      the _current pointer atomically.
   * A crash before (5) leaves staged files invisible to readers; rerun
@@ -75,7 +77,8 @@ object IncrementalExtract {
       .drop("salt")
       .observe(observed, ExtractJob.counters.head,
         ExtractJob.counters.tail :+ bucketDocs(col("bucket")).as("bucket_docs"): _*)
-      .write.mode("overwrite").partitionBy("bucket").parquet(staging)
+      .write.options(LakeTable.LocalFs.options).mode("overwrite")
+      .partitionBy("bucket").parquet(staging)
 
     val staged = LakeTable.stagedEntries(staging)
     if (staged.isEmpty) {

@@ -6,6 +6,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import ocrspark.lake.LakeTable
 import ocrspark.parse.PdfWriter
 
 /** Deterministic synthesis of the `pages` lake table
@@ -477,10 +478,13 @@ object Synth {
       val tmp = new java.io.File(workRoot, s".tmp_$sfName")
       org.apache.commons.io.FileUtils.deleteQuietly(tmp)
       // many files → many input splits: a single parquet file would cap
-      // the downstream scan stage at one task regardless of cores.
+      // the downstream scan stage at one task regardless of cores. The
+      // output is local (published by File.renameTo), so it is written
+      // through LakeTable.LocalFs: no chmod process per file.
       pagesDF(spark, sfDir, replicate)
         .repartition(64, col("url")).sortWithinPartitions("url")
-        .write.mode("overwrite").parquet(tmp.getPath)
+        .write.options(LakeTable.LocalFs.options)
+        .mode("overwrite").parquet(tmp.getPath)
       org.apache.commons.io.FileUtils.deleteQuietly(dest)
       if (!tmp.renameTo(dest))
         throw new java.io.IOException(s"rename $tmp -> $dest failed")

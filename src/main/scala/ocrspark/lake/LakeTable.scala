@@ -3,11 +3,13 @@ package ocrspark.lake
 import java.io.File
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.attribute.PosixFilePermissions
 import java.sql.Timestamp
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
-import org.apache.hadoop.fs.{FileStatus, Path => HPath}
+import org.apache.hadoop.fs.{FileStatus, LocalFileSystem, Path => HPath, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.parquet.ParquetReadOptions
 import org.apache.parquet.conf.PlainParquetConfiguration
 import org.apache.parquet.hadoop.ParquetFileReader
@@ -27,7 +29,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
   * a thin manifest layer. Same contract, swappable for real Iceberg.
   *
   * Layout under `root/`:
-  *   data/snap-<id>/bucket=<b>/part-*.parquet   (staged by writer)
+  *   data/snap-<id>/bucket=<b>/part-*.parquet   (staged by writer,
+  *                                               through [[LakeTable.LocalFs]]:
+  *                                               the bits and `.crc` files a
+  *                                               plain write gives, and no
+  *                                               process per file)
   *   snapshots/snapshot-<id>.json               (manifest: bucket → files
   *                                               and their byte `sizes`,
   *                                               the table's Spark `schema`,
@@ -300,6 +306,33 @@ object LakeTable {
     def sizeInBytes: Long = files.map(_.getLen).sum
     def partitionSchema: StructType = new StructType()
     override def toString: String = s"ManifestIndex(${files.size} files)"
+  }
+
+  /** Hadoop's checksummed local file system over a raw one that sets
+    * permission bits through NIO. With no Hadoop native library,
+    * `RawLocalFileSystem.setPermission` forks `chmod`: one process (~3
+    * ms) for every file, `.crc` and directory a write creates. The bits
+    * are the ones Hadoop computes (0644 files, 0755 directories under
+    * the default umask); a sticky bit, which NIO cannot set, still goes
+    * through `chmod`. A write selects it with [[LocalFs.options]]. */
+  class LocalFs extends LocalFileSystem(new NioPermissions)
+
+  object LocalFs {
+    /** Write options that route one `DataFrameWriter`'s local paths —
+      * its tasks, its committer and `_SUCCESS` — through [[LocalFs]],
+      * leaving the session's own Hadoop conf as it is. The cache is off
+      * because it is keyed by scheme, not conf: a cached instance would
+      * serve, or be served to, every other `file:` access. */
+    val options: Map[String, String] = Map(
+      "fs.file.impl" -> classOf[LocalFs].getName,
+      "fs.file.impl.disable.cache" -> "true")
+  }
+
+  private class NioPermissions extends RawLocalFileSystem {
+    override def setPermission(p: HPath, permission: FsPermission): Unit =
+      if (permission.getStickyBit) super.setPermission(p, permission)
+      else Files.setPosixFilePermissions(pathToFile(p).toPath,
+        PosixFilePermissions.fromString(permission.toString))
   }
 
   /** List staged parquet files per bucket under `stagingDir`

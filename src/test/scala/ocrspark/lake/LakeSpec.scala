@@ -1,7 +1,16 @@
 package ocrspark.lake
 
-import java.nio.file.Files
+import java.io.File
+import java.net.URI
+import java.nio.file.{Files, Paths}
+import java.nio.file.attribute.PosixFilePermissions
 
+import scala.jdk.CollectionConverters._
+
+import jdk.jfr.Recording
+import jdk.jfr.consumer.RecordingFile
+import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.functions.{array_sort, col, map_entries}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -26,6 +35,33 @@ class LakeSpec extends AnyFunSuite with SparkSuite {
     sc.setJobGroup(group, group)
     try body finally sc.clearJobGroup()
     sc.statusTracker.getJobIdsForGroup(group).length
+  }
+
+  /** The command lines of the processes the JVM starts while `body`
+    * runs (JFR `jdk.ProcessStart` events). */
+  def processStarts(body: => Unit): Seq[String] = {
+    val rec = new Recording()
+    rec.enable("jdk.ProcessStart")
+    rec.start()
+    try body finally rec.stop()
+    val dump = Files.createTempFile(root, "processes", ".jfr")
+    try rec.dump(dump) finally rec.close()
+    RecordingFile.readAllEvents(dump).asScala.toSeq
+      .filter(_.getEventType.getName == "jdk.ProcessStart")
+      .map(e => s"${e.getThread.getJavaName}: ${e.getString("command")}")
+  }
+
+  /** Every path under `dir`, `dir` included, as its kind ("dir",
+    * "crc" or "file") and its POSIX bits. */
+  def modes(dir: String): Set[(String, String)] = {
+    val paths = Files.walk(Paths.get(dir))
+    try paths.iterator().asScala.map { p =>
+      val kind =
+        if (Files.isDirectory(p)) "dir"
+        else if (p.getFileName.toString.endsWith(".crc")) "crc"
+        else "file"
+      kind -> PosixFilePermissions.toString(Files.getPosixFilePermissions(p))
+    }.toSet finally paths.close()
   }
 
   /** A table with snapshot 1 = buckets < 20 and snapshot 2 = all. */
@@ -152,6 +188,60 @@ class LakeSpec extends AnyFunSuite with SparkSuite {
     assert(resumed <= 2, s"resumed commit ran $resumed jobs")
     val noop = jobs("lake-noop")(assert(IncrementalExtract.run(spark, pages, t).noop))
     assert(noop <= 2, s"no-op ran $noop jobs")
+  }
+
+  test("a commit and a no-op rerun start no process") {
+    // one-time probes of the JVM, not of a commit: the first Hadoop
+    // write's `Shell` set-up (`setsid`) and the page size that Spark's
+    // executor metrics read once (`getconf PAGESIZE`)
+    IncrementalExtract.run(spark, pages, freshTable())
+    Class.forName("org.apache.spark.executor.ProcfsMetricsGetter$")
+    val t = freshTable()
+    val commit = processStarts(IncrementalExtract.run(spark, pages, t))
+    assert(t.currentSnapshotId.contains(1L))
+    assert(commit.isEmpty, s"commit started ${commit.size}: ${commit.take(3)}")
+    val noop = processStarts(assert(IncrementalExtract.run(spark, pages, t).noop))
+    assert(noop.isEmpty, s"no-op started ${noop.size}: ${noop.take(3)}")
+  }
+
+  test("staged files keep the permission bits and .crc files of a plain write") {
+    val t = freshTable()
+    IncrementalExtract.run(spark, pages, t)
+    val plain = root.resolve("plain-write").toString
+    ExtractJob.run(pages, ExtractJob.DefaultBuckets)
+      .write.partitionBy("bucket").parquet(plain)
+    val staged = modes(t.stagingDir(1))
+    assert(staged == modes(plain))
+    assert(staged == Set("dir" -> "rwxr-xr-x", "file" -> "rw-r--r--",
+      "crc" -> "rw-r--r--"))
+    t.snapshot(1).buckets.flatMap(_.files).foreach { f =>
+      val file = new File(f)
+      assert(new File(file.getParent, s".${file.getName}.crc").isFile, f)
+    }
+    // bits other than the defaults land too, on the file and its .crc
+    val fs = new LakeTable.LocalFs
+    fs.initialize(new URI("file:///"), spark.sparkContext.hadoopConfiguration)
+    val file = new File(t.snapshot(1).buckets.head.files.head)
+    fs.setPermission(new HPath(file.toURI), new FsPermission("640"))
+    Seq(file, new File(file.getParent, s".${file.getName}.crc")).foreach { f =>
+      assert(PosixFilePermissions.toString(
+        Files.getPosixFilePermissions(f.toPath)) == "rw-r-----", f)
+    }
+  }
+
+  test("the lake write's file system stays out of the session") {
+    val hadoopConf = spark.sparkContext.hadoopConfiguration
+    val local = new URI("file:///")
+    // the session's own `file:` class (Hive's jars register a proxy)
+    val before = FileSystem.getFileSystemClass("file", hadoopConf)
+    val t = freshTable()
+    IncrementalExtract.run(spark, pages, t)
+    assert(spark.conf.getOption("fs.file.impl").isEmpty)
+    assert(hadoopConf.get("fs.file.impl") == null)
+    assert(spark.sessionState.newHadoopConf().get("fs.file.impl") == null)
+    assert(FileSystem.getFileSystemClass("file", hadoopConf) == before)
+    assert(FileSystem.get(local, hadoopConf).getClass == before)
+    assert(!FileSystem.get(local, hadoopConf).isInstanceOf[LakeTable.LocalFs])
   }
 
   test("uncommitted staged files are invisible to readers") {
