@@ -19,7 +19,7 @@ import ocrspark.route.Analyze
   *     wide rows, no exploded page shuffle — pages stay inside their
   *     document row (SURVEY.md §2.4 A4).
   *   - [[run]] adds no exchange; the lake writer (`IncrementalExtract`)
-  *     places its own salted repartition.
+  *     places its own `rebalance(bucket)`, which AQE sizes.
   */
 object ExtractJob {
 

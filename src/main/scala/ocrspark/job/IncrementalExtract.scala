@@ -16,9 +16,15 @@ import ocrspark.lake.LakeTable
   *      plain `isin` filter on the bucket column — the committed set is
   *      a few ints read from the manifest, so no join is needed);
   *   3. extract only the remaining buckets;
-  *   4. stage files under data/snap-(next)/bucket=N via one salted
-  *      repartition and partitionBy, observing the stage counters and
-  *      per-bucket row counts on the write itself (no re-read); the
+  *   4. stage files under data/snap-(next)/bucket=N via one
+  *      `rebalance(bucket)` and partitionBy, observing the stage
+  *      counters and per-bucket row counts on the write itself (no
+  *      re-read). AQE sizes the rebalance from the bytes the map side
+  *      produced: a bucket below
+  *      `spark.sql.adaptive.advisoryPartitionSizeInBytes` is one file,
+  *      a larger one splits at map-output boundaries. With AQE off
+  *      Spark drops the hint and the write runs unshuffled: the same
+  *      rows, per-bucket counts and counters, only more files. The
   *      write goes through `LakeTable.LocalFs`, which sets each file's
   *      and directory's permission bits in-process (no `chmod` fork);
   *   5. commit the manifest — buckets and counters together — and flip
@@ -48,8 +54,6 @@ object IncrementalExtract {
     def outputEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
   }
 
-  private[job] val Salts = 8
-
   def run(spark: SparkSession, pages: DataFrame, table: LakeTable): Summary = {
     // a table's bucket count is fixed by the buckets its manifest lists
     val nBuckets = ExtractJob.DefaultBuckets
@@ -63,18 +67,12 @@ object IncrementalExtract {
     val staging = table.stagingDir(nextId)
     val observed = Observation()
     val bucketDocs = udaf(new BucketDocs(nBuckets), Encoders.scalaInt)
-    // Step 4's one shuffle, `spark.sql.shuffle.partitions` wide (a
-    // deployment setting), grouped by (bucket, salt). Extraction runs
-    // map-side before it, so only the extracted output (≪ raw html)
-    // crosses it. Per-doc cost varies ~100× and crawl order skews bytes
-    // per bucket, so the salt spreads each bucket over `Salts` tasks
-    // while `partitionBy(bucket)` still lands few files per bucket dir.
+    // Step 4's one shuffle: a rebalance on `bucket`, which AQE sizes
+    // from the map output bytes it measures (the advisory partition
+    // size is the deployment's). Extraction runs map-side before it, so
+    // only the extracted output (≪ raw html) crosses it.
     ExtractJob.run(todo, nBuckets)
-      .withColumn("salt",
-        pmod(xxhash64(col("url"), col("warc_ts")), lit(Salts)).cast("int"))
-      .repartition(todo.sparkSession.sessionState.conf.numShufflePartitions,
-        col("bucket"), col("salt"))
-      .drop("salt")
+      .hint("rebalance", col("bucket"))
       .observe(observed, ExtractJob.counters.head,
         ExtractJob.counters.tail :+ bucketDocs(col("bucket")).as("bucket_docs"): _*)
       .write.options(LakeTable.LocalFs.options).mode("overwrite")

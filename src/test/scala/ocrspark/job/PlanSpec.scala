@@ -4,7 +4,12 @@ import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.exchange.{REBALANCE_PARTITIONS_BY_COL, ShuffleExchangeLike}
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
@@ -15,11 +20,15 @@ import ocrspark.SparkSuite
 /** Physical-plan shape assertions — the 100 TB design intent, pinned
   * (SURVEY.md §4): predicate pushdown + column pruning reach the parquet
   * scan, batch extraction adds no exchange over a lake scan, the lake
-  * write adds exactly one (the bucket+salt repartition, AFTER map-side
+  * write adds exactly one (the `rebalance(bucket)`, AFTER map-side
   * extraction), dimension joins broadcast, and aggregations run partial
-  * (map-side) before final. AQE is disabled in this suite only, so the
-  * static plan shape is inspectable; production sessions keep it on. */
+  * (map-side) before final. AQE is disabled in this suite, so the static
+  * plan shape is inspectable; production sessions keep it on, and the
+  * lake-write test turns it back on (a rebalance needs it). */
 class PlanSpec extends AnyFunSuite with SparkSuite {
+
+  /** Plan traversal that descends into adaptive plans and query stages. */
+  private object AqePlan extends AdaptiveSparkPlanHelper
 
   override def beforeAll(): Unit = {
     super.beforeAll()
@@ -49,35 +58,47 @@ class PlanSpec extends AnyFunSuite with SparkSuite {
 
   test("extraction over a lake scan: exactly one exchange, AFTER the extract UDF") {
     // the exchange is the lake writer's: pin the staged write of a
-    // resumed IncrementalExtract commit, as the engine plans it
-    val table = new ocrspark.lake.LakeTable(root.resolve("lake").toString)
-    IncrementalExtract.run(spark,
-      pagesParquet.filter(ExtractJob.bucketCol(ExtractJob.DefaultBuckets) < 20), table)
-    val plans = new ConcurrentLinkedQueue[String]()
+    // resumed IncrementalExtract commit, as the engine plans it. Spark
+    // plans a rebalance only with AQE on, so this test turns it on and
+    // reads the final adaptive plan
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    val writes = new ConcurrentLinkedQueue[SparkPlan]()
     val listener = new QueryExecutionListener {
       def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        plans.add(qe.executedPlan.toString)
+        qe.executedPlan match {
+          case a: AdaptiveSparkPlanExec
+              if AqePlan.find(a)(_.isInstanceOf[DataWritingCommandExec]).isDefined =>
+            writes.add(a.executedPlan)
+          case _ =>
+        }
       def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
     }
-    spark.listenerManager.register(listener)
     val plan =
       try {
+        val table = new ocrspark.lake.LakeTable(root.resolve("lake").toString)
+        IncrementalExtract.run(spark,
+          pagesParquet.filter(ExtractJob.bucketCol(ExtractJob.DefaultBuckets) < 20), table)
+        spark.listenerManager.register(listener)
         assert(!IncrementalExtract.run(spark, pagesParquet, table).noop)
-        eventually(timeout(30.seconds)) {
-          plans.asScala.find(_.contains("InsertIntoHadoopFsRelationCommand")).get
-        }
-      } finally spark.listenerManager.unregister(listener)
+        eventually(timeout(30.seconds))(writes.asScala.head)
+      } finally {
+        spark.listenerManager.unregister(listener)
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+      }
+    // every node of the final plan, query stages included
+    val nodes = AqePlan.collect(plan) { case p => p }
     // the resume step filters committed buckets; it does not join
-    assert(!plan.contains("Join"), plan)
-    val exchanges = plan.linesIterator.count(_.contains("Exchange"))
-    assert(exchanges == 1, s"expected 1 exchange, got $exchanges\n$plan")
-    // map-side extraction: the UDF projection sits BELOW the exchange
-    // (plan text is parent-first, so Exchange appears before UDF)
-    assert(plan.indexOf("Exchange") < plan.indexOf("UDF(html"), plan)
+    assert(!nodes.exists(_.isInstanceOf[BaseJoinExec]), plan)
+    val exchanges = nodes.collect { case e: ShuffleExchangeLike => e }
+    assert(exchanges.size == 1, s"expected 1 exchange, got ${exchanges.size}\n$plan")
+    val exchange = exchanges.head
+    assert(exchange.shuffleOrigin == REBALANCE_PARTITIONS_BY_COL, plan)
+    // map-side extraction: every node that runs the UDF sits BELOW it
+    def runsUdf(p: SparkPlan) = p.expressions.exists(_.exists(_.isInstanceOf[ScalaUDF]))
+    val udfBelow = AqePlan.collect(exchange.child) { case p if runsUdf(p) => p }
+    assert(udfBelow.nonEmpty && udfBelow.size == nodes.count(runsUdf), plan)
     // and the exchange payload is pruned: no html binary crosses the wire
-    val exchangeChild = plan.substring(plan.indexOf("Exchange"))
-    val projLine = exchangeChild.linesIterator.drop(1).next()
-    assert(!projLine.contains("html"), projLine)
+    assert(!exchange.child.output.exists(_.name == "html"), exchange.child.output)
   }
 
   test("batch extraction over a lake scan runs with no exchange") {

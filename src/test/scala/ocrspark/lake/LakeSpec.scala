@@ -11,6 +11,7 @@ import jdk.jfr.Recording
 import jdk.jfr.consumer.RecordingFile
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{array_sort, col, map_entries}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -64,11 +65,16 @@ class LakeSpec extends AnyFunSuite with SparkSuite {
     }.toSet finally paths.close()
   }
 
-  /** A table with snapshot 1 = buckets < 20 and snapshot 2 = all. */
-  def twoSnapshots(): LakeTable = {
+  /** `df` with its map column as sorted entries: set operations take
+    * no map column. */
+  def comparable(df: DataFrame): DataFrame =
+    df.withColumn("fields", array_sort(map_entries(col("fields"))))
+
+  /** A table with snapshot 1 = buckets < `below` and snapshot 2 = all. */
+  def twoSnapshots(below: Int = 20): LakeTable = {
     val t = freshTable()
     IncrementalExtract.run(spark,
-      pages.filter(ExtractJob.bucketCol(ExtractJob.DefaultBuckets) < 20), t)
+      pages.filter(ExtractJob.bucketCol(ExtractJob.DefaultBuckets) < below), t)
     IncrementalExtract.run(spark, pages, t)
     t
   }
@@ -244,6 +250,28 @@ class LakeSpec extends AnyFunSuite with SparkSuite {
     assert(!FileSystem.get(local, hadoopConf).isInstanceOf[LakeTable.LocalFs])
   }
 
+  test("a commit with AQE off reads back what an AQE commit of the same pages does") {
+    // Spark drops the writer's rebalance hint with AQE off, so the write
+    // runs unshuffled: only the file count may differ
+    val aqe = "spark.sql.adaptive.enabled"
+    val before = spark.conf.get(aqe)
+    val off = freshTable()
+    spark.conf.set(aqe, "false")
+    try IncrementalExtract.run(spark, pages, off) finally spark.conf.set(aqe, before)
+    val on = freshTable()
+    IncrementalExtract.run(spark, pages, on)
+    val (offSnap, onSnap) = (off.snapshot(1), on.snapshot(1))
+    assert(offSnap.buckets.map(b => b.bucket -> b.nDocs).toMap ==
+      onSnap.buckets.map(b => b.bucket -> b.nDocs).toMap)
+    assert(offSnap.metrics == onSnap.metrics)
+    assert(off.read(spark).count() == 500L)
+    assert(comparable(off.read(spark)).exceptAll(comparable(on.read(spark))).isEmpty)
+    assert(comparable(on.read(spark)).exceptAll(comparable(off.read(spark))).isEmpty)
+    // each unshuffled input task writes its own file per bucket it holds
+    def files(t: LakeTable) = t.snapshot(1).buckets.map(_.files.size).sum
+    assert(files(off) > files(on), s"${files(off)} files with AQE off, ${files(on)} on")
+  }
+
   test("uncommitted staged files are invisible to readers") {
     val t = freshTable()
     IncrementalExtract.run(spark, pages, t)
@@ -302,8 +330,9 @@ class LakeSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("read and readAt plan from the manifest: no Spark job before the action") {
-    val t = twoSnapshots()
-    // above 32 paths a listing read would list the files in a Spark job
+    // above 32 paths a listing read would list the files in a Spark job;
+    // a small bucket is one file, so snapshot 1 needs 40 buckets
+    val t = twoSnapshots(below = 40)
     assert(t.snapshot(1).buckets.map(_.files.size).sum >= 33)
     assert(t.snapshot(2).buckets.map(_.files.size).sum >= 33)
     val read = jobs("lake-read")(t.read(spark))
@@ -327,14 +356,11 @@ class LakeSpec extends AnyFunSuite with SparkSuite {
     t.commit(LakeTable.stagedEntries(staging).map { case (b, files) =>
       t.BucketEntry(b, files.map(_.getAbsolutePath), nDocs = 0L, nBytes = 0L)
     })
-    // set operations take no map column: compare its sorted entries
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.withColumn("fields", array_sort(map_entries(col("fields"))))
-    def same(manifested: org.apache.spark.sql.DataFrame, id: Long): Unit = {
+    def same(manifested: DataFrame, id: Long): Unit = {
       val listed = spark.read.parquet(t.snapshot(id).buckets.flatMap(_.files): _*)
       assert(manifested.schema == listed.schema, s"snapshot $id")
-      assert(rows(manifested).exceptAll(rows(listed)).isEmpty, s"snapshot $id")
-      assert(rows(listed).exceptAll(rows(manifested)).isEmpty, s"snapshot $id")
+      assert(comparable(manifested).exceptAll(comparable(listed)).isEmpty, s"snapshot $id")
+      assert(comparable(listed).exceptAll(comparable(manifested)).isEmpty, s"snapshot $id")
     }
     same(t.read(spark), 3L)
     same(t.readAt(spark, 1), 1L)
