@@ -17,7 +17,7 @@ class SkewSpec extends AnyFunSuite with SparkSuite {
 
   private val Advisory = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
 
-  test("lake writer's rebalance: one file per small bucket, a split above the advisory size") {
+  test("lake writer's rebalance: one file per small bucket, big buckets split") {
     import spark.implicits._
     val pages = Synth.pagesDF(spark, sfDir)
     val perBucket = pages.groupBy(ExtractJob.bucketCol(ExtractJob.DefaultBuckets))
