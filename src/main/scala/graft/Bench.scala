@@ -163,33 +163,19 @@ object Bench {
     require(threads <= MemCanaryThreads,
       s"memory canary supports at most $MemCanaryThreads threads")
     val bufs = memBufs // force allocation outside the timed section
-    val ts = (0 until threads).map { t =>
-      new Thread(() => {
-        val (src, dst) = bufs(t)
-        var p = 0
-        var sum = 0L
-        while (p < passes) {
-          System.arraycopy(src, 0, dst, 0, src.length)
-          var i = 0
-          while (i < dst.length) { sum += dst(i); i += 8 } // one read/line
-          p += 1
-        }
-        canarySink.addAndGet(sum)
-      })
+    threadSeconds(threads) { t =>
+      val (src, dst) = bufs(t)
+      var p = 0
+      var sum = 0L
+      while (p < passes) {
+        System.arraycopy(src, 0, dst, 0, src.length)
+        var i = 0
+        while (i < dst.length) { sum += dst(i); i += 8 } // one read/line
+        p += 1
+      }
+      canarySink.addAndGet(sum)
     }
-    val t0 = System.nanoTime()
-    ts.foreach(_.start())
-    ts.foreach(_.join())
-    (System.nanoTime() - t0) / 1e9
   }
-
-  /** One canary measurement = median of [[CanaryReps]] fixed-work runs. */
-  def canaryMeasure(): Double =
-    median((1 to CanaryReps).map(_ => canarySeconds()))
-
-  /** One memory-canary measurement = median of [[CanaryReps]] reps. */
-  def memCanaryMeasure(): Double =
-    median((1 to CanaryReps).map(_ => memCanarySeconds()))
 
   private val canarySink = new java.util.concurrent.atomic.AtomicLong()
 
@@ -197,27 +183,36 @@ object Bench {
     * returns wall seconds. Pure arithmetic — no Spark, no allocation —
     * so the only variable is host CPU contention. */
   def canarySeconds(threads: Int = CanaryThreads,
-                    iters: Long = CanaryIters): Double = {
-    val ts = (0 until threads).map { t =>
-      new Thread(() => {
-        var x = 0x9E3779B97F4A7C15L + t
-        var i = 0L
-        while (i < iters) {
-          x ^= x << 13; x ^= x >>> 7; x ^= x << 17
-          i += 1
-        }
-        canarySink.addAndGet(x) // sink: loop cannot be eliminated
-      })
+                    iters: Long = CanaryIters): Double =
+    threadSeconds(threads) { t =>
+      var x = 0x9E3779B97F4A7C15L + t
+      var i = 0L
+      while (i < iters) {
+        x ^= x << 13; x ^= x >>> 7; x ^= x << 17
+        i += 1
+      }
+      canarySink.addAndGet(x) // sink: loop cannot be eliminated
     }
+
+  /** Wall seconds to run `work(t)` on `threads` threads, t = 0 until
+    * threads: every thread is built first, then the clock spans starting
+    * them all and joining them all. */
+  private def threadSeconds(threads: Int)(work: Int => Unit): Double = {
+    val ts = (0 until threads).map(t => new Thread(() => work(t)))
     val t0 = System.nanoTime()
     ts.foreach(_.start())
     ts.foreach(_.join())
     (System.nanoTime() - t0) / 1e9
   }
 
+  /** One canary measurement = median of [[CanaryReps]] fixed-work runs. */
+  private def canaryMedian(rep: => Double): Double =
+    median((1 to CanaryReps).map(_ => rep))
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors().toString)
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", TimedReps.toString).toInt
 
     // canary warm-up (JIT the loops + allocate the memory buffers), then
@@ -232,8 +227,8 @@ object Bench {
     // and the contaminated verdict only engage on the canonical config
     // (where the floor applies)
     val canonicalHost = cpus == "32"
-    var canaryPre = canaryMeasure()
-    var memPre = memCanaryMeasure()
+    var canaryPre = canaryMedian(canarySeconds())
+    var memPre = canaryMedian(memCanarySeconds())
     def preNoise: Double =
       math.max(canaryPre / CanaryQuietSec, memPre / MemCanaryQuietSec)
     var noiseRetries = 0
@@ -244,8 +239,8 @@ object Bench {
           f"mem ${memPre / MemCanaryQuietSec}%.2fx quiet) — sleeping 15s " +
           f"(retry ${noiseRetries + 1}/$MaxNoiseRetries)")
       Thread.sleep(15000)
-      canaryPre = canaryMeasure()
-      memPre = memCanaryMeasure()
+      canaryPre = canaryMedian(canarySeconds())
+      memPre = canaryMedian(memCanarySeconds())
       noiseRetries += 1
     }
 
@@ -333,8 +328,8 @@ object Bench {
 
     // post-suite canaries: contamination arriving MID-suite is caught by
     // these plus the in-band scan_floor tripwire below
-    val canaryPost = canaryMeasure()
-    val memPost = memCanaryMeasure()
+    val canaryPost = canaryMedian(canarySeconds())
+    val memPost = canaryMedian(memCanarySeconds())
     val noisePre = canaryPre / CanaryQuietSec
     val noisePost = canaryPost / CanaryQuietSec
     val memNoisePre = memPre / MemCanaryQuietSec

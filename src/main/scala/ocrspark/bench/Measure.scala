@@ -3,10 +3,10 @@ package ocrspark.bench
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** The one measurement protocol shared by [[graft.Bench]],
-  * [[ScalingBench]] and [[ShardMain]]: the same session, the same
-  * forcing action and the same warm-up-then-time rule, so compile, JIT
-  * and codegen cost fall outside every timed rep in the same way.
+/** The one measurement protocol shared by [[graft.Bench]] and
+  * [[ScalingBench]]: the same session, the same forcing action and the
+  * same warm-up-then-time rule, so compile, JIT and codegen cost fall
+  * outside every timed rep in the same way.
   * [[session]] is also the only place a session is built: `graft.Verify`,
   * `graft.Explain` and the test suites take theirs from it too.
   */
@@ -73,29 +73,6 @@ object Measure {
       s
     }
     Reps(seconds, rows)
-  }
-
-  /** The rep loop against a wall-clock deadline (epoch millis) shared by
-    * concurrent processes: one warm-up, then timed passes until the
-    * deadline; a pass that ends after it is dropped. Every counted pass
-    * therefore ran while every process sharing the deadline was still
-    * running. Throws when no pass finished in time. */
-  def untilDeadline(deadlineMs: Long)(f: => Long): Reps = {
-    f
-    var rows = 0L
-    val seconds = Vector.newBuilder[Double]
-    var open = System.currentTimeMillis() < deadlineMs
-    while (open) {
-      System.gc()
-      val (s, n) = timed(f)
-      open = System.currentTimeMillis() < deadlineMs
-      if (open) { seconds += s; rows = n }
-    }
-    val counted = seconds.result()
-    if (counted.isEmpty)
-      throw new IllegalStateException(
-        s"no timed rep finished before the deadline $deadlineMs")
-    Reps(counted, rows)
   }
 
   def median(xs: Seq[Double]): Double = {

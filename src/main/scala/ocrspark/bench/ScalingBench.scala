@@ -1,15 +1,14 @@
 package ocrspark.bench
 
-import java.lang.management.ManagementFactory
 import java.nio.file.{Files, Paths}
 
 /** Two-cluster-size scaling evidence (north rule: throughput scaling
-  * efficiency ≥ 0.8 between N and 4N executors). The sandbox has no
-  * real cluster, so the same job runs at local[lo] and local[hi] on the
-  * SAME materialized input — the documented stand-in (BASELINE.md) —
-  * with hi = nproc and lo = max(1, nproc / 4). Timed reps follow
-  * [[Measure]]; writes BENCH/last_scaling.md (BASELINE.md is
-  * hand-curated).
+  * efficiency ≥ 0.8 between N and 4N executors). With no real cluster,
+  * the same job runs in one JVM at local[lo] and local[hi] on the SAME
+  * materialized input — the documented stand-in (BASELINE.md) — with
+  * hi = nproc and lo = max(1, nproc / 4). Timed reps follow
+  * [[Measure.reps]]; the efficiency is read against [[cpuCeiling]].
+  * Writes BENCH/last_scaling.md (BASELINE.md is hand-curated).
   */
 object ScalingBench {
 
@@ -33,85 +32,6 @@ object ScalingBench {
     val tLo = math.min(burn(lo), burn(lo))
     val tHi = math.min(burn(hi), burn(hi))
     (tLo, tHi, (tLo / tHi) / (hi.toDouble / lo))
-  }
-
-  /** Seconds a shard JVM gets to start Spark before its budget counts. */
-  val ShardStartupSec = 20.0
-
-  /** Per-shard heap in MiB: the shards together take at most a quarter
-    * of physical memory (MemTotal; the parent bench JVM and the OS keep
-    * the rest), and no shard more than 8g. */
-  def shardHeapMb(nShards: Int): Long = {
-    val totalMb = ManagementFactory.getOperatingSystemMXBean
-      .asInstanceOf[com.sun.management.OperatingSystemMXBean]
-      .getTotalMemorySize >> 20
-    math.min(8192L, totalMb / 4 / nShards)
-  }
-
-  /** Multi-executor simulation: `nShards` SEPARATE JVMs (own heap, own
-    * GC — the real spark-submit deployment unit is a 4-8 core executor
-    * JVM, not one 32-thread JVM), each extracting its bucket-shard of
-    * the corpus concurrently at `cores` threads. Every shard times reps
-    * until one shared deadline, [[ShardStartupSec]] + `budgetSec` from
-    * launch, and counts only reps that finished before it — so every
-    * counted rep ran while all shards were still running. Returns the
-    * slowest shard's min-of-reps seconds. */
-  def multiJvmRun(pagesPath: String, nShards: Int, cores: Int,
-                  budgetSec: Double): Double = {
-    val javaBin = Paths.get(System.getProperty("java.home"), "bin", "java").toString
-    val cp = System.getProperty("java.class.path")
-    val heapMb = shardHeapMb(nShards)
-    // the parent's own --add-opens (Spark on JDK 17 needs them)
-    val addOpens = ManagementFactory.getRuntimeMXBean.getInputArguments
-      .toArray(Array.empty[String]).filter(_.startsWith("--add-opens")).toSeq
-    val opts = addOpens ++
-      // half the heap as young gen: the extraction kernels allocate GBs
-      // of short-lived strings per pass, so a small nursery forces
-      // minor-GC pauses into the timed reps
-      Seq(s"-Xmx${heapMb}m", "-XX:+UseParallelGC", s"-Xmn${heapMb / 2}m",
-        // an executor JVM owns `cores` CPUs: size its GC + JIT pools
-        // accordingly or 4 shards × 32 default GC threads thrash
-        s"-XX:ParallelGCThreads=$cores", s"-XX:CICompilerCount=2")
-    // LPT file→shard assignment (largest file to least-loaded shard):
-    // a static round-robin split leaves one shard with the expensive
-    // url-range (zipfian hosts → uneven per-file extraction cost) and
-    // pessimistically mismodels a real cluster, where executors pull
-    // tasks dynamically from the driver. Balancing by byte size is the
-    // closest static analog of that scheduler.
-    // sort by (-size, name): listFiles() order is unspecified, so equal
-    // sizes need the name tiebreak for run-to-run deterministic shards
-    val allFiles = new java.io.File(pagesPath).listFiles()
-      .filter(_.getName.endsWith(".parquet"))
-      .sortBy(f => (-f.length(), f.getName))
-    val shardLoads = Array.fill(nShards)(0L)
-    val assignment = Array.fill(nShards)(Vector.newBuilder[String])
-    allFiles.foreach { f =>
-      val tgt = shardLoads.zipWithIndex.minBy(_._1)._2
-      shardLoads(tgt) += f.length()
-      assignment(tgt) += f.getAbsolutePath
-    }
-    val deadlineMs = System.currentTimeMillis() +
-      ((ShardStartupSec + budgetSec) * 1000).toLong
-    val procs = (0 until nShards).map { i =>
-      val out = java.io.File.createTempFile(s"shard$i-", ".out")
-      val shardFiles = assignment(i).result()
-      val pb = new ProcessBuilder(
-        (Seq(javaBin) ++ opts ++ Seq("-cp", cp, "ocrspark.bench.ShardMain",
-          i.toString, cores.toString, deadlineMs.toString,
-          shardFiles.mkString(","))): _*)
-      pb.redirectErrorStream(true)
-      pb.redirectOutput(out)
-      (pb.start(), out)
-    }
-    procs.foreach(_._1.waitFor())
-    val shards = procs.map { case (_, out) =>
-      val lines = new String(Files.readAllBytes(out.toPath))
-      lines.linesIterator.find(_.startsWith("SHARD")).map(_.split(" "))
-        .getOrElse(throw new IllegalStateException(s"no SHARD line in $out:\n$lines"))
-    }
-    System.err.println("[scaling] multi-jvm shard min s (counted reps): " +
-      shards.map(f => s"${f(3)} (${f(4)})").mkString(", "))
-    shards.map(_(3).toDouble).max
   }
 
   def runAt(cores: Int, pagesPath: String, reps: Int): Measure.Reps = {
@@ -147,17 +67,6 @@ object ScalingBench {
     val (ceilLo, ceilHi, ceiling) = cpuCeiling(lo, hi)
     val normalized = efficiency / ceiling
 
-    // the deployment-shaped measurement: `hi/lo` executor JVMs × lo
-    // cores vs one lo-core JVM; best of 2 launches (same min-statistic
-    // rationale as runAt). The budget fits the warm-up plus `reps` shard
-    // reps at half of perfect scaling.
-    val nShards = hi / lo
-    val shardHeap = shardHeapMb(nShards)
-    val budgetSec = 2 * (reps + 1) * rLo.min / nShards
-    val multiSec = math.min(multiJvmRun(pagesPath, nShards, lo, budgetSec),
-      multiJvmRun(pagesPath, nShards, lo, budgetSec))
-    val multiEff = rLo.min / (nShards * multiSec)
-
     val md =
       f"""# BENCH — measured numbers (BASELINE.md targets)
          |
@@ -185,19 +94,6 @@ object ScalingBench {
          |gap below the 0.8 target tracks the host's memory-bandwidth
          |scaling, not a serial section or shuffle bottleneck in the
          |plan (normalized vs arithmetic ceiling: ${normalized}%.3f).
-         |On a real N→4N EXECUTOR scale-out each executor brings its own
-         |memory bus, so this bound does not apply — see the
-         |multi-executor measurement below, the closest sandbox analog.
-         |
-         |**Multi-executor measurement (the deployment-shaped one):**
-         |1 JVM × local[$lo] on the full corpus vs $nShards concurrent
-         |JVMs × local[$lo], each on a url-hash shard — i.e. N vs 4N
-         |executors as spark-submit would actually run them ($lo-core
-         |executor JVMs, private heaps of -Xmx${shardHeap}m
-         |-Xmn${shardHeap / 2}m, sized from this host's memory). Shards
-         |time reps until one shared deadline. Slowest shard: ${multiSec}%.2f s
-         |vs single-executor ${rLo.min}%.2f s →
-         |**scaling efficiency ${multiEff}%.3f**.
          |
          |Byte-identity match rate vs the reference's pure functions:
          |**100%%** (GoldenSpec: all golden cases; PipelineSpec diff-join:
@@ -209,6 +105,6 @@ object ScalingBench {
     // the hand-curated record (best-of-N + disclosures) and must never
     // be clobbered by a single run
     Files.writeString(Paths.get("BENCH/last_scaling.md"), md)
-    println(f"""{"metric":"scaling efficiency $lo->$hi cores","value":$efficiency%.3f,"unit":"ratio","queries":{"local$lo":${rLo.min}%.3f,"local$hi":${rHi.min}%.3f},"docs_per_sec_lo":${docsPerSec(rLo)}%.1f,"docs_per_sec_hi":${docsPerSec(rHi)}%.1f,"cpu_ceiling":$ceiling%.3f,"efficiency_normalized":$normalized%.3f,"multi_jvm_efficiency":$multiEff%.3f,"sf":"$sfDir"}""")
+    println(f"""{"metric":"scaling efficiency $lo->$hi cores","value":$efficiency%.3f,"unit":"ratio","queries":{"local$lo":${rLo.min}%.3f,"local$hi":${rHi.min}%.3f},"docs_per_sec_lo":${docsPerSec(rLo)}%.1f,"docs_per_sec_hi":${docsPerSec(rHi)}%.1f,"cpu_ceiling":$ceiling%.3f,"efficiency_normalized":$normalized%.3f,"sf":"$sfDir"}""")
   }
 }

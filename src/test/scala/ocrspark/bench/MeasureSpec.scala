@@ -29,29 +29,6 @@ class MeasureSpec extends AnyFunSuite with SparkSuite {
     assert(r.rows == 4L, "rows come from the last timed pass")
   }
 
-  test("deadline loop: no counted rep ends after the deadline") {
-    val ends = Vector.newBuilder[Long]
-    val deadline = System.currentTimeMillis() + 1000
-    val r = Measure.untilDeadline(deadline) {
-      Thread.sleep(120)
-      ends += System.currentTimeMillis()
-      0L
-    }
-    assert(System.currentTimeMillis() >= deadline, "the loop runs until the deadline")
-    val timedEnds = ends.result().tail // drop the warm-up
-    assert(r.seconds.nonEmpty)
-    assert(timedEnds.take(r.seconds.size).forall(_ < deadline))
-    assert(timedEnds.size - r.seconds.size <= 1, "only the last pass may be dropped")
-    assert(r.seconds.forall(_ >= 0.1))
-  }
-
-  test("deadline loop fails loudly when no rep finishes in time") {
-    val deadline = System.currentTimeMillis() + 50
-    intercept[IllegalStateException] {
-      Measure.untilDeadline(deadline) { Thread.sleep(100); 0L }
-    }
-  }
-
   // Runs last: a new session stops the suite's own.
   test("session: a fresh one has AQE on, UTC and the requested shuffle width") {
     spark.conf.set("spark.sql.adaptive.enabled", "false")
