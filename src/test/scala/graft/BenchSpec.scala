@@ -6,7 +6,7 @@ class BenchSpec extends AnyFunSuite {
 
   test("CPU canary returns a positive, finite wall time") {
     val s = Bench.canarySeconds(threads = 2, iters = 1000000)
-    assert(s > 0 && !s.isInfinite && !s.isNaN, s"canary read $s s")
+    assert(s > 0 && s.isFinite, s"canary read $s s")
   }
 
   test("memory canary refuses more threads than it has buffers for") {
