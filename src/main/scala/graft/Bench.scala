@@ -307,14 +307,13 @@ object Bench {
       force(SparkEntry.queries("t1_text_stats")(spark, sfDir))
     }
 
-    // loan-pattern dedup run: sketches persisted for the double scan,
-    // unpersisted before returning — no cached copies accumulate across
-    // the warm-up + reps (r2 leaked one persist per call).
+    // the lazy plan persists nothing, so no cached copies accumulate
+    // across the warm-up + reps
     warmTimed("d2_minhash_pairs") {
-      ocrspark.ops.Dedup.minhashPairsCompute(
+      ocrspark.ops.Dedup.minhashPairs(
         ocrspark.ops.DedupCorpus.withPlantedDups(
           docs.select(col("doc_id"), col("text"), col("lang"))),
-        "doc_id", "text", 0.7)(_.count())
+        "doc_id", "text", 0.7).count()
     }
 
     warmTimed("s2_cosine_topk") {

@@ -6,8 +6,8 @@ import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.{Aggregator, UserDefinedFunction}
 import org.apache.spark.sql.{Encoder, functions}
 
-/** Bounded-memory "collect the cap smallest members" aggregates for the
-  * LSH bucket paths.
+/** Bounded-memory "collect the cap smallest members" aggregates: the
+  * LSH buckets' by-id collect and the ANN paths' top-k.
   *
   * `collect_list` over a degenerate bucket (boilerplate pages, mirrored
   * sites, near-empty docs) is unbounded: at 10^12 docs a single hot
@@ -19,9 +19,10 @@ import org.apache.spark.sql.{Encoder, functions}
   * carries pre-trimmed partial buffers, never the full degenerate
   * bucket.
   *
-  * "Smallest by id" is the invariant the dedup semantics need: the
-  * bucket's keeper (min id) always survives trimming, so an over-cap
-  * bucket can still emit member→keeper pairs (see Dedup).
+  * The LSH buckets collect (id, payload) members by id alone
+  * ([[boundedById]]): the bucket's keeper (min id) always survives
+  * trimming, so an over-cap bucket can still emit member→keeper pairs
+  * (see Dedup).
   */
 object BoundedCollect {
 
@@ -48,12 +49,6 @@ object BoundedCollect {
   private[ops] def boundedSmallest[T: TypeTag: Ordering](cap: Int): BoundedSmallest[T] =
     new BoundedSmallest[T](cap, ExpressionEncoder[Seq[T]]())
 
-  case class IdSh(id: Long, sh: Long)
-  object IdSh { implicit val byId: Ordering[IdSh] = Ordering.by(_.id) }
-
-  case class IdVec(id: Long, v: Seq[Float])
-  object IdVec { implicit val byId: Ordering[IdVec] = Ordering.by(_.id) }
-
   case class NbrScore(neighbor_id: Long, cosine: Double)
   object NbrScore {
     /** Top-k order: best cosine first, ties to the smallest neighbor id
@@ -63,13 +58,17 @@ object BoundedCollect {
       Ordering.by(ns => (-ns.cosine, ns.neighbor_id))
   }
 
-  private def udaf[T: TypeTag: Ordering](cap: Int): UserDefinedFunction =
-    functions.udaf(boundedSmallest[T](cap), ExpressionEncoder[T]())
+  private def udaf[T: TypeTag](agg: BoundedSmallest[T]): UserDefinedFunction =
+    functions.udaf(agg, ExpressionEncoder[T]())
 
-  /** Column aggregates, ready for `groupBy(...).agg(...)`. */
-  def boundedIds(cap: Int): UserDefinedFunction = udaf[Long](cap)
-  def boundedIdSh(cap: Int): UserDefinedFunction = udaf[IdSh](cap)
-  def boundedIdVec(cap: Int): UserDefinedFunction = udaf[IdVec](cap)
+  /** The `cap` smallest (id, payload) members by id alone, keeper first. */
+  private[ops] def smallestById[P: TypeTag](cap: Int): BoundedSmallest[(Long, P)] =
+    boundedSmallest[(Long, P)](cap)(implicitly, Ordering.by(_._1))
+
+  /** By-id collect over two columns (id, payload), ready for
+    * `groupBy(...).agg(...)`; members come out as `_1` (id), `_2`. */
+  private[ops] def boundedById[P: TypeTag](cap: Int): UserDefinedFunction =
+    udaf(smallestById[P](cap))
 
   /** Two-phase top-k building block for the ANN paths: map-side partial
     * aggregation keeps the best k (buffer ≤ 2k) per query per partition,
@@ -78,5 +77,5 @@ object BoundedCollect {
     * `partitionBy(query_id)`, which funnels every scored row of a query
     * into one task (the 100 TB scale-killer this replaces). `finish`
     * returns the top k already in rank order. */
-  def topKNbrs(k: Int): UserDefinedFunction = udaf[NbrScore](k)
+  def topKNbrs(k: Int): UserDefinedFunction = udaf(boundedSmallest[NbrScore](k))
 }

@@ -199,7 +199,8 @@ class PlanSpec extends AnyFunSuite with SparkSuite {
       .select($"doc_id", $"text")
     // in-cap pairs explode inside the bounded bucket aggregation (no
     // self-join); the only joins allowed are (a) minhash's two
-    // sketch-rescore hash joins and (b) the over-cap keeper-star join,
+    // sketch-rescore hash joins and (b) the over-cap keeper-star join
+    // (simhash, minhash and embedding near-dup),
     // which must be a BROADCAST of the (tiny) keeper set — never a
     // sort-merge self-join of band rows
     val sim = planOf(ocrspark.ops.Dedup.simhashPairs(docs, "doc_id", "text"))
@@ -214,5 +215,12 @@ class PlanSpec extends AnyFunSuite with SparkSuite {
     assert(joins <= 3, s"expected ≤2 rescore + 1 keeper-star joins, got $joins\n$mh")
     assert(mh.linesIterator.exists(_.contains("BroadcastHashJoin")),
       s"keeper-star join must broadcast the keeper set\n$mh")
+    val emb = planOf(ocrspark.ops.Dedup.embeddingNearDups(
+      spark.read.parquet(s"$sfDir/embeddings.parquet"), "vec_id", "embedding"))
+    assert(!emb.contains("SortMergeJoin"), emb)
+    val embJoins = emb.linesIterator.count(_.contains("Join"))
+    val embBcast = emb.linesIterator.count(_.contains("BroadcastHashJoin"))
+    assert(embJoins == 1 && embBcast == 1,
+      s"embedding near-dup may only have the broadcast keeper-star join\n$emb")
   }
 }

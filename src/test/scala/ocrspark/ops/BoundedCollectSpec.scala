@@ -3,7 +3,7 @@ package ocrspark.ops
 import org.apache.spark.sql.expressions.Aggregator
 import org.scalatest.funsuite.AnyFunSuite
 
-import BoundedCollect.{IdSh, IdVec, NbrScore}
+import BoundedCollect.NbrScore
 
 /** Direct checks of the bounded aggregators' invariants, without a
   * Spark plan: two partial buffers fed through `reduce`, then `merge`,
@@ -43,13 +43,13 @@ class BoundedCollectSpec extends AnyFunSuite {
   }
 
   test("(id, simhash) members are ordered by id alone") {
-    val members = (0L until 50L).map(i => IdSh(i, (i * 0x9E3779B97F4A7C15L) ^ 5L))
-    check(BoundedCollect.boundedSmallest[IdSh](cap), members, members.take(cap))
+    val members = (0L until 50L).map(i => (i, (i * 0x9E3779B97F4A7C15L) ^ 5L))
+    check(BoundedCollect.smallestById[Long](cap), members, members.take(cap))
   }
 
   test("(id, vector) members are ordered by id alone") {
-    val members = (0L until 40L).map(i => IdVec(i, Seq(i.toFloat, -i.toFloat)))
-    check(BoundedCollect.boundedSmallest[IdVec](cap), members, members.take(cap))
+    val members = (0L until 40L).map(i => (i, Seq(i.toFloat, -i.toFloat)))
+    check(BoundedCollect.smallestById[Seq[Float]](cap), members, members.take(cap))
   }
 
   test("top-k neighbours: best cosine first, ties to the smallest id") {

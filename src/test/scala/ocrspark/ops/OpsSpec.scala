@@ -671,11 +671,11 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
     assert(r1.getAs[Int]("out_w") == 400) // no upscale
   }
 
-  test("loan-pattern dedup computes leave no persisted tables behind") {
+  test("near-dup operators persist nothing") {
     corpus.count() // materialize the fixture caches first
     val before = spark.sparkContext.getPersistentRDDs.size
-    val n1 = Dedup.minhashPairsCompute(corpus, "doc_id", "text", 0.7)(_.count())
-    val n2 = Dedup.ngramJaccardPairsCompute(corpus, "doc_id", "text")(_.count())
+    val n1 = Dedup.minhashPairs(corpus, "doc_id", "text", 0.7).count()
+    val n2 = Dedup.ngramJaccardPairs(corpus, "doc_id", "text").count()
     assert(n1 > 0 && n2 > 0)
     val after = spark.sparkContext.getPersistentRDDs.size
     assert(after == before,
