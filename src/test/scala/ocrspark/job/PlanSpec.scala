@@ -199,10 +199,9 @@ class PlanSpec extends AnyFunSuite with SparkSuite {
       .select($"doc_id", $"text")
     // in-cap pairs explode inside the bounded bucket aggregation (no
     // self-join); the only joins allowed are (a) minhash's two
-    // sketch-rescore hash joins and (b) the over-cap keeper-star join
-    // (simhash, minhash and embedding near-dup),
-    // which must be a BROADCAST of the (tiny) keeper set — never a
-    // sort-merge self-join of band rows
+    // sketch-rescore hash joins and (b) the over-cap keeper-star join of
+    // simhash, minhash and embedding near-dup, which must be a BROADCAST
+    // of the (tiny) keeper set — never a sort-merge self-join of band rows
     val sim = planOf(ocrspark.ops.Dedup.simhashPairs(docs, "doc_id", "text"))
     assert(!sim.contains("SortMergeJoin"), sim)
     val simJoins = sim.linesIterator.count(_.contains("Join"))
