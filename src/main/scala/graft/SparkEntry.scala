@@ -516,7 +516,7 @@ object SparkEntry {
     // S4: IVF (k-means inverted-file) approximate top-k — the
     // data-adaptive ANN scale path next to s3's hash-bucket LSH.
     "s4_ivf_topk" -> ((s, dir) => {
-      ocrspark.ops.Similarity.ivfTopKFrom(
+      ocrspark.ops.Similarity.ivfTopK(
           s.read.parquet(s"$dir/embeddings.parquet"),
           "vec_id", "embedding", Seq(0L, 1L, 2L, 3L, 4L), 10,
           ivfCentroids(s, dir), nProbe = 4)
@@ -721,15 +721,16 @@ object SparkEntry {
           array_join(ocrspark.ops.Similarity.probeBuckets(col("embedding"), 6)
             .cast("array<string>"), ",").as("probes"))),
     "s4s_cells" -> ((s, dir) =>
-      ocrspark.ops.Similarity.ivfCellsFrom(
-        s.read.parquet(s"$dir/embeddings.parquet"), "vec_id", "embedding",
-        ivfCentroids(s, dir))),
+      s.read.parquet(s"$dir/embeddings.parquet")
+        .select(col("vec_id").as("id"),
+          ocrspark.ops.Similarity.ivfCell(col("embedding"), ivfCentroids(s, dir))
+            .as("cell"))),
     "s4s_probes" -> ((s, dir) =>
-      ocrspark.ops.Similarity.ivfProbesFrom(
-          s.read.parquet(s"$dir/embeddings.parquet"), "vec_id", "embedding",
-          Seq(0L, 1L, 2L, 3L, 4L), ivfCentroids(s, dir), nProbe = 4)
-        .select(col("query_id"),
-          array_join(col("cells").cast("array<string>"), ",").as("cells"))),
+      s.read.parquet(s"$dir/embeddings.parquet")
+        .filter(col("vec_id").isin(0L, 1L, 2L, 3L, 4L))
+        .select(col("vec_id").as("query_id"),
+          array_join(ocrspark.ops.Similarity.ivfProbes(col("embedding"),
+            ivfCentroids(s, dir), 4).cast("array<string>"), ",").as("cells"))),
     // d5's corpus includes 50 planted vectors that exist in no table, so
     // the vectors ride along as comma-joined FLOAT strings (Float
     // .toString round-trips exactly; the oracle re-casts via FLOAT
@@ -1211,9 +1212,10 @@ object SparkEntry {
         |  WHERE o_custkey = c_custkey AND o_totalprice > 300000.0)
         |ORDER BY c_custkey""".stripMargin,
     // s3 re-derived from the dumped bucket assignments + probe lists:
-    // probe-join candidate generation, multiprobe dedup (DISTINCT —
-    // cosine per pair is probe-independent, so DISTINCT ≡ Spark's
-    // groupBy-max), exact cosine from the embeddings table, rank ≤ k.
+    // probe-join candidate generation, multiprobe dedup (DISTINCT — a
+    // no-op on unique ids: a corpus row has one bucket and a query's
+    // probes are distinct, so Spark joins each pair once and has no
+    // dedup step), exact cosine from the embeddings table, rank ≤ k.
     "s3_lsh_topk" ->
       """WITH cb AS (
         |  SELECT id, bucket

@@ -385,13 +385,13 @@ object Dedup {
                         planes: Int = Similarity.NumPlanes): DataFrame = {
     val bucketed = emb.select(col(idCol).as("id"), col(vecCol).as("p"),
       Similarity.hyperplaneBucket(col(vecCol), planes).as("bucket"))
-    // floor(x·1e6 + 0.5)/1e6 — the half-up pathway of the d5 oracle;
-    // Spark's round() goes through BigDecimal HALF_UP, which can differ
-    // by 1e-6 on values whose double·1e6 sits on a rounding boundary
+    // r6 is the half-up pathway of the d5 oracle; Spark's round() goes
+    // through BigDecimal HALF_UP, which can differ by 1e-6 on values
+    // whose double·1e6 sits on a rounding boundary. A vector has one
+    // bucket, so cappedPairs emits each pair once: no dedup step
     cappedPairs[Seq[Float]](bucketed, "bucket")((a, b) =>
-        floor(Similarity.cosineUdf(a, b) * 1e6 + lit(0.5)) / 1e6)
+        TextOps.r6(Similarity.cosineUdf(a, b)))
       .filter(col("score") >= threshold)
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(max(col("score")).as("cosine"))
+      .select(col("id_a"), col("id_b"), col("score").as("cosine"))
   }
 }

@@ -4,20 +4,25 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Approximate-nearest-neighbor search over an embedding column
-  * (`array<float>`): brute-force cosine top-k as the exact baseline and
-  * a sign-LSH (random-hyperplane) bucketed variant as the scale path.
+  * (`array<float>`): brute-force cosine top-k as the exact baseline,
+  * sign-LSH buckets and IVF (k-means) cells as the scale paths.
   *
-  * Scale notes: brute force is a broadcast of the (small) query set
-  * against the full table — one pass, no shuffle of the corpus, fine
-  * whenever |queries| ≪ |corpus|. The LSH variant buckets the corpus
-  * once (16-bit signature → 65k buckets), then joins queries to their
-  * bucket (+ multiprobe neighbors at hamming distance 1), cutting the
-  * scanned fraction to ~bucket_size/N per query at a recall cost
-  * measured in SimilaritySpec.
+  * All three run one probe-join step: the query rows, each with the
+  * cells it probes, are broadcast against the corpus, each row in its
+  * one cell — one pass, no shuffle of the corpus, fine while |queries|
+  * ≪ |corpus|, and refused above [[MaxQueryIds]]. Brute force probes
+  * every row; LSH a query's bucket + its hamming-1 neighbors, IVF its
+  * `nProbe` nearest cells, cutting the scanned fraction at a recall
+  * cost measured in OpsSpec.
   */
 object Similarity {
 
   val NumPlanes = 16
+
+  /** Most query ids one top-k call takes: the query rows are broadcast
+    * whole to every task, once per probe (1 + planes rows for LSH), so
+    * the broadcast's size comes from this bound, not from a guess. */
+  val MaxQueryIds = 1024
 
   /** Deterministic pseudo-random hyperplane component (plane p, dim j)
     * in [-1, 1] — no RNG state, stable across executors. */
@@ -103,39 +108,44 @@ object Similarity {
         col("nc.cosine").as("cosine"),
         (col("pos") + 1).cast("int").as("rank"))
 
-  /** Exact brute-force cosine top-k for each query id. Output:
-    * (query_id, neighbor_id, cosine, rank), rank 1..k, deterministic
-    * tiebreak on neighbor id. */
-  def bruteForceTopK(emb: DataFrame, idCol: String, vecCol: String,
-                     queryIds: Seq[Long], k: Int): DataFrame = {
-    val q = emb.filter(col(idCol).isin(queryIds: _*))
-      .select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-    val joined = emb.select(col(idCol).as("neighbor_id"), col(vecCol).as("nv"))
-      .crossJoin(broadcast(q))
-      .filter(col("neighbor_id") =!= col("query_id"))
+  /** A scale path's cell of a corpus row and cells a query probes. */
+  private case class Index(cell: Column => Column, probes: Column => Column)
+
+  /** The one top-k step: broadcast the query rows with their exploded
+    * probes, join the corpus on its cell (no index: every row), drop
+    * self-pairs, rank `round(cosine, 6)`. A corpus row has one cell and
+    * a query's probes are distinct, so no pair is joined twice. Output:
+    * (query_id, neighbor_id, cosine, rank), rank 1..k, ties by id. */
+  private def probeTopK(emb: DataFrame, idCol: String, vecCol: String,
+                        queryIds: Seq[Long], k: Int,
+                        index: Option[Index]): DataFrame = {
+    require(queryIds.size <= MaxQueryIds,
+      s"top-k broadcasts its query rows: at most $MaxQueryIds ids, got ${queryIds.size}")
+    val vec = col(vecCol)
+    val corpus = emb.select(Seq(col(idCol).as("neighbor_id"), vec.as("nv")) ++
+      index.map(_.cell(vec).as("cell")): _*)
+    val queries = broadcast(emb.filter(col(idCol).isin(queryIds: _*))
+      .select(Seq(col(idCol).as("query_id"), vec.as("qv")) ++
+        index.map(i => explode(i.probes(vec)).as("probe")): _*))
+    val pairs = index.fold(corpus.join(queries))(_ =>
+      corpus.join(queries, col("cell") === col("probe")))
+    rankTopK(pairs.filter(col("neighbor_id") =!= col("query_id"))
       .select(col("query_id"), col("neighbor_id"),
-        round(cosineUdf(col("qv"), col("nv")), 6).as("cosine"))
-    rankTopK(joined, k)
+        round(cosineUdf(col("qv"), col("nv")), 6).as("cosine")), k)
   }
+
+  /** Exact brute-force cosine top-k for each query id. */
+  def bruteForceTopK(emb: DataFrame, idCol: String, vecCol: String,
+                     queryIds: Seq[Long], k: Int): DataFrame =
+    probeTopK(emb, idCol, vecCol, queryIds, k, None)
 
   /** LSH-bucketed approximate top-k: queries probe their own bucket and
     * hamming-1 neighbors; only those corpus slices are scored.
     * `planes` defaults to 6 (64 buckets) — size it up with the corpus. */
   def lshTopK(emb: DataFrame, idCol: String, vecCol: String,
-              queryIds: Seq[Long], k: Int, planes: Int = 6): DataFrame = {
-    val corpus = emb.select(col(idCol).as("neighbor_id"),
-      col(vecCol).as("nv"), hyperplaneBucket(col(vecCol), planes).as("bucket"))
-    val q = emb.filter(col(idCol).isin(queryIds: _*))
-      .select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-        explode(probeBuckets(col(vecCol), planes)).as("bucket"))
-    val joined = corpus.join(broadcast(q), Seq("bucket"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        round(cosineUdf(col("qv"), col("nv")), 6).as("cosine"))
-      .groupBy(col("query_id"), col("neighbor_id"))
-      .agg(max(col("cosine")).as("cosine")) // dedupe multi-probe hits
-    rankTopK(joined, k)
-  }
+              queryIds: Seq[Long], k: Int, planes: Int = 6): DataFrame =
+    probeTopK(emb, idCol, vecCol, queryIds, k, Some(Index(
+      hyperplaneBucket(_, planes), probeBuckets(_, planes))))
 
   // ------------------------------------------------------------------
   // IVF (inverted-file) ANN: k-means coarse quantizer + cell probing
@@ -218,66 +228,26 @@ object Similarity {
     centroids
   }
 
-  /** Nearest-centroid cell of an embedding column. */
-  private def nearestCellCol(vec: Column,
-                             centroids: Array[Array[Float]]): Column =
+  /** Nearest-centroid IVF cell of an embedding column. Public, like
+    * [[hyperplaneBucket]], so the s4 oracle can dump the assignments
+    * (re-deriving a float argmin cross-engine is a tie-break lottery). */
+  def ivfCell(vec: Column, centroids: Array[Array[Float]]): Column =
     udf((v: Seq[Float]) => nearestCell(v, centroids)).apply(vec)
 
-  /** The `nProbe` nearest cells of an embedding column, nearest first. */
-  private def probedCellsCol(vec: Column, centroids: Array[Array[Float]],
-                             nProbe: Int): Column =
+  /** The `nProbe` nearest IVF cells of an embedding column, nearest
+    * first — the IVF counterpart of [[probeBuckets]]. */
+  def ivfProbes(vec: Column, centroids: Array[Array[Float]],
+                nProbe: Int): Column =
     udf((v: Seq[Float]) => centroids.indices
       .sortBy(c => sqDist(centroids(c), v)).take(nProbe).toArray).apply(vec)
 
-  /** Corpus cell assignments (id, cell) from a trained quantizer —
-    * exposed so the s4 oracle can dump them and re-derive candidate
-    * generation + scoring + ranking in SQL (the quantizer itself is
-    * sbt-verified; re-deriving float-precision argmin cross-engine
-    * would be a tie-break lottery). Callers running several IVF
-    * artifacts over one corpus (cells dump + probes dump + the query
-    * itself) train ONCE with [[kmeansCentroids]] and share the
-    * centroids. */
-  def ivfCellsFrom(emb: DataFrame, idCol: String, vecCol: String,
-                   centroids: Array[Array[Float]]): DataFrame =
-    emb.select(col(idCol).as("id"),
-      nearestCellCol(col(vecCol), centroids).as("cell"))
-
-  /** Per-query probed cells (query_id, cells): the nearest `nProbe`
-    * centroids, for the same oracle dump as [[ivfCellsFrom]]. */
-  def ivfProbesFrom(emb: DataFrame, idCol: String, vecCol: String,
-                    queryIds: Seq[Long], centroids: Array[Array[Float]],
-                    nProbe: Int = 4): DataFrame =
-    emb.filter(col(idCol).isin(queryIds: _*))
-      .select(col(idCol).as("query_id"),
-        probedCellsCol(col(vecCol), centroids, nProbe).as("cells"))
-
-  /** IVF approximate top-k: the corpus is partitioned into `nCells`
-    * k-means cells (one assignment pass; the coarse quantizer ships in
-    * task closures — k×d floats); each query probes its `nProbe`
-    * nearest cells and scores only those slices with exact cosine.
-    * Scanned fraction ≈ nProbe/nCells per query — the IVF scale path
-    * next to [[lshTopK]]'s hash-bucket one (IVF adapts to the data
-    * distribution; LSH needs no training pass). */
+  /** IVF approximate top-k over [[kmeansCentroids]]: each query scores
+    * the corpus rows of its `nProbe` nearest cells with exact cosine
+    * (scanned fraction ≈ nProbe/cells). IVF adapts to the data; LSH
+    * needs no training pass. Callers share one training across calls. */
   def ivfTopK(emb: DataFrame, idCol: String, vecCol: String,
-              queryIds: Seq[Long], k: Int, nCells: Int = 16,
-              nProbe: Int = 4, iters: Int = 4): DataFrame =
-    ivfTopKFrom(emb, idCol, vecCol, queryIds, k,
-      kmeansCentroids(emb, idCol, vecCol, nCells, iters), nProbe)
-
-  /** [[ivfTopK]] over a precomputed quantizer. */
-  def ivfTopKFrom(emb: DataFrame, idCol: String, vecCol: String,
-                  queryIds: Seq[Long], k: Int,
-                  centroids: Array[Array[Float]],
-                  nProbe: Int = 4): DataFrame = {
-    val corpus = emb.select(col(idCol).as("neighbor_id"),
-      col(vecCol).as("nv"), nearestCellCol(col(vecCol), centroids).as("cell"))
-    val q = emb.filter(col(idCol).isin(queryIds: _*))
-      .select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-        explode(probedCellsCol(col(vecCol), centroids, nProbe)).as("cell"))
-    val joined = corpus.join(broadcast(q), Seq("cell"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        round(cosineUdf(col("qv"), col("nv")), 6).as("cosine"))
-    rankTopK(joined, k)
-  }
+              queryIds: Seq[Long], k: Int,
+              centroids: Array[Array[Float]], nProbe: Int = 4): DataFrame =
+    probeTopK(emb, idCol, vecCol, queryIds, k, Some(Index(
+      ivfCell(_, centroids), ivfProbes(_, centroids, nProbe))))
 }

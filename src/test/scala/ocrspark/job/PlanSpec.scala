@@ -7,8 +7,9 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.catalyst.expressions.ScalaUDF
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
+import org.apache.spark.sql.execution.aggregate.HashAggregateExec
 import org.apache.spark.sql.execution.command.DataWritingCommandExec
-import org.apache.spark.sql.execution.exchange.{REBALANCE_PARTITIONS_BY_COL, ShuffleExchangeLike}
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, REBALANCE_PARTITIONS_BY_COL, ShuffleExchangeLike}
 import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.concurrent.Eventually._
@@ -182,14 +183,22 @@ class PlanSpec extends AnyFunSuite with SparkSuite {
     for ((name, df) <- Seq(
       "brute" -> Similarity.bruteForceTopK(emb, "vec_id", "embedding", qids, 5),
       "lsh" -> Similarity.lshTopK(emb, "vec_id", "embedding", qids, 5),
-      "ivf" -> Similarity.ivfTopK(emb, "vec_id", "embedding", qids, 5))) {
+      "ivf" -> Similarity.ivfTopK(emb, "vec_id", "embedding", qids, 5,
+        Similarity.kmeansCentroids(emb, "vec_id", "embedding", 16)))) {
       val plan = planOf(df)
       assert(!plan.contains("Window"), s"$name still ranks via a window\n$plan")
       // the udaf runs as ObjectHashAggregate/SortAggregate with a partial
       // (map-side) pass before the exchange
       val aggs = plan.linesIterator.count(l =>
         l.contains("ObjectHashAggregate") || l.contains("SortAggregate"))
-      assert(aggs >= 2, s"$name: expected partial+final top-k aggregate\n$plan")
+      assert(aggs == 2, s"$name: expected partial+final top-k aggregate\n$plan")
+      // and nothing else aggregates: no per-pair dedup between the
+      // probe join and the rank step
+      val nodes = df.queryExecution.executedPlan.collect { case p => p }
+      assert(!nodes.exists(_.isInstanceOf[HashAggregateExec]), s"$name: extra aggregate\n$plan")
+      // the query side is the one broadcast
+      assert(nodes.count(_.isInstanceOf[BroadcastExchangeExec]) == 1,
+        s"$name: expected one broadcast of the queries\n$plan")
     }
   }
 
@@ -214,12 +223,17 @@ class PlanSpec extends AnyFunSuite with SparkSuite {
     assert(joins <= 3, s"expected ≤2 rescore + 1 keeper-star joins, got $joins\n$mh")
     assert(mh.linesIterator.exists(_.contains("BroadcastHashJoin")),
       s"keeper-star join must broadcast the keeper set\n$mh")
-    val emb = planOf(ocrspark.ops.Dedup.embeddingNearDups(
-      spark.read.parquet(s"$sfDir/embeddings.parquet"), "vec_id", "embedding"))
+    val embDf = ocrspark.ops.Dedup.embeddingNearDups(
+      spark.read.parquet(s"$sfDir/embeddings.parquet"), "vec_id", "embedding")
+    val emb = planOf(embDf)
     assert(!emb.contains("SortMergeJoin"), emb)
     val embJoins = emb.linesIterator.count(_.contains("Join"))
     val embBcast = emb.linesIterator.count(_.contains("BroadcastHashJoin"))
     assert(embJoins == 1 && embBcast == 1,
       s"embedding near-dup may only have the broadcast keeper-star join\n$emb")
+    // a vector has one bucket, so no pair needs a dedup aggregate
+    assert(embDf.queryExecution.executedPlan
+      .collect { case a: HashAggregateExec => a }.isEmpty,
+      s"embedding near-dup dedups pairs\n$emb")
   }
 }

@@ -163,18 +163,41 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
     val queries = (0L until 20L).toSeq
     val exact = Similarity.bruteForceTopK(df, "vec_id", "embedding", queries, 10)
       .select($"query_id", $"neighbor_id").as[(Long, Long)].collect().toSet
+    val centroids = Similarity.kmeansCentroids(df, "vec_id", "embedding", 32)
     val approx = Similarity.ivfTopK(df, "vec_id", "embedding", queries, 10,
-      nCells = 32, nProbe = 4)
+      centroids, nProbe = 4)
       .select($"query_id", $"neighbor_id").as[(Long, Long)].collect().toSet
     val recall = exact.count(approx.contains).toDouble / exact.size
     // k-means cells track the planted clusters, so IVF should beat the
     // hash-bucket LSH floor comfortably
     assert(recall >= 0.8, s"recall=$recall")
     // ranked, self-excluding contract (same as the other top-k ops)
-    val r = Similarity.ivfTopK(df, "vec_id", "embedding", Seq(0L), 5)
+    val r = Similarity.ivfTopK(df, "vec_id", "embedding", Seq(0L), 5,
+        Similarity.kmeansCentroids(df, "vec_id", "embedding", 16))
       .as[(Long, Long, Double, Int)].collect()
     assert(r.map(_._4).sorted.toSeq == (1 to 5))
     assert(r.forall(x => x._2 != x._1))
+  }
+
+  test("top-k refuses more query ids than it broadcasts, before any job runs") {
+    // the query side is broadcast whole to every task: one id over the
+    // cap throws while the DataFrame is built, for every top-k path
+    val ids = (0L to Similarity.MaxQueryIds.toLong).toSeq
+    val centroids = Array(Array.fill(4)(0f))
+    val vecs = emb // cached outside the job group
+    val sc = spark.sparkContext
+    sc.setJobGroup("topk-guard", "topk-guard")
+    try {
+      for ((name, topK) <- Seq[(String, () => Any)](
+        "brute" -> (() => Similarity.bruteForceTopK(vecs, "vec_id", "embedding", ids, 5)),
+        "lsh" -> (() => Similarity.lshTopK(vecs, "vec_id", "embedding", ids, 5)),
+        "ivf" -> (() => Similarity.ivfTopK(vecs, "vec_id", "embedding", ids, 5,
+          centroids)))) {
+        val e = intercept[IllegalArgumentException](topK())
+        assert(e.getMessage.contains(s"${Similarity.MaxQueryIds}"), s"$name: ${e.getMessage}")
+      }
+    } finally sc.clearJobGroup()
+    assert(sc.statusTracker.getJobIdsForGroup("topk-guard").isEmpty)
   }
 
   test("embedding near-dups: planted perturbed copies are found") {
